@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .build import IndexBuilder, IndexConfig, assign_doc_ids
+from .query import group_code_doc
 
 MULTIFIELD_MANIFEST = "multifield.json"
 
@@ -525,16 +526,12 @@ class MultiMatchEngine:
             return empty
         doc = np.concatenate(rows_doc)
         s = np.concatenate(rows_s)
-        # per-(term, doc) dis_max across fields: composite int64 keys
-        # (term code is tiny, doc ids bounded by the shared id space)
-        dmax = int(doc.max()) + 1
-        key = codes * dmax + doc
-        ukey, inv = np.unique(key, return_inverse=True)
+        # per-(term, doc) dis_max across fields
+        _kcode, kdoc, inv = group_code_doc(codes, doc)
         tot = np.bincount(inv, weights=s)
-        best = np.full(ukey.size, -np.inf)
+        best = np.full(kdoc.size, -np.inf)
         np.maximum.at(best, inv, s)
         ts = best + float(tie_breaker) * (tot - best)
-        kdoc = ukey % dmax
         docs_u, inv2 = np.unique(kdoc, return_inverse=True)
         scores = np.bincount(inv2, weights=ts)
         nt = np.bincount(inv2)
@@ -701,18 +698,19 @@ class MultiMatchEngine:
             ):
                 return None
             try:
-                # ONE batched point read per field (the interactive-
-                # latency path), codes derived from the returned term
-                # array — the _turbo_scored_rows recipe
-                term_a, d, tf, dl = eng._postings_point_read(uniq)
-                ok = dl > 0
-                term_a, d, tf = term_a[ok], d[ok], tf[ok]
-                codes_map = {t: i for i, t in enumerate(uniq)}
-                code_parts.append(np.fromiter(
-                    (codes_map[t] for t in term_a), dtype=np.int64,
-                    count=term_a.size,
+                # ONE batched point read per field through the hot-term
+                # cache, codes repeated over the per-term slices — the
+                # _turbo_scored_rows recipe
+                slices = eng._term_slices(uniq)
+                code_parts.append(np.repeat(
+                    np.arange(len(uniq), dtype=np.int64),
+                    [sl.sdoc.size for sl in slices],
                 ))
-                doc_parts.append(d)
+                doc_parts.append(np.concatenate([sl.sdoc for sl in slices]))
+                tf = np.concatenate([
+                    sl.tf if sl.pos is None else sl.tf[sl.pos]
+                    for sl in slices
+                ])
                 wtf_parts.append(tf.astype(np.float64) * float(boost))
                 field_lens.append((float(boost), eng._turbo_doc_lens()))
             except Exception:
@@ -723,12 +721,8 @@ class MultiMatchEngine:
         codes = np.concatenate(code_parts)
         doc = np.concatenate(doc_parts)
         wtf = np.concatenate(wtf_parts)
-        dmax = int(doc.max()) + 1
-        key = codes * dmax + doc
-        ukey, inv = np.unique(key, return_inverse=True)
+        kcode, kdoc, inv = group_code_doc(codes, doc)
         tfc = np.bincount(inv, weights=wtf)
-        kcode = ukey // dmax
-        kdoc = ukey % dmax
         docs_u, inv2 = np.unique(kdoc, return_inverse=True)
         # combined norm per candidate doc: every field's length counts
         dlc = np.zeros(docs_u.size, dtype=np.float64)

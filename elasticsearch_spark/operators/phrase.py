@@ -179,7 +179,14 @@ def unordered_starts(slot_pos, slop: int):
     repeats a term (both slots draw from one position list) —
     :func:`_match_with_required`; for all-distinct terms any two slots'
     lists are disjoint (one token per position) and the matching
-    trivially succeeds."""
+    trivially succeeds.
+
+    Deviation from Lucene: ``NearSpansUnordered`` lets sub-spans
+    overlap, so a repeated clause (``["a", "a"]``) can match ONE
+    occurrence of ``a`` twice; here each clause needs its own position,
+    so ``["a", "a"]`` requires two occurrences of ``a`` within the
+    window.  Queries whose clauses are all distinct terms are
+    unaffected (one token per position)."""
     import numpy as np
 
     arrays = [np.asarray(a, dtype=np.int64) for a in slot_pos]

@@ -41,7 +41,65 @@ from ..functions.tokenizer import (
 from ..functions.udfs import term_bucket
 from ..oracle.engine import to_rpn
 
+# bytes of one charged row of the turbo hot-term cache
+# (QueryEngine.TURBO_CACHE_MAX_POSTINGS), and the Python-object
+# overhead charged per entry (slots object, impact dict, array headers,
+# key: measured 0.9-1.0 KB) so that entries with few or no rows — e.g.
+# unindexed boolean terms — still count against the ceiling
+_CACHE_ROW_BYTES = 24
+_CACHE_ENTRY_BYTES = 1024
 
+
+class TermSlice:
+    """One term's entry in the turbo hot-term cache: the raw postings
+    rows ``(doc, tf, dl)`` in read order; ``sdoc`` = the doc_len > 0
+    rows (the scoring rows; ``pos`` is their mask, None when every row
+    qualifies and ``sdoc`` IS ``doc``); ``impact`` = method -> per-row
+    BM25/TF-IDF impact over the ``sdoc`` rows, computed once per index
+    generation.  ``rows`` is what the entry is charged against the
+    cache ceiling: its array bytes plus a fixed per-entry overhead, in
+    24-byte rows."""
+
+    __slots__ = ("doc", "tf", "dl", "pos", "sdoc", "impact", "rows")
+
+    def __init__(self, doc, tf, dl):
+        self.doc, self.tf, self.dl = doc, tf, dl
+        pos = dl > 0
+        self.pos = None if pos.all() else pos
+        self.sdoc = doc if self.pos is None else doc[pos]
+        self.impact = {}
+        self.rows = self._charge()
+
+    def _charge(self) -> int:
+        held = [self.doc, self.tf, self.dl, *self.impact.values()]
+        if self.pos is not None:
+            held += [self.pos, self.sdoc]
+        nbytes = _CACHE_ENTRY_BYTES + sum(a.nbytes for a in held)
+        return -(-nbytes // _CACHE_ROW_BYTES)
+
+    def add_impact(self, method: str, impact) -> int:
+        """Store ``method``'s impacts; returns the added charge."""
+        self.impact[method] = impact
+        old, self.rows = self.rows, self._charge()
+        return self.rows - old
+
+
+def group_code_doc(codes, doc):
+    """Group rows by ``(code, doc)`` without packing both into one
+    scalar key (``codes * dmax + doc`` wraps int64 for sparse or huge
+    doc ids): one stable lexsort, groups in ascending (code, doc)
+    order.  Returns ``(g_code, g_doc, inv)`` with ``inv`` the group of
+    each input row, so ``np.bincount(inv, weights=…)`` sums each
+    group's rows in input order."""
+    import numpy as np
+
+    order = np.lexsort((doc, codes))
+    c_s, d_s = codes[order], doc[order]
+    new = np.ones(order.size, dtype=bool)
+    new[1:] = (c_s[1:] != c_s[:-1]) | (d_s[1:] != d_s[:-1])
+    inv = np.empty(order.size, dtype=np.int64)
+    inv[order] = np.cumsum(new) - 1
+    return c_s[new], d_s[new], inv
 
 
 class QueryEngine:
@@ -101,12 +159,12 @@ class QueryEngine:
         # unindexed term never re-queries the dictionary
         self._idf_cache: Dict[str, float] = {}
         self._df_cache: Dict[str, int] = {}
-        # hot-term postings cache for the turbo tier (see
-        # _postings_point_read) — cleared with every other cache on
-        # manifest-mtime change
+        # hot-term postings cache for the turbo tier: term -> TermSlice
+        # (rows + derived impacts, see _term_slices) — recreated with
+        # every other cache on manifest-mtime change
         from collections import OrderedDict
 
-        self._term_postings_cache: "OrderedDict[str, tuple]" = OrderedDict()
+        self._term_postings_cache: "OrderedDict[str, TermSlice]" = OrderedDict()
         self._term_cache_rows = 0
         self._universe_cache = None  # live doc-id array (boolean NOT)
         self._doc_len_cache = None   # live (doc_id, doc_len) arrays
@@ -188,143 +246,147 @@ class QueryEngine:
 
     # --------------------------------------------------- turbo fast path
     # LRU budget for the hot-term postings cache, in cached posting rows
-    # (~28 B/row driver RAM; 5M ≈ 140 MB — the reference holds its WHOLE
-    # postings dict in RAM, 263-389 MB at 50k docs)
+    # of 24 B: doc_id int64 + tf/doc_len int32 + one float64 impact.  A
+    # term entry is charged its array bytes plus a fixed per-entry
+    # overhead in that unit (raw-only rows cost 2/3 row, a second
+    # method's impacts 1/3 more), so 5M ≈ 120 MB of driver RAM all
+    # told.  Measured on a 1,200-doc index (~85 postings per entry):
+    # 33 B per cached posting with one method's impacts, 40 B with both,
+    # object overhead included — the reference holds its WHOLE postings
+    # dict in RAM, 263-389 MB at 50k docs
     TURBO_CACHE_MAX_POSTINGS = 5_000_000
 
-    def _postings_point_read(self, terms: Sequence[str]):
-        """Per-term pruned postings as numpy arrays (term, doc_id, tf,
-        doc_len), tombstone-filtered — served from an in-RAM LRU cache
-        of hot terms; misses fall through to :meth:`_postings_point_read_raw`
-        (driver-side pyarrow pruned read).  The cache is the turbo-tier
-        analogue of the reference's fully-in-RAM postings dict
-        (``selfindex_q_daat.py``): profiling shows the pyarrow point
-        read IS the interactive latency (~10 of ~10.5 ms p50), so
-        repeat-term queries drop to numpy-only sub-ms.  Identical
-        results by construction (cached arrays are the raw read's
-        arrays, keyed per term) and invalidated with every other engine
-        cache on manifest-mtime change (_refresh_if_stale -> _load)."""
-        import numpy as np
-
+    def _term_slices(self, terms: Sequence[str],
+                     method: Optional[str] = None) -> List["TermSlice"]:
+        """Per-term postings slices for ``terms`` (in order), with
+        ``method``'s impacts filled in — served from an in-RAM LRU
+        cache of hot terms; misses fall through to
+        :meth:`_postings_point_read_raw` (driver-side pyarrow pruned
+        read).  The cache is the turbo-tier analogue of the reference's
+        fully-in-RAM postings dict (``selfindex_q_daat.py``): the
+        pyarrow point read IS the interactive latency, so repeat-term
+        queries drop to numpy-only sub-ms.  Identical results by
+        construction (slices are the raw read's rows, keyed per term)
+        and invalidated with every other engine cache on manifest-mtime
+        change (_refresh_if_stale -> _load)."""
         cache = self._term_postings_cache
-        # mark this call's cache hits most-recently-used BEFORE any
-        # eviction below: under a full cache the LRU pop could otherwise
-        # evict a term this very call is about to read (KeyError from
-        # unguarded callers like explain(); turbo callers would fall
-        # back to the distributed plan — perf loss either way)
-        for t in terms:
-            if t in cache:
-                cache.move_to_end(t)
         missing = sorted({t for t in terms if t not in cache})
         if missing:
-            term_a, doc, tf, dl = self._postings_point_read_raw(missing)
-            order = np.argsort(term_a, kind="stable")
-            term_s = term_a[order]
-            doc_s, tf_s, dl_s = doc[order], tf[order], dl[order]
-            found: dict = {}
-            if term_s.size:
-                change = np.nonzero(term_s[1:] != term_s[:-1])[0] + 1
-                starts = np.concatenate(([0], change))
-                ends = np.concatenate((change, [term_s.size]))
-                for s, e in zip(starts, ends):
-                    found[term_s[s]] = (doc_s[s:e], tf_s[s:e], dl_s[s:e])
-            empty = np.empty(0, dtype=np.int64)
-            for t in missing:
-                entry = found.get(t, (empty, empty, empty))
-                cache[t] = entry
-                self._term_cache_rows += len(entry[0])
-            while (
-                self._term_cache_rows > self.TURBO_CACHE_MAX_POSTINGS
-                and len(cache) > len(set(terms))
-            ):
-                _t, (d_old, _tf, _dl) = cache.popitem(last=False)
-                self._term_cache_rows -= len(d_old)
-        parts_t, parts_d, parts_tf, parts_dl = [], [], [], []
+            for t, cols in self._postings_point_read_raw(missing).items():
+                sl = cache[t] = TermSlice(*cols)
+                self._term_cache_rows += sl.rows
+        out = []
         for t in terms:
             cache.move_to_end(t)
-            d, tf_a, dl_a = cache[t]
-            parts_t.append(np.full(len(d), t, dtype=object))
-            parts_d.append(d)
-            parts_tf.append(tf_a)
-            parts_dl.append(dl_a)
-        if not parts_t:
-            empty = np.empty(0, dtype=np.int64)
-            return np.empty(0, dtype=object), empty, empty, empty
-        return (
-            np.concatenate(parts_t),
-            np.concatenate(parts_d),
-            np.concatenate(parts_tf),
-            np.concatenate(parts_dl),
-        )
+            sl = cache[t]
+            if method is not None and method not in sl.impact:
+                self._term_cache_rows += sl.add_impact(
+                    method, self._impact(sl, method)
+                )
+            out.append(sl)
+        # every term of this call is most-recently-used by now, so the
+        # LRU pop never evicts one while it is being read
+        while (
+            self._term_cache_rows > self.TURBO_CACHE_MAX_POSTINGS
+            and len(cache) > len(set(terms))
+        ):
+            _t, old = cache.popitem(last=False)
+            self._term_cache_rows -= old.rows
+        return out
+
+    def _impact(self, sl: "TermSlice", method: str):
+        """Per-row BM25/TF-IDF impact (idf-free) over a slice's
+        doc_len > 0 rows — the ONE copy of the turbo per-posting
+        formula (the plan-side twin is :meth:`_scored_postings_rows`)."""
+        import numpy as np
+
+        tf_f = sl.tf.astype(np.float64)
+        dl_f = sl.dl.astype(np.float64)
+        if sl.pos is not None:
+            tf_f, dl_f = tf_f[sl.pos], dl_f[sl.pos]
+        if method == "bm25":
+            k1, b = self.k1, self.b
+            return (tf_f * (k1 + 1)) / (
+                tf_f + k1 * (1 - b + b * (dl_f / self.avg_doc_len))
+            )
+        if method == "tfidf":
+            return tf_f / dl_f
+        raise ValueError(f"unknown scoring method {method!r}")
 
     def _postings_point_read_raw(self, terms: Sequence[str]):
         """Driver-side pyarrow read of the pruned postings slice across
         the LIVE sources (base + delta segments): hive partition pruning
         on ``bucket=`` plus a ``term IN`` predicate against row-group
         stats (postings are (term, doc_id)-sorted per bucket, so the
-        min/max stats prune tightly).  Returns numpy arrays
-        (term, doc_id, tf, doc_len), tombstone-filtered.
+        min/max stats prune tightly).  Returns ``{term: (doc_id int64,
+        tf int32, doc_len int32)}`` for every requested term (empty
+        arrays when absent), tombstone-filtered, rows of a term in read
+        order.
 
-        Streams pyarrow record batches instead of materializing the
-        full Arrow slice table: each batch is converted to numpy and
-        tombstone-filtered immediately, so peak driver memory near the
-        turbo cutover is the numpy output plus ONE record batch, not
-        the whole Arrow table AND its numpy copy."""
+        Streams pyarrow record batches: each batch maps its term column
+        to codes with ``pc.index_in`` and is tombstone-filtered at once,
+        so peak driver memory is the numpy output plus ONE record
+        batch; one stable argsort of the codes then splits the rows
+        into per-term slices."""
         import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.dataset as pads
 
         from .reader import delta_segments
 
+        terms = list(terms)
         buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
         paths = [os.path.join(self.index_dir, "postings")] + [
             os.path.join(self.index_dir, "segments", s, "postings")
             for s in delta_segments(self._manifest)
         ]
         cols = ["term", "doc_id", "tf", "doc_len"]
+        types = [np.int64, np.int64, np.int32, np.int32]
+        value_set = pa.array(terms, type=pa.string())
         tomb = (
             np.asarray(self._tombstones, dtype=np.int64)
             if self._tombstones
             else None
         )
-        parts_t, parts_d, parts_tf, parts_dl = [], [], [], []
+        parts: List[list] = [[], [], [], []]
         for p in paths:
             ds = pads.dataset(p, partitioning="hive")
-            expr = pads.field("bucket").isin(buckets) & pads.field("term").isin(
-                list(terms)
-            )
+            expr = pads.field("bucket").isin(buckets) & pads.field("term").isin(terms)
             for batch in ds.to_batches(columns=cols, filter=expr):
                 if batch.num_rows == 0:
                     continue
-                t_a = np.asarray(batch.column(0).to_pylist(), dtype=object)
-                d_a = batch.column(1).to_numpy(zero_copy_only=False)
-                d_a = d_a.astype(np.int64)
-                tf_a = batch.column(2).to_numpy(zero_copy_only=False)
-                tf_a = tf_a.astype(np.int64)
-                dl_a = batch.column(3).to_numpy(zero_copy_only=False)
-                dl_a = dl_a.astype(np.int64)
+                arrs = [pc.index_in(batch.column(0), value_set=value_set)] + [
+                    batch.column(i) for i in (1, 2, 3)
+                ]
+                arrs = [
+                    a.to_numpy(zero_copy_only=False).astype(ty)
+                    for a, ty in zip(arrs, types)
+                ]
                 if tomb is not None:
-                    keep = ~np.isin(d_a, tomb)
-                    t_a, d_a = t_a[keep], d_a[keep]
-                    tf_a, dl_a = tf_a[keep], dl_a[keep]
-                parts_t.append(t_a)
-                parts_d.append(d_a)
-                parts_tf.append(tf_a)
-                parts_dl.append(dl_a)
-        if not parts_t:
-            empty = np.empty(0, dtype=np.int64)
-            return np.empty(0, dtype=object), empty, empty, empty
-        return (
-            np.concatenate(parts_t),
-            np.concatenate(parts_d),
-            np.concatenate(parts_tf),
-            np.concatenate(parts_dl),
+                    keep = ~np.isin(arrs[1], tomb)
+                    arrs = [a[keep] for a in arrs]
+                for part, a in zip(parts, arrs):
+                    part.append(a)
+        code, doc, tf, dl = (
+            np.concatenate(part) if part else np.empty(0, dtype=ty)
+            for part, ty in zip(parts, types)
         )
+        order = np.argsort(code, kind="stable")
+        doc, tf, dl = doc[order], tf[order], dl[order]
+        counts = np.bincount(code, minlength=len(terms))
+        ends = np.cumsum(counts)
+        return {
+            t: (doc[e - n:e], tf[e - n:e], dl[e - n:e])
+            for t, n, e in zip(terms, counts.tolist(), ends.tolist())
+        }
 
     def _turbo_scored_rows(self, terms: List[str], method: str,
                            idf_map: Optional[Dict[str, float]] = None):
-        """The SHARED turbo scoring kernel — single source of the
-        BM25/TF-IDF numpy math for every driver-side tier (ranked,
-        multi_match per-field maps, match operator/msm, cross_fields).
+        """The SHARED turbo scoring kernel — every driver-side ranked
+        tier (ranked, multi_match per-field maps, match operator/msm,
+        cross_fields) scores from here, over the cached per-term
+        impacts of :meth:`_term_slices`.
 
         ``terms`` are ANALYZED query terms (duplicates = per-occurrence
         multiplicity, like the reference's TAAT loop); ``idf_map``
@@ -361,32 +423,42 @@ class QueryEngine:
         if sum(self._df_cache.get(t, 0) for t in uniq) > self.TURBO_MAX_POSTINGS:
             return None
         try:
-            term_a, doc, tf, dl = self._postings_point_read(uniq)
+            slices = self._term_slices(uniq, method)
         except Exception:
             return None
-        ok = dl > 0
-        term_a, doc, tf, dl = term_a[ok], doc[ok], tf[ok], dl[ok]
-        if doc.size == 0:
+        lens = [sl.sdoc.size for sl in slices]
+        if not sum(lens):
             return empty
         counts = Counter(live)
-        codes_map = {t: i for i, t in enumerate(uniq)}
         weights = np.array(
             [live_idf[t] * float(counts[t]) for t in uniq], dtype=np.float64
         )
-        codes = np.fromiter(
-            (codes_map[t] for t in term_a), dtype=np.int64, count=term_a.size
-        )
-        tf_f = tf.astype(np.float64)
-        if method == "bm25":
-            k1, b = self.k1, self.b
-            impact = (tf_f * (k1 + 1)) / (
-                tf_f + k1 * (1 - b + b * (dl.astype(np.float64) / self.avg_doc_len))
-            )
-        elif method == "tfidf":
-            impact = tf_f / dl.astype(np.float64)
-        else:
-            raise ValueError(f"unknown scoring method {method!r}")
+        codes = np.repeat(np.arange(len(uniq), dtype=np.int64), lens)
+        doc = np.concatenate([sl.sdoc for sl in slices])
+        impact = np.concatenate([sl.impact[method] for sl in slices])
         return uniq, codes, doc, weights[codes] * impact
+
+    @staticmethod
+    def _turbo_accum(counts, idf_map: Dict[str, float],
+                     slices: Dict[str, "TermSlice"], method: str):
+        """Per-doc ``(docs_u, scores)`` of one weighted term bag
+        (``counts``: term -> multiplicity) over cached slices: Σ idf ×
+        multiplicity × impact, summed in ``counts`` order.  None when no
+        live term has postings (a dead clause)."""
+        import numpy as np
+
+        segs_d, segs_s = [], []
+        for t, mult in counts.items():
+            w = idf_map.get(t, 0.0)
+            sl = slices.get(t)
+            if w == 0.0 or sl is None or not sl.doc.size:
+                continue
+            segs_d.append(sl.sdoc)
+            segs_s.append((w * float(mult)) * sl.impact[method])
+        if not segs_d:
+            return None
+        du, inv = np.unique(np.concatenate(segs_d), return_inverse=True)
+        return du, np.bincount(inv, weights=np.concatenate(segs_s))
 
     def _turbo_score_map(self, query: str, method: str = "bm25",
                          terms: Optional[List[str]] = None,
@@ -1073,10 +1145,10 @@ class QueryEngine:
             ):
                 return None
             try:
-                _t, d, _tf, dl = self._postings_point_read(uniq_exp)
+                slices = self._term_slices(uniq_exp)
             except Exception:
                 return None
-            pdocs = np.unique(d[dl > 0])
+            pdocs = np.unique(np.concatenate([sl.sdoc for sl in slices]))
         all_doc = np.concatenate([doc, pdocs])
         if all_doc.size == 0:
             return empty
@@ -1144,7 +1216,7 @@ class QueryEngine:
         doc) pair — ``{query, doc_id, total, matched, terms: [{term,
         multiplicity, df, idf, tf, doc_len, contribution}]}``.  The
         total is EXACTLY the score :meth:`ranked` gives this doc (same
-        formula, float64; pytest-enforced).
+        per-row impact and weight, same summation order).
 
         Served driver-side from the live df sources + the hot-term
         postings cache (zero Spark jobs).  A head-term explain reads
@@ -1166,8 +1238,7 @@ class QueryEngine:
         idf_map = self.term_idf(terms)
         counts = Counter(terms)
         uniq = sorted(counts)
-        term_a, doc, tf, dl = self._postings_point_read(uniq)
-        for t in uniq:
+        for t, sl in zip(uniq, self._term_slices(uniq, method)):
             idf_v = float(idf_map.get(t, 0.0))
             detail = {
                 "term": t,
@@ -1178,26 +1249,19 @@ class QueryEngine:
                 "doc_len": None,
                 "contribution": 0.0,
             }
-            idx = np.nonzero((term_a == t) & (doc == doc_id))[0]
+            idx = np.nonzero(sl.doc == doc_id)[0]
             if idx.size:
-                tf_v = int(tf[idx[0]])
-                dl_v = int(dl[idx[0]])
-                detail["tf"], detail["doc_len"] = tf_v, dl_v
-                # reference semantics: idf==0 terms and empty docs
-                # contribute nothing (score_plan filters both)
-                if idf_v != 0.0 and dl_v > 0:
-                    if method == "bm25":
-                        k1, b = self.k1, self.b
-                        c = idf_v * (tf_v * (k1 + 1)) / (
-                            tf_v + k1 * (1 - b + b * (dl_v / self.avg_doc_len))
-                        )
-                    elif method == "tfidf":
-                        c = (tf_v / dl_v) * idf_v
-                    else:
-                        raise ValueError(f"unknown scoring method {method!r}")
-                    detail["contribution"] = c * counts[t]
-                    out["total"] += detail["contribution"]
-                    out["matched"] = True
+                detail["tf"] = int(sl.tf[idx[0]])
+                detail["doc_len"] = int(sl.dl[idx[0]])
+            # reference semantics: idf==0 terms and empty docs
+            # contribute nothing (score_plan filters both)
+            idx = np.nonzero(sl.sdoc == doc_id)[0]
+            if idf_v != 0.0 and idx.size:
+                detail["contribution"] = float(
+                    idf_v * float(counts[t]) * sl.impact[method][idx[0]]
+                )
+                out["total"] += detail["contribution"]
+                out["matched"] = True
             out["terms"].append(detail)
         return out
 
@@ -1665,7 +1729,12 @@ class QueryEngine:
         occurrence count then doc_id (span queries are match-shaped
         like :meth:`phrase`; n_occurrences counts distinct match START
         positions).  Small slices serve from the driver turbo kernel
-        (shared with phrase), the plan otherwise."""
+        (shared with phrase), the plan otherwise.
+
+        Unordered matching gives every clause a DISTINCT position
+        (:func:`~.phrase.unordered_starts`); Lucene's sub-spans may
+        overlap, so a repeated clause such as ``["a", "a"]`` matches a
+        single ``a`` in Lucene but needs two occurrences here."""
         self._refresh_if_stale()
         terms = [str(t) for t in terms]
         query_label = " ".join(terms)
@@ -1845,19 +1914,12 @@ class QueryEngine:
 
         empty = np.empty(0, dtype=np.int64)
         try:
-            # sorted-unique doc-id array per term (vectorized, no
-            # per-row Python): postings rows are unique per (term, doc)
-            term_arrays: Dict[str, np.ndarray] = {t: empty for t in terms}
-            if terms:
-                term_a, doc, _tf, _dl = self._postings_point_read(terms)
-                order = np.argsort(term_a, kind="stable")
-                term_s, doc_s = term_a[order], doc[order]
-                if term_s.size:
-                    change = np.nonzero(term_s[1:] != term_s[:-1])[0] + 1
-                    starts = np.concatenate(([0], change))
-                    ends = np.concatenate((change, [term_s.size]))
-                    for s, e in zip(starts, ends):
-                        term_arrays[term_s[s]] = np.sort(doc_s[s:e])
+            # sorted-unique doc-id array per term: postings rows are
+            # unique per (term, doc)
+            term_arrays = {
+                t: np.sort(sl.doc)
+                for t, sl in zip(terms, self._term_slices(terms))
+            }
             universe = empty
             if needs_universe:
                 universe = self._doc_universe()
@@ -1993,8 +2055,9 @@ class QueryEngine:
     def _turbo_batch(self, queries: Sequence[str], k: int,
                      method: str) -> Optional[Dict[str, list]]:
         """Driver-side batch scoring: ONE pyarrow pruned read over the
-        union of all queries' terms, per-term (doc, impact) arrays
-        computed once, then per-query weighted accumulation in numpy.
+        union of all queries' terms, per-term (doc, impact) slices from
+        the hot-term cache, then per-query weighted accumulation in
+        numpy (:meth:`_turbo_accum`).
         Declines (None) above the cutover on Σ df over all live terms."""
         if not self.turbo:
             return None
@@ -2011,45 +2074,14 @@ class QueryEngine:
         if sum(self._df_cache.get(t, 0) for t in live) > self.TURBO_MAX_POSTINGS:
             return None
         try:
-            term_a, doc, tf, dl = self._postings_point_read(live)
+            slices = dict(zip(live, self._term_slices(live, method)))
         except Exception:
             return None
-        ok = dl > 0
-        term_a, doc, tf, dl = term_a[ok], doc[ok], tf[ok], dl[ok]
-        tf_f = tf.astype(np.float64)
-        if method == "bm25":
-            k1, b = self.k1, self.b
-            impact = (tf_f * (k1 + 1)) / (
-                tf_f + k1 * (1 - b + b * (dl.astype(np.float64) / self.avg_doc_len))
-            )
-        else:
-            impact = tf_f / dl.astype(np.float64)
-        # per-term slices computed once, reused across queries
-        order = np.argsort(term_a, kind="stable")
-        term_s, doc_s, imp_s = term_a[order], doc[order], impact[order]
-        bounds: Dict[str, tuple] = {}
-        if term_s.size:
-            change = np.nonzero(term_s[1:] != term_s[:-1])[0] + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [term_s.size]))
-            for s, e in zip(starts, ends):
-                bounds[term_s[s]] = (s, e)
         for q in queries:
-            counts = per_query[q]
-            segs_d, segs_s = [], []
-            for t, mult in counts.items():
-                w = idf_map.get(t, 0.0)
-                if w == 0.0 or t not in bounds:
-                    continue
-                s, e = bounds[t]
-                segs_d.append(doc_s[s:e])
-                segs_s.append((w * float(mult)) * imp_s[s:e])
-            if not segs_d:
+            acc = self._turbo_accum(per_query[q], idf_map, slices, method)
+            if acc is None:
                 continue
-            d_all = np.concatenate(segs_d)
-            s_all = np.concatenate(segs_s)
-            docs_u, inv = np.unique(d_all, return_inverse=True)
-            scores = np.bincount(inv, weights=s_all)
+            docs_u, scores = acc
             top = np.lexsort((docs_u, -scores))[:k]
             out[q] = [
                 {"doc_id": int(docs_u[i]), "score": float(scores[i])} for i in top
@@ -2335,47 +2367,15 @@ class QueryEngine:
         if sum(self._df_cache.get(t, 0) for t in live) > self.TURBO_MAX_POSTINGS:
             return None
         try:
-            term_a, doc, tf, dl = self._postings_point_read(live)
+            slices = dict(zip(live, self._term_slices(live, method)))
         except Exception:
             return None
-        ok = dl > 0
-        term_a, doc, tf, dl = term_a[ok], doc[ok], tf[ok], dl[ok]
-        tf_f = tf.astype(np.float64)
-        if method == "bm25":
-            k1, b = self.k1, self.b
-            impact = (tf_f * (k1 + 1)) / (
-                tf_f + k1 * (1 - b + b * (dl.astype(np.float64) / self.avg_doc_len))
-            )
-        elif method == "tfidf":
-            impact = tf_f / dl.astype(np.float64)
-        else:
-            raise ValueError(f"unknown scoring method {method!r}")
-        order = np.argsort(term_a, kind="stable")
-        term_s, doc_s, imp_s = term_a[order], doc[order], impact[order]
-        bounds: Dict[str, tuple] = {}
-        if term_s.size:
-            change = np.nonzero(term_s[1:] != term_s[:-1])[0] + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [term_s.size]))
-            for s, e in zip(starts, ends):
-                bounds[term_s[s]] = (s, e)
         q_docs, q_scores = [], []
         for counts in per_query:
-            segs_d, segs_s = [], []
-            for t, mult in counts.items():
-                w = idf_map.get(t, 0.0)
-                if w == 0.0 or t not in bounds:
-                    continue
-                s, e = bounds[t]
-                segs_d.append(doc_s[s:e])
-                segs_s.append((w * float(mult)) * imp_s[s:e])
-            if not segs_d:
-                continue
-            d_all = np.concatenate(segs_d)
-            s_all = np.concatenate(segs_s)
-            du, inv = np.unique(d_all, return_inverse=True)
-            q_docs.append(du)
-            q_scores.append(np.bincount(inv, weights=s_all))
+            acc = self._turbo_accum(counts, idf_map, slices, method)
+            if acc is not None:
+                q_docs.append(acc[0])
+                q_scores.append(acc[1])
         if not q_docs:
             return {
                 "query": None,
@@ -2657,66 +2657,20 @@ class QueryEngine:
                 universe = self._doc_universe()
             except Exception:
                 return None
-        if read_terms:
-            try:
-                term_a, doc, tf, dl = self._postings_point_read(read_terms)
-            except Exception:
-                return None
-        else:
-            term_a = np.array([], dtype=object)
-            doc = np.array([], dtype=np.int64)
-            tf = dl = np.array([], dtype=np.int64)
-        # membership slices keep dl==0 rows (filter context); scoring
-        # drops them (reference semantics) via per-row impact of 0
-        tf_f = tf.astype(np.float64)
-        dl_f = dl.astype(np.float64)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            if method == "bm25":
-                k1, b = self.k1, self.b
-                impact = (tf_f * (k1 + 1)) / (
-                    tf_f + k1 * (1 - b + b * (dl_f / self.avg_doc_len))
-                )
-            elif method == "tfidf":
-                impact = tf_f / dl_f
-            else:
-                raise ValueError(f"unknown scoring method {method!r}")
-        impact = np.where(dl > 0, impact, 0.0)
-        order = np.argsort(term_a, kind="stable")
-        term_s, doc_s, imp_s = term_a[order], doc[order], impact[order]
-        dl_s = dl[order]
-        bounds: Dict[str, tuple] = {}
-        if term_s.size:
-            change = np.nonzero(term_s[1:] != term_s[:-1])[0] + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [term_s.size]))
-            for s, e in zip(starts, ends):
-                bounds[term_s[s]] = (s, e)
+        try:
+            slices = dict(zip(read_terms, self._term_slices(read_terms, method)))
+        except Exception:
+            return None
 
         def accum(terms):
             """(docs_u, scores) of one scoring clause; None = dead."""
-            segs_d, segs_s = [], []
-            for t, mult in Counter(terms).items():
-                w = idf_map.get(t, 0.0)
-                if w == 0.0 or t not in bounds:
-                    continue
-                s, e = bounds[t]
-                keep = dl_s[s:e] > 0
-                segs_d.append(doc_s[s:e][keep])
-                segs_s.append((w * float(mult)) * imp_s[s:e][keep])
-            if not segs_d:
-                return None
-            d_all = np.concatenate(segs_d)
-            du, inv = np.unique(d_all, return_inverse=True)
-            return du, np.bincount(inv, weights=np.concatenate(segs_s))
+            return self._turbo_accum(Counter(terms), idf_map, slices, method)
 
         def member(terms):
             """Sorted unique docs containing ANY live term (filter
-            context — no idf/doc_len gating)."""
-            segs = [
-                doc_s[bounds[t][0]:bounds[t][1]]
-                for t in set(terms)
-                if t in bounds
-            ]
+            context — no idf/doc_len gating: membership keeps the
+            doc_len == 0 rows scoring drops)."""
+            segs = [slices[t].doc for t in set(terms) if t in slices]
             if not segs:
                 return np.array([], dtype=np.int64)
             return np.unique(np.concatenate(segs))

@@ -371,7 +371,7 @@ class WandEngine:
         tf_blob, len_blob) for ``terms`` across the live sources — LRU-
         cached per term, because the pyarrow block point-read dominates
         turbo WAND latency exactly as the postings read dominates ranked
-        latency (QueryEngine._postings_point_read).  Cached rows ARE the
+        latency (QueryEngine._term_slices).  Cached rows ARE the
         raw read's rows, so results are identical by construction;
         invalidated with every other cache on manifest-mtime change."""
         import pyarrow.dataset as pads
@@ -382,7 +382,7 @@ class WandEngine:
         # MRU-mark this call's cache hits BEFORE the eviction loop below:
         # under a full cache the LRU pop could otherwise evict a term
         # this very call is about to read (same hazard as
-        # QueryEngine._postings_point_read)
+        # QueryEngine._term_slices)
         for t in terms:
             if t in cache:
                 cache.move_to_end(t)

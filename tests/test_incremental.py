@@ -298,12 +298,23 @@ def test_warm_turbo_caches_invalidate_on_update(spark, tmp_index_root):
 
     warm_q = QueryEngine(spark, d)
     warm_w = WandEngine(spark, d)
+
+    def derived(eng):
+        # served from the cached per-term impacts, which depend on
+        # avg_doc_len — an update changes it
+        return {
+            "batch": eng.batch_ranked([query, t2, t1], k=10),
+            "and": eng.match_search(query, k=10, operator="and"),
+            "tfidf": eng.ranked(query, k=10, method="tfidf"),
+        }
+
     before = {
         "ranked": warm_q.ranked(query, k=10),
         "not": warm_q.boolean_topk(not_query, k=10),  # warms _universe_cache
         "wand": warm_w.topk(query, k=10),
         # warms _doc_len_cache (the combined_fields norms array)
         "lens": warm_q._turbo_doc_lens()[0].tolist(),
+        **derived(warm_q),
     }
     assert warm_q._term_postings_cache and warm_w._block_row_cache
     assert warm_q._doc_len_cache is not None
@@ -322,8 +333,13 @@ def test_warm_turbo_caches_invalidate_on_update(spark, tmp_index_root):
         "not": warm_q.boolean_topk(not_query, k=10),
         "wand": warm_w.topk(query, k=10),
         "lens": warm_q._turbo_doc_lens()[0].tolist(),
+        **derived(warm_q),
     }
     assert after["lens"] == fresh_q._turbo_doc_lens()[0].tolist()
+    fresh_derived = derived(fresh_q)
+    for key in ("batch", "and", "tfidf"):
+        assert after[key] == fresh_derived[key], key
+        assert after[key] != before[key], key
     assert after["ranked"] == fresh_q.ranked(query, k=10)
     assert after["not"] == fresh_q.boolean_topk(not_query, k=10)
     assert after["wand"] == fresh_w.topk(query, k=10)

@@ -632,3 +632,46 @@ def test_multi_match_operator_msm_best_most(mf_engine, oracles):
         _assert_same(got, want, (q, mt, op, msm))
         hit_any = hit_any or bool(want["results"])
     assert hit_any, "operator/msm multi_match suite never hit"
+
+
+def test_group_code_doc_huge_doc_ids():
+    """The (term code, doc) grouping behind cross_fields' per-term
+    dis_max and combined_fields' merged tf must hold for doc ids near
+    2^62, where a packed ``code * dmax + doc`` key wraps int64: groups
+    in ascending (code, doc) order, each row mapped to its own group,
+    and per-group sums equal to a pure-Python groupby summing in input
+    order."""
+    import itertools
+    import random
+
+    import numpy as np
+
+    from elasticsearch_spark.operators.query import group_code_doc
+
+    rng = random.Random(7)
+    offsets = [0, 1, 5, 2**40, 2**61 + 3]
+    rows = [
+        (rng.randrange(5), 2**62 + rng.choice(offsets), rng.random())
+        for _ in range(400)
+    ]
+    codes = np.array([r[0] for r in rows], dtype=np.int64)
+    doc = np.array([r[1] for r in rows], dtype=np.int64)
+    w = np.array([r[2] for r in rows], dtype=np.float64)
+
+    g_code, g_doc, inv = group_code_doc(codes, doc)
+    keyed = sorted(rows, key=lambda r: (r[0], r[1]))  # stable
+    want = [
+        (key, sum((r[2] for r in grp), 0.0))
+        for key, grp in itertools.groupby(keyed, key=lambda r: (r[0], r[1]))
+    ]
+    assert list(zip(g_code.tolist(), g_doc.tolist())) == [k for k, _ in want]
+    assert all(
+        (g_code[inv[i]], g_doc[inv[i]]) == (r[0], r[1])
+        for i, r in enumerate(rows)
+    )
+    assert np.bincount(inv, weights=w).tolist() == [s for _, s in want]
+    # the packed key this replaces does wrap at these ids
+    dmax = int(doc.max()) + 1
+    with np.errstate(over="ignore"):
+        ukey = np.unique(codes * dmax + doc)
+    assert (ukey % dmax).tolist() != g_doc.tolist()

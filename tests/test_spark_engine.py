@@ -310,9 +310,9 @@ def test_turbo_lru_never_evicts_current_call_terms(spark, index_dir):
     """Under a full cache, the LRU eviction loop must never pop a term
     the CURRENT call is reading (previously: cached hits kept their old
     LRU slot until after eviction, so a full cache could evict them
-    mid-call -> KeyError from unguarded callers like explain())."""
-    import numpy as np
-
+    mid-call -> KeyError from unguarded callers like explain()).  The
+    slices a call gets back are the raw read's rows, with the impacts
+    of the requested method over their doc_len > 0 rows."""
     eng = QueryEngine(spark, index_dir, turbo=True)
     dict_terms = [
         r["term"]
@@ -323,26 +323,81 @@ def test_turbo_lru_never_evicts_current_call_terms(spark, index_dir):
     ]
     assert len(dict_terms) >= 6
     # force perpetual over-budget so the eviction loop always runs
-    old = eng.TURBO_CACHE_MAX_POSTINGS
     eng.TURBO_CACHE_MAX_POSTINGS = 0
+    # warm a, b; then read (a, c): a is a cache hit that eviction
+    # must not pop while c is being inserted
+    a, b, c = dict_terms[:3]
+    eng._term_slices([a])
+    eng._term_slices([b], "bm25")
+    got = eng._term_slices([a, c], "bm25")
+    # correctness of the returned slices (not just no-crash)
+    raw = eng._postings_point_read_raw([a, c])
+    for t, sl in zip([a, c], got):
+        doc, tf, dl = raw[t]
+        assert doc.size > 0, t
+        assert sl.doc.tolist() == doc.tolist(), t
+        assert sl.tf.tolist() == tf.tolist(), t
+        assert sl.dl.tolist() == dl.tolist(), t
+        assert sl.sdoc.tolist() == doc[dl > 0].tolist(), t
+        assert sl.impact["bm25"].size == sl.sdoc.size, t
+    # repeated overlapping reads under zero budget never KeyError, and
+    # only the current call's terms stay cached
+    for pair in [(a, b), (b, c), (c, a), (a, b)]:
+        eng._term_slices(list(pair), "tfidf")
+        assert set(eng._term_postings_cache) == set(pair)
+    # an unindexed term's empty entry still counts against the ceiling
+    assert eng._term_slices(["zzznotaterm"])[0].rows > 0
+    # the charge counter is exactly what the cached entries hold
+    assert eng._term_cache_rows == sum(
+        sl.rows for sl in eng._term_postings_cache.values()
+    )
+
+
+def test_turbo_zero_budget_results_identical(spark, index_dir):
+    """Eviction churn must not serve stale or mismatched derived data:
+    a WARM engine switched to a zero cache budget (every call evicts
+    everything but its own terms, so impacts are recomputed over fresh
+    slices) answers every turbo entry point exactly (==, not within
+    1e-9) like a default-budget engine — and stays on the turbo tier
+    (zero Spark jobs)."""
+    ranked_q = [q for q in RANKED_QUERIES if q.strip()]
+
+    def run(eng):
+        out = {}
+        for q in ranked_q:
+            for m in ("bm25", "tfidf"):
+                out[("ranked", q, m)] = eng.ranked(q, k=10, method=m)
+            for op, msm in (("and", None), ("or", None), ("or", 2)):
+                out[("match", q, op, msm)] = eng.match_search(
+                    q, k=10, operator=op, minimum_should_match=msm
+                )
+            out[("mbp", q)] = eng.match_bool_prefix(q, k=10)
+            for h in out[("ranked", q, "bm25")]["results"][:2]:
+                out[("explain", q, h["doc_id"])] = eng.explain(q, h["doc_id"])
+        for q in BOOLEAN_QUERIES:
+            out[("boolean", q)] = eng.boolean_topk(q, k=10)
+        out["batch"] = eng.batch_ranked(ranked_q, k=10)
+        out["dis_max"] = eng.dis_max(ranked_q[:3], k=10, tie_breaker=0.3)
+        out["bool"] = eng.bool_search(
+            must=[ranked_q[1]], should=ranked_q[2:4],
+            must_not=[ranked_q[4]], k=10,
+        )
+        return out
+
+    want = run(QueryEngine(spark, index_dir, turbo=True))
+    eng = QueryEngine(spark, index_dir, turbo=True)
+    run(eng)  # warm at the default budget
+    assert eng._term_cache_rows > 0
+    eng.TURBO_CACHE_MAX_POSTINGS = 0
+    sc = spark.sparkContext
+    group = "turbo_zero_budget"
+    sc.setLocalProperty("spark.jobGroup.id", group)
     try:
-        # warm a, b; then read (a, c): a is a cache hit that eviction
-        # must not pop while c is being inserted
-        a, b, c = dict_terms[:3]
-        eng._postings_point_read([a])
-        eng._postings_point_read([b])
-        t1, d1, _, _ = eng._postings_point_read([a, c])
-        # correctness of the returned arrays (not just no-crash)
-        t2, d2, _, _ = eng._postings_point_read_raw([a, c])
-        o1 = np.lexsort((d1, t1.astype(str)))
-        o2 = np.lexsort((d2, t2.astype(str)))
-        assert list(t1[o1].astype(str)) == list(t2[o2].astype(str))
-        assert list(d1[o1]) == list(d2[o2])
-        # repeated overlapping reads under zero budget never KeyError
-        for pair in [(a, b), (b, c), (c, a), (a, b)]:
-            eng._postings_point_read(list(pair))
+        got = run(eng)
     finally:
-        eng.TURBO_CACHE_MAX_POSTINGS = old
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == want
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def _vm_rss_mb() -> float:
@@ -386,8 +441,8 @@ def test_turbo_warm_loop_memory_budget(spark, index_dir):
         wand.topk(q, k=10)
     rss1 = _vm_rss_mb()
     growth = rss1 - rss0
-    # stated budget: cache ceilings (5M postings-rows ~ 90 MB of int64
-    # arrays + 256 MB block bytes) dominate; the warm loop on this
+    # stated budget: cache ceilings (5M 24-byte postings-rows ~ 120 MB
+    # of arrays + 256 MB block bytes) dominate; the warm loop on this
     # corpus touches a fraction of either — growth must stay far below
     # the ceilings and never scale with query count.
     assert eng._term_cache_rows <= eng.TURBO_CACHE_MAX_POSTINGS

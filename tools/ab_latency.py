@@ -38,7 +38,9 @@ def main():
     spark = get_spark("ab-latency", master="local[16]", shuffle_partitions=16)
     with open(os.path.join(REPO, "fixtures", "queryset.json")) as f:
         queries = [q for q in json.load(f)["queries"] if "AND" not in q and "OR" not in q and "NOT" not in q]
-    engine = QueryEngine(spark, idx)
+    # the plan tier: turbo serves these queries with zero Spark jobs,
+    # which would leave the swept partition count nothing to change
+    engine = QueryEngine(spark, idx, turbo=False)
     # warmup
     for q in queries[:10]:
         engine.ranked(q, k=10, with_total_hits=False)
