@@ -43,11 +43,17 @@ import shutil
 from dataclasses import asdict
 from typing import Dict, List, Optional, Sequence, Tuple, Union
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .build import IndexBuilder, IndexConfig, assign_doc_ids
-from .query import group_code_doc
+from .query import (
+    empty_result,
+    group_code_doc,
+    impact_col,
+    match_threshold,
+    turbo_topk,
+)
 
 MULTIFIELD_MANIFEST = "multifield.json"
 
@@ -381,28 +387,6 @@ class MultiMatchEngine:
         }
         return terms, bdf, blended
 
-    def _cross_fields_required(self, terms, bdf, blended, operator: str,
-                               minimum_should_match) -> Optional[int]:
-        """Matched-distinct-term threshold for cross_fields — the same
-        spec as ``QueryEngine._match_required`` but over BLENDED df/idf
-        (a term matches if it occurs in ANY queried field).  None ⇒ the
-        query can never match (operator=and with a term indexed in no
-        field)."""
-        if operator not in ("or", "and"):
-            raise ValueError(f"unknown match operator {operator!r}")
-        distinct = set(terms)
-        if operator == "and" and any(bdf[t] == 0 for t in distinct):
-            return None
-        live = {t for t in distinct if blended[t] != 0.0}
-        n_zero_idf = sum(
-            1 for t in distinct if bdf[t] > 0 and blended[t] == 0.0
-        )
-        if operator == "and":
-            return len(live)
-        if minimum_should_match is None:
-            return 0
-        return max(int(minimum_should_match) - n_zero_idf, 0)
-
     def _cross_fields_plan(self, query: str, boosts: Dict[str, float],
                            tie_breaker: float = 0.0, method: str = "bm25",
                            operator: str = "or",
@@ -429,7 +413,7 @@ class MultiMatchEngine:
         terms, bdf, blended = self._cross_fields_stats(query, boosts)
         if not terms:
             return None
-        required = self._cross_fields_required(
+        required = match_threshold(
             terms, bdf, blended, operator, minimum_should_match
         )
         any_eng = next(iter(self.engines.values()))
@@ -451,16 +435,8 @@ class MultiMatchEngine:
                 ]
             w_col = F.create_map(*idf_items)[F.col("term")]
             p = eng._pruned_postings(uniq).filter(F.col("doc_len") > 0)
-            k1, b = eng.k1, eng.b
-            if method == "bm25":
-                impact = (F.col("tf") * (k1 + 1)) / (
-                    F.col("tf")
-                    + k1 * (1 - b + b * (F.col("doc_len") / F.lit(eng.avg_doc_len)))
-                )
-            elif method == "tfidf":
-                impact = F.col("tf") / F.col("doc_len")
-            else:
-                raise ValueError(f"unknown scoring method {method!r}")
+            impact = impact_col(method, F.col("tf"), F.col("doc_len"),
+                                eng.avg_doc_len, eng.k1, eng.b)
             plans.append(
                 p.select("doc_id", "term", (w_col * impact).alias("score"))
             )
@@ -496,14 +472,10 @@ class MultiMatchEngine:
         import numpy as np
 
         terms, bdf, blended = self._cross_fields_stats(query, boosts)
-        empty = {
-            "query": query,
-            "total_hits": 0 if want_total else None,
-            "results": [],
-        }
+        empty = empty_result(query, want_total)
         if not terms:
             return empty
-        required = self._cross_fields_required(
+        required = match_threshold(
             terms, bdf, blended, operator, minimum_should_match
         )
         if required is None:
@@ -534,18 +506,10 @@ class MultiMatchEngine:
         ts = best + float(tie_breaker) * (tot - best)
         docs_u, inv2 = np.unique(kdoc, return_inverse=True)
         scores = np.bincount(inv2, weights=ts)
-        nt = np.bincount(inv2)
-        keep = nt >= required
+        keep = np.bincount(inv2) >= required
         docs_u, scores = docs_u[keep], scores[keep]
-        order = np.lexsort((docs_u, -scores))[:k]
-        return {
-            "query": query,
-            "total_hits": int(docs_u.size) if want_total else None,
-            "results": [
-                {"doc_id": int(docs_u[i]), "score": float(scores[i])}
-                for i in order
-            ],
-        }
+        return turbo_topk(docs_u, scores, k,
+                          int(docs_u.size) if want_total else None, query)
 
     # ------------------------------------------------------ combined_fields
     def combined_fields_plan(self, query: str, fields: FieldsArg = None,
@@ -592,7 +556,7 @@ class MultiMatchEngine:
         terms, bdf, blended = self._cross_fields_stats(query, boosts)
         if not terms:
             return None
-        required = self._cross_fields_required(
+        required = match_threshold(
             terms, bdf, blended, operator, minimum_should_match
         )
         any_eng = next(iter(self.engines.values()))
@@ -634,17 +598,9 @@ class MultiMatchEngine:
         for p in len_parts[1:]:
             dlu = dlu.unionByName(p)
         dlc = dlu.groupBy("doc_id").agg(F.sum("wdl").alias("dlc"))
-        k1, b = any_eng.k1, any_eng.b
         joined = tfc.join(dlc, "doc_id")
-        if method == "bm25":
-            sat = (F.col("tfc") * (k1 + 1)) / (
-                F.col("tfc")
-                + k1 * (1 - b + b * (F.col("dlc") / F.lit(avgdl_c)))
-            )
-        elif method == "tfidf":
-            sat = F.col("tfc") / F.col("dlc")
-        else:
-            raise ValueError(f"unknown scoring method {method!r}")
+        sat = impact_col(method, F.col("tfc"), F.col("dlc"), avgdl_c,
+                         any_eng.k1, any_eng.b)
         return (
             joined.select("doc_id", (w_col * sat).alias("score"))
             .groupBy("doc_id")
@@ -664,15 +620,13 @@ class MultiMatchEngine:
         (candidate docs need EVERY field's length, hit or not)."""
         import numpy as np
 
+        from ..functions.codec import bm25_impact
+
         terms, bdf, blended = self._cross_fields_stats(query, boosts)
-        empty = {
-            "query": query,
-            "total_hits": 0 if want_total else None,
-            "results": [],
-        }
+        empty = empty_result(query, want_total)
         if not terms:
             return empty
-        required = self._cross_fields_required(
+        required = match_threshold(
             terms, bdf, blended, operator, minimum_should_match
         )
         if required is None:
@@ -735,30 +689,18 @@ class MultiMatchEngine:
             [float(blended[t]) * float(counts[t]) for t in uniq]
         )
         any_eng = next(iter(self.engines.values()))
-        k1, b = any_eng.k1, any_eng.b
         dlc_per_key = dlc[inv2]
         if method == "bm25":
-            sat = (tfc * (k1 + 1)) / (
-                tfc + k1 * (1 - b + b * (dlc_per_key / avgdl_c))
-            )
+            sat = bm25_impact(tfc, dlc_per_key, avgdl_c, any_eng.k1, any_eng.b)
         elif method == "tfidf":
             sat = tfc / dlc_per_key
         else:
             raise ValueError(f"unknown scoring method {method!r}")
-        contrib = warr[kcode] * sat
-        scores = np.bincount(inv2, weights=contrib)
-        nt = np.bincount(inv2)
-        keep = nt >= required
+        scores = np.bincount(inv2, weights=warr[kcode] * sat)
+        keep = np.bincount(inv2) >= required
         docs_u, scores = docs_u[keep], scores[keep]
-        order = np.lexsort((docs_u, -scores))[:k]
-        return {
-            "query": query,
-            "total_hits": int(docs_u.size) if want_total else None,
-            "results": [
-                {"doc_id": int(docs_u[i]), "score": float(scores[i])}
-                for i in order
-            ],
-        }
+        return turbo_topk(docs_u, scores, k,
+                          int(docs_u.size) if want_total else None, query)
 
     def combined_fields(self, query: str, k: int = 10,
                         fields: FieldsArg = None, method: str = "bm25",
@@ -780,32 +722,8 @@ class MultiMatchEngine:
         plan = self.combined_fields_plan(
             query, boosts, method, operator, minimum_should_match
         )
-        if plan is None:
-            return {
-                "query": query,
-                "total_hits": 0 if with_total_hits else None,
-                "results": [],
-            }
-        any_eng = next(iter(self.engines.values()))
-        if with_total_hits:
-            obs = Observation()
-            plan = plan.observe(obs, F.count(F.lit(1)).alias("n"))
-        with any_eng._interactive():
-            top = (
-                plan.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .limit(k)
-                .collect()
-            )
-            total = int(obs.get["n"]) if with_total_hits else None
         return self._fetch(
-            {
-                "query": query,
-                "total_hits": total,
-                "results": [
-                    {"doc_id": r["doc_id"], "score": r["score"]} for r in top
-                ],
-            },
-            source, source_fields,
+            self._collect(plan, query, k, with_total_hits), source, source_fields
         )
 
     # --------------------------------------------------------- turbo tier
@@ -839,11 +757,7 @@ class MultiMatchEngine:
             per_field.append((docs_u, scores * float(boost)))
         docs_all = np.concatenate([d for d, _s in per_field]) if per_field else None
         if docs_all is None or docs_all.size == 0:
-            return {
-                "query": query,
-                "total_hits": 0 if want_total else None,
-                "results": [],
-            }
+            return empty_result(query, want_total)
         uniq, inv = np.unique(docs_all, return_inverse=True)
         scores_all = np.concatenate([s for _d, s in per_field])
         tot = np.bincount(inv, weights=scores_all, minlength=uniq.size)
@@ -853,15 +767,8 @@ class MultiMatchEngine:
             best = np.full(uniq.size, -np.inf)
             np.maximum.at(best, inv, scores_all)
             combined = best + float(tie_breaker) * (tot - best)
-        order = np.lexsort((uniq, -combined))[:k]
-        return {
-            "query": query,
-            "total_hits": int(uniq.size) if want_total else None,
-            "results": [
-                {"doc_id": int(uniq[i]), "score": float(combined[i])}
-                for i in order
-            ],
-        }
+        return turbo_topk(uniq, combined, k,
+                          int(uniq.size) if want_total else None, query)
 
     # ------------------------------------------------------------ results
     def multi_match(self, query: str, k: int = 10, fields: FieldsArg = None,
@@ -909,33 +816,19 @@ class MultiMatchEngine:
                                      tie_breaker, method, slop, slop_mode,
                                      max_expansions, operator,
                                      minimum_should_match)
-        if plan is None:
-            return {
-                "query": query,
-                "total_hits": 0 if with_total_hits else None,
-                "results": [],
-            }
-        any_eng = next(iter(self.engines.values()))
-        if with_total_hits:
-            obs = Observation()
-            plan = plan.observe(obs, F.count(F.lit(1)).alias("n"))
-        with any_eng._interactive():
-            top = (
-                plan.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .limit(k)
-                .collect()
-            )
-            total = int(obs.get["n"]) if with_total_hits else None
         return self._fetch(
-            {
-                "query": query,
-                "total_hits": total,
-                "results": [
-                    {"doc_id": r["doc_id"], "score": r["score"]} for r in top
-                ],
-            },
-            source, source_fields,
+            self._collect(plan, query, k, with_total_hits), source, source_fields
         )
+
+    def _collect(self, plan: Optional[DataFrame], query: str, k: int,
+                 want_total: bool) -> dict:
+        """Plan-tier top-k of a combined (doc_id, score) plan through
+        any field engine's :meth:`~.query.QueryEngine._collect_topk`
+        (zero hits for a None plan)."""
+        if plan is None:
+            return empty_result(query, want_total)
+        any_eng = next(iter(self.engines.values()))
+        return any_eng._collect_topk(plan, query, k, want_total)
 
     def _fetch(self, res: dict, source: Optional[DataFrame],
                source_fields: Sequence[str]) -> dict:
@@ -1054,7 +947,7 @@ class MultiMatchWand:
             field_rows[f] = by_range
             field_w[f] = {t: boost * v for t, v in w.items()}
             ub_f[f] = ubf
-        empty = {"query": query, "total_hits": None, "results": []}
+        empty = empty_result(query, False)
         if not field_rows:
             if with_stats:
                 empty["stats"] = {"ranges_scored": 0, "ranges_total": 0,
@@ -1140,17 +1033,8 @@ class MultiMatchWand:
             n_scored += 1
             docs_all.append(d)
             scores_all.append(s)
-        cand_d = np.concatenate(docs_all)
-        cand_s = np.concatenate(scores_all)
-        order = np.lexsort((cand_d, -cand_s))[:k]
-        out = {
-            "query": query,
-            "total_hits": None,
-            "results": [
-                {"doc_id": int(cand_d[i]), "score": float(cand_s[i])}
-                for i in order
-            ],
-        }
+        out = turbo_topk(np.concatenate(docs_all), np.concatenate(scores_all),
+                         k, None, query)
         if with_stats:
             out["stats"] = {
                 "ranges_scored": n_scored,

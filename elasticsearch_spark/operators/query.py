@@ -102,6 +102,78 @@ def group_code_doc(codes, doc):
     return c_s[new], d_s[new], inv
 
 
+def turbo_topk(docs, scores, k: int, total: Optional[int],
+               query: Optional[str] = None) -> dict:
+    """Driver-side top-k in the reference result shape: the ``k`` best
+    rows of the parallel ``docs``/``scores`` arrays under the (score
+    desc, doc_id asc) tie-break — the ONE turbo-tier top-k (its plan
+    twin is :meth:`QueryEngine._collect_topk`)."""
+    import numpy as np
+
+    order = np.lexsort((docs, -scores))[:k]
+    return {
+        "query": query,
+        "total_hits": total,
+        "results": [
+            {"doc_id": int(docs[i]), "score": float(scores[i])} for i in order
+        ],
+    }
+
+
+def empty_result(query: Optional[str], want_total: bool = True) -> dict:
+    """Zero hits in the reference result shape."""
+    return {
+        "query": query,
+        "total_hits": 0 if want_total else None,
+        "results": [],
+    }
+
+
+def impact_col(method: str, tf, doc_len, avg_doc_len: float,
+               k1: float, b: float):
+    """Idf-free per-posting BM25/TF-IDF impact as a Column expression —
+    the ONE plan-side copy of the saturation formula (the numpy twin is
+    ``codec.bm25_impact``).  Callers weight it as ``idf × impact`` (×
+    multiplicity) or ``w × impact``."""
+    if method == "bm25":
+        return (tf * (k1 + 1)) / (
+            tf + k1 * (1 - b + b * (doc_len / F.lit(avg_doc_len)))
+        )
+    if method == "tfidf":
+        return tf / doc_len
+    raise ValueError(f"unknown scoring method {method!r}")
+
+
+def match_threshold(terms: Sequence[str], df: Dict[str, int],
+                    idf: Dict[str, float], operator: str,
+                    minimum_should_match) -> Optional[int]:
+    """Matched-distinct-term threshold for ES ``match``
+    ``operator``/``minimum_should_match`` over a df map and an idf map
+    (one index's live statistics, or cross_fields' blended ones).
+    None ⇒ the query can never match (operator=and with an unindexed
+    term — Lucene: a MUST TermQuery over a non-existent term matches
+    nothing).
+
+    Terms with df>0 but idf==0 occur in EVERY doc under this idf
+    formula (df==N): they are skipped from scoring (reference
+    semantics) and auto-match every candidate, so they drop out of the
+    ``and`` count and lower ``minimum_should_match`` — the same spec as
+    the oracle's ``match_query``."""
+    if operator not in ("or", "and"):
+        raise ValueError(f"unknown match operator {operator!r}")
+    distinct = set(terms)
+    if operator == "and":
+        if any(df.get(t, 0) == 0 for t in distinct):
+            return None
+        return sum(1 for t in distinct if idf.get(t, 0.0) != 0.0)
+    if minimum_should_match is None:
+        return 0
+    n_zero_idf = sum(
+        1 for t in distinct if df.get(t, 0) > 0 and idf.get(t, 0.0) == 0.0
+    )
+    return max(int(minimum_should_match) - n_zero_idf, 0)
+
+
 class QueryEngine:
     """Answers queries against an index built by ``IndexBuilder``.
 
@@ -296,21 +368,20 @@ class QueryEngine:
 
     def _impact(self, sl: "TermSlice", method: str):
         """Per-row BM25/TF-IDF impact (idf-free) over a slice's
-        doc_len > 0 rows — the ONE copy of the turbo per-posting
-        formula (the plan-side twin is :meth:`_scored_postings_rows`)."""
+        doc_len > 0 rows — every turbo caller reads it from the slice
+        (the BM25 saturation is ``codec.bm25_impact``; the plan-side
+        twin is :func:`impact_col`)."""
         import numpy as np
 
-        tf_f = sl.tf.astype(np.float64)
-        dl_f = sl.dl.astype(np.float64)
+        from ..functions.codec import bm25_impact
+
+        tf, dl = sl.tf, sl.dl
         if sl.pos is not None:
-            tf_f, dl_f = tf_f[sl.pos], dl_f[sl.pos]
+            tf, dl = tf[sl.pos], dl[sl.pos]
         if method == "bm25":
-            k1, b = self.k1, self.b
-            return (tf_f * (k1 + 1)) / (
-                tf_f + k1 * (1 - b + b * (dl_f / self.avg_doc_len))
-            )
+            return bm25_impact(tf, dl, self.avg_doc_len, self.k1, self.b)
         if method == "tfidf":
-            return tf_f / dl_f
+            return tf.astype(np.float64) / dl.astype(np.float64)
         raise ValueError(f"unknown scoring method {method!r}")
 
     def _postings_point_read_raw(self, terms: Sequence[str]):
@@ -321,7 +392,8 @@ class QueryEngine:
         min/max stats prune tightly).  Returns ``{term: (doc_id int64,
         tf int32, doc_len int32)}`` for every requested term (empty
         arrays when absent), tombstone-filtered, rows of a term in read
-        order.
+        order; each term's arrays own their memory (copies, not views
+        of the one read), so evicting a term frees its bytes.
 
         Streams pyarrow record batches: each batch maps its term column
         to codes with ``pc.index_in`` and is tombstone-filtered at once,
@@ -377,7 +449,7 @@ class QueryEngine:
         counts = np.bincount(code, minlength=len(terms))
         ends = np.cumsum(counts)
         return {
-            t: (doc[e - n:e], tf[e - n:e], dl[e - n:e])
+            t: (doc[e - n:e].copy(), tf[e - n:e].copy(), dl[e - n:e].copy())
             for t, n, e in zip(terms, counts.tolist(), ends.tolist())
         }
 
@@ -509,11 +581,7 @@ class QueryEngine:
             return None
         _uniq, _codes, doc, s = got
         if doc.size == 0:
-            return {
-                "query": query,
-                "total_hits": 0 if want_total else None,
-                "results": [],
-            }
+            return empty_result(query, want_total)
         docs_u, inv = np.unique(doc, return_inverse=True)
         scores = np.bincount(inv, weights=s)
         if filter_docs is not None:
@@ -531,71 +599,10 @@ class QueryEngine:
                 (scores == sa_score) & (docs_u > sa_doc)
             )
             docs_u, scores = docs_u[keep], scores[keep]
-        order = np.lexsort((docs_u, -scores))[:k]
-        return {
-            "query": query,
-            "total_hits": total if want_total else None,
-            "results": [
-                {"doc_id": int(docs_u[i]), "score": float(scores[i])} for i in order
-            ],
-        }
+        return turbo_topk(docs_u, scores, k, total if want_total else None,
+                          query)
 
     # -------------------------------------------------------------- ranked
-    def score_plan_fused(self, query: str, method: str = "bm25") -> Optional[DataFrame]:
-        """Join-shaped scoring plan: broadcast-join the bucket-pruned
-        dictionary slice in-plan instead of a driver-side lookup.
-        Semantics identical to :meth:`score_plan` (inner join skips
-        unindexed terms, ``idf != 0`` drops df==N terms); measured
-        SLOWER than the literal-map plan at every scale (the AQE
-        broadcast stage costs more than the tiny driver lookup), kept
-        as the reference shape for when a caller needs a pure-plan
-        (collect-free) pipeline, e.g. composing into a larger job.
-        Returns None only for an empty processed query.
-
-        NOTE: reads the STORED idf column (computed at build/compaction
-        time); with pending delta segments use :meth:`score_plan`, which
-        derives idf from the live df."""
-        terms = self._terms(query)
-        if not terms:
-            return None
-        from collections import Counter
-
-        counts = Counter(terms)
-        uniq = sorted(counts)
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in uniq})
-        d = F.broadcast(
-            self._dictionary.filter(
-                F.col("bucket").isin(buckets) & F.col("term").isin(uniq)
-            )
-            .select("term", "idf")
-            .filter(F.col("idf") != 0)
-        )
-        mult_items: list = []
-        for t in uniq:
-            mult_items += [F.lit(t), F.lit(float(counts[t]))]
-        mult_col = F.create_map(*mult_items)[F.col("term")]
-
-        p = self._pruned_postings(uniq).filter(F.col("doc_len") > 0)
-        k1, b = self.k1, self.b
-        j = p.join(d, "term")
-        if method == "bm25":
-            score = F.col("idf") * (
-                (F.col("tf") * (k1 + 1))
-                / (
-                    F.col("tf")
-                    + k1 * (1 - b + b * (F.col("doc_len") / F.lit(self.avg_doc_len)))
-                )
-            )
-        elif method == "tfidf":
-            score = (F.col("tf") / F.col("doc_len")) * F.col("idf")
-        else:
-            raise ValueError(f"unknown scoring method {method!r}")
-        return (
-            j.withColumn("score", score * mult_col)
-            .groupBy("doc_id")
-            .agg(F.sum("score").alias("score"))
-        )
-
     def _scored_postings_rows(self, terms: List[str],
                               method: str) -> Optional[DataFrame]:
         """Per-(term, doc) scored posting rows ``(doc_id, score)`` — the
@@ -625,19 +632,10 @@ class QueryEngine:
         mult_col = F.create_map(*mult_items)[F.col("term")]
 
         p = self._pruned_postings(sorted(set(live)))
-        k1, b = self.k1, self.b
-        if method == "bm25":
-            score = idf_col * (
-                (F.col("tf") * (k1 + 1))
-                / (
-                    F.col("tf")
-                    + k1 * (1 - b + b * (F.col("doc_len") / F.lit(self.avg_doc_len)))
-                )
-            )
-        elif method == "tfidf":
-            score = (F.col("tf") / F.col("doc_len")) * idf_col
-        else:
-            raise ValueError(f"unknown scoring method {method!r}")
+        score = idf_col * impact_col(
+            method, F.col("tf"), F.col("doc_len"), self.avg_doc_len,
+            self.k1, self.b,
+        )
         return p.filter(F.col("doc_len") > 0).select(
             "doc_id", (score * mult_col).alias("score")
         )
@@ -665,10 +663,9 @@ class QueryEngine:
         tie-break.
 
         The literal-map plan (driver looks up ≤|query| idf values, then
-        one scan→score→agg→TakeOrdered job) measured 2-3x faster than
-        the broadcast-join alternative (:meth:`score_plan_fused`) — the
-        join adds an AQE broadcast stage for a slice that is tiny at any
-        corpus scale.
+        one scan→score→agg→TakeOrdered job) measured 2-3x faster than a
+        broadcast join of the dictionary slice — the join adds an AQE
+        broadcast stage for a slice that is tiny at any corpus scale.
 
         Small candidate slices are served by the driver-side turbo path
         (zero Spark jobs, identical results — see class docstring)."""
@@ -679,52 +676,40 @@ class QueryEngine:
         )
         if res is not None:
             return res
-        if not with_total_hits:
-            plan = self.score_plan(query, method, terms=terms)
-            if plan is None:
-                return {"query": query, "total_hits": None, "results": []}
-            plan = self._apply_filter(plan, filter_docs)
-            plan = self._apply_exclude(plan, exclude_docs)
-            plan = self._apply_search_after(plan, search_after)
-            with self._interactive():
-                top = (
-                    plan.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                    .limit(k)
-                    .collect()
-                )
-            return {
-                "query": query,
-                "total_hits": None,
-                "results": [{"doc_id": r["doc_id"], "score": r["score"]} for r in top],
-            }
         plan = self.score_plan(query, method, terms=terms)
         if plan is None:
-            return {"query": query, "total_hits": 0, "results": []}
-        # total_hits rides the SAME top-k job as an Observation on the
-        # aggregated (doc_id, score) rows — TakeOrderedAndProject
-        # consumes every child row, so the count is exact and the old
-        # persist + second count() action is gone (2 jobs -> 1).
-        obs = Observation()
+            return empty_result(query, with_total_hits)
         # total_hits counts the FULL match set (ES semantics; doc
-        # exclusion is part of the query, the pagination cursor is not):
-        # the Observation sits above the exclusion filter but below the
-        # search_after filter, and every child row still flows through
-        # it on the way to the cursor filter
-        obs_plan = self._apply_search_after(
-            self._apply_exclude(
-                self._apply_filter(plan, filter_docs), exclude_docs
-            )
-            .observe(obs, F.count(F.lit(1)).alias("n")),
-            search_after,
+        # exclusion is part of the query, the pagination cursor is not)
+        plan = self._apply_exclude(
+            self._apply_filter(plan, filter_docs), exclude_docs
         )
+        return self._collect_topk(plan, query, k, with_total_hits,
+                                  search_after)
+
+    def _collect_topk(self, plan: DataFrame, query, k: int,
+                      want_total: bool,
+                      search_after: Optional[Tuple[float, int]] = None
+                      ) -> dict:
+        """The ONE plan-tier top-k: a (doc_id, score) plan → the
+        reference result shape in ONE job, ``orderBy(score desc,
+        doc_id asc).limit(k)`` (TakeOrderedAndProject).  With
+        ``want_total`` the hit count rides that job as an Observation
+        placed BELOW the ``search_after`` cursor filter — TakeOrdered
+        consumes every child row, so the count is exact and covers the
+        whole match set, not the page."""
+        obs = None
+        if want_total:
+            obs = Observation()
+            plan = plan.observe(obs, F.count(F.lit(1)).alias("n"))
+        plan = self._apply_search_after(plan, search_after)
         with self._interactive():
             top = (
-                obs_plan
-                .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+                plan.orderBy(F.col("score").desc(), F.col("doc_id").asc())
                 .limit(k)
                 .collect()
             )
-            total = int(obs.get["n"])
+            total = int(obs.get["n"]) if obs is not None else None
         return {
             "query": query,
             "total_hits": total,
@@ -877,40 +862,6 @@ class QueryEngine:
         return res
 
     # ------------------------------------------ match operator / msm (ES)
-    def _match_required(self, terms: Sequence[str], operator: str,
-                        minimum_should_match) -> Optional[int]:
-        """Resolve the matched-distinct-term threshold for ES ``match``
-        ``operator``/``minimum_should_match``.  None ⇒ the query can
-        never match (operator=and with an unindexed term — Lucene: a
-        MUST TermQuery over a non-existent term matches nothing).
-
-        Terms with df>0 but idf==0 occur in EVERY doc under this idf
-        formula (df==N): they are skipped from scoring (reference
-        semantics) and auto-match every candidate, so the required
-        count is reduced by their number — the same spec as the
-        oracle's ``match_query``."""
-        if operator not in ("or", "and"):
-            raise ValueError(f"unknown match operator {operator!r}")
-        distinct = set(terms)
-        self.term_idf(sorted(distinct))
-        if operator == "and" and any(
-            self._df_cache.get(t, 0) == 0 for t in distinct
-        ):
-            return None
-        live = {t for t in distinct
-                if self._df_cache.get(t, 0) > 0
-                and self._idf_cache.get(t, 0.0) != 0.0}
-        n_zero_idf = sum(
-            1 for t in distinct
-            if self._df_cache.get(t, 0) > 0
-            and self._idf_cache.get(t, 0.0) == 0.0
-        )
-        if operator == "and":
-            return len(live)
-        if minimum_should_match is None:
-            return 0
-        return max(int(minimum_should_match) - n_zero_idf, 0)
-
     def match_scored_plan(self, query: str, method: str = "bm25",
                           operator: str = "or",
                           minimum_should_match=None) -> Optional[DataFrame]:
@@ -924,7 +875,9 @@ class QueryEngine:
         terms = self._terms(query)
         if not terms:
             return None
-        required = self._match_required(terms, operator, minimum_should_match)
+        idf = self.term_idf(terms)  # refreshes, then fills _df_cache
+        required = match_threshold(terms, self._df_cache, idf, operator,
+                                   minimum_should_match)
         if required is None:
             return self._empty_scored_plan()
         rows = self._scored_postings_rows(terms, method)
@@ -947,36 +900,25 @@ class QueryEngine:
         import numpy as np
 
         terms = self._terms(query)
-        empty = {
-            "query": query,
-            "total_hits": 0 if want_total else None,
-            "results": [],
-        }
         if not terms:
-            return empty
-        required = self._match_required(terms, operator, minimum_should_match)
+            return empty_result(query, want_total)
+        idf = self.term_idf(terms)  # refreshes, then fills _df_cache
+        required = match_threshold(terms, self._df_cache, idf, operator,
+                                   minimum_should_match)
         if required is None:
-            return empty
+            return empty_result(query, want_total)
         got = self._turbo_scored_rows(terms, method)
         if got is None:
             return None
         _uniq, _codes, doc, s = got
         if doc.size == 0:
-            return empty
+            return empty_result(query, want_total)
         docs_u, inv = np.unique(doc, return_inverse=True)
         scores = np.bincount(inv, weights=s)
-        nt = np.bincount(inv)
-        keep = nt >= required
+        keep = np.bincount(inv) >= required
         docs_u, scores = docs_u[keep], scores[keep]
-        order = np.lexsort((docs_u, -scores))[:k]
-        return {
-            "query": query,
-            "total_hits": int(docs_u.size) if want_total else None,
-            "results": [
-                {"doc_id": int(docs_u[i]), "score": float(scores[i])}
-                for i in order
-            ],
-        }
+        return turbo_topk(docs_u, scores, k,
+                          int(docs_u.size) if want_total else None, query)
 
     def match_search(self, query: str, k: int = 10, operator: str = "or",
                      minimum_should_match=None, method: str = "bm25",
@@ -992,61 +934,31 @@ class QueryEngine:
         plan = self.match_scored_plan(query, method, operator,
                                       minimum_should_match)
         if plan is None:
-            return {
-                "query": query,
-                "total_hits": 0 if with_total_hits else None,
-                "results": [],
-            }
-        if with_total_hits:
-            obs = Observation()
-            plan = plan.observe(obs, F.count(F.lit(1)).alias("n"))
-        with self._interactive():
-            top = (
-                plan.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .limit(k)
-                .collect()
-            )
-            total = int(obs.get["n"]) if with_total_hits else None
-        return {
-            "query": query,
-            "total_hits": total,
-            "results": [
-                {"doc_id": r["doc_id"], "score": r["score"]} for r in top
-            ],
-        }
+            return empty_result(query, with_total_hits)
+        return self._collect_topk(plan, query, k, with_total_hits)
 
     # ------------------------------------------- match_bool_prefix (ES)
-    def _bool_prefix_required(self, full: Sequence[str], exp: Sequence[str],
-                              operator: str,
-                              minimum_should_match) -> Optional[int]:
-        """Matched-CLAUSE threshold for ES ``match_bool_prefix``: each
-        distinct full term is one clause, the trailing prefix is one
-        clause.  None ⇒ can never match (operator=and with an unindexed
-        full term or a prefix with zero expansions).  Zero-idf full
-        terms auto-match every doc and reduce the requirement, the
-        :meth:`_match_required` spec."""
-        if operator not in ("or", "and"):
-            raise ValueError(f"unknown match operator {operator!r}")
-        distinct = set(full)
-        self.term_idf(sorted(distinct))
-        if operator == "and" and (
-            not exp
-            or any(self._df_cache.get(t, 0) == 0 for t in distinct)
-        ):
+    def _bool_prefix_clauses(self, query: str, max_expansions: int,
+                             operator: str, minimum_should_match):
+        """``(full, exp, required)`` for ES ``match_bool_prefix``: the
+        analyzed terms but the last are full-term clauses, the last
+        term's first ``max_expansions`` dictionary continuations (index-
+        term order) form ONE prefix clause, and ``required`` is the
+        matched-CLAUSE threshold (:func:`match_threshold` over the full
+        terms; operator=and also needs the prefix clause, so it never
+        matches without expansions).  None when the query analyzes to
+        nothing; ``required`` None ⇒ it can never match."""
+        terms = self._terms(query)
+        if not terms:
             return None
-        live = {t for t in distinct
-                if self._df_cache.get(t, 0) > 0
-                and self._idf_cache.get(t, 0.0) != 0.0}
-        n_zero_idf = sum(
-            1 for t in distinct
-            if self._df_cache.get(t, 0) > 0
-            and self._idf_cache.get(t, 0.0) == 0.0
-        )
-        if operator == "and":
-            return len(live) + 1  # the prefix clause must match too
-        if minimum_should_match is None:
-            return 0
-        return max(int(minimum_should_match) - n_zero_idf, 0)
+        full, pre = terms[:-1], terms[-1]
+        exp = self.prefix_expand(pre, max_expansions, order="term")
+        idf = self.term_idf(full)  # refreshes, then fills _df_cache
+        required = match_threshold(full, self._df_cache, idf, operator,
+                                   minimum_should_match)
+        if operator == "and" and required is not None:
+            required = required + 1 if exp else None
+        return full, exp, required
 
     def match_bool_prefix_scored_plan(self, query: str,
                                       max_expansions: int = 50,
@@ -1064,14 +976,12 @@ class QueryEngine:
         — the matched-clause count rides the same aggregate, so
         operator/minimum_should_match add zero extra shuffles.  None
         when nothing can match at all (ES: zero hits)."""
-        terms = self._terms(query)
-        if not terms:
-            return None
-        full, pre = terms[:-1], terms[-1]
-        exp = self.prefix_expand(pre, max_expansions, order="term")
-        required = self._bool_prefix_required(
-            full, exp, operator, minimum_should_match
+        clauses = self._bool_prefix_clauses(
+            query, max_expansions, operator, minimum_should_match
         )
+        if clauses is None:
+            return None
+        full, exp, required = clauses
         if required is None:
             return self._empty_scored_plan()
         parts = []
@@ -1112,21 +1022,12 @@ class QueryEngine:
             return None
         import numpy as np
 
-        terms = self._terms(query)
-        empty = {
-            "query": query,
-            "total_hits": 0 if want_total else None,
-            "results": [],
-        }
-        if not terms:
-            return empty
-        full, pre = terms[:-1], terms[-1]
-        exp = self.prefix_expand(pre, max_expansions, order="term")
-        required = self._bool_prefix_required(
-            full, exp, operator, minimum_should_match
+        clauses = self._bool_prefix_clauses(
+            query, max_expansions, operator, minimum_should_match
         )
-        if required is None:
-            return empty
+        if clauses is None or clauses[2] is None:
+            return empty_result(query, want_total)
+        full, exp, required = clauses
         if full:
             got = self._turbo_scored_rows(full, method)
             if got is None:
@@ -1151,22 +1052,14 @@ class QueryEngine:
             pdocs = np.unique(np.concatenate([sl.sdoc for sl in slices]))
         all_doc = np.concatenate([doc, pdocs])
         if all_doc.size == 0:
-            return empty
+            return empty_result(query, want_total)
         all_s = np.concatenate([s, np.ones(pdocs.size, dtype=np.float64)])
         docs_u, inv = np.unique(all_doc, return_inverse=True)
         scores = np.bincount(inv, weights=all_s)
-        nt = np.bincount(inv)
-        keep = nt >= required
+        keep = np.bincount(inv) >= required
         docs_u, scores = docs_u[keep], scores[keep]
-        order = np.lexsort((docs_u, -scores))[:k]
-        return {
-            "query": query,
-            "total_hits": int(docs_u.size) if want_total else None,
-            "results": [
-                {"doc_id": int(docs_u[i]), "score": float(scores[i])}
-                for i in order
-            ],
-        }
+        return turbo_topk(docs_u, scores, k,
+                          int(docs_u.size) if want_total else None, query)
 
     def match_bool_prefix(self, query: str, k: int = 10,
                           max_expansions: int = 50, method: str = "bm25",
@@ -1187,28 +1080,8 @@ class QueryEngine:
             query, max_expansions, method, operator, minimum_should_match
         )
         if plan is None:
-            return {
-                "query": query,
-                "total_hits": 0 if with_total_hits else None,
-                "results": [],
-            }
-        if with_total_hits:
-            obs = Observation()
-            plan = plan.observe(obs, F.count(F.lit(1)).alias("n"))
-        with self._interactive():
-            top = (
-                plan.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .limit(k)
-                .collect()
-            )
-            total = int(obs.get["n"]) if with_total_hits else None
-        return {
-            "query": query,
-            "total_hits": total,
-            "results": [
-                {"doc_id": r["doc_id"], "score": r["score"]} for r in top
-            ],
-        }
+            return empty_result(query, with_total_hits)
+        return self._collect_topk(plan, query, k, with_total_hits)
 
     def explain(self, query: str, doc_id: int,
                 method: str = "bm25") -> dict:
@@ -1504,7 +1377,7 @@ class QueryEngine:
             [t for t in s if self._df_cache.get(t, 0) > 0] for s in slots
         ]
         if any(not s for s in live_slots):
-            return {"query": None, "total_hits": 0, "results": []}
+            return empty_result(None)
         uniq = sorted({t for s in live_slots for t in s})
         if sum(self._df_cache.get(t, 0) for t in uniq) > self.TURBO_MAX_POSTINGS:
             return None
@@ -1606,25 +1479,16 @@ class QueryEngine:
                 if res is not None:
                     res["query"] = phrase
                     return res
-        # same single-job Observation trick as ranked(): count rides the
-        # top-k action, no persist + count double action
         plan = self.phrase_plan(phrase, slop, slop_mode)
-        obs = Observation()
-        with self._interactive():
-            top = (
-                plan.observe(obs, F.count(F.lit(1)).alias("n"))
-                .orderBy(F.col("n_occurrences").desc(), F.col("doc_id"))
-                .limit(k)
-                .collect()
-            )
-            total = int(obs.get["n"])
-        return {
-            "query": phrase,
-            "total_hits": total,
-            "results": [
-                {"doc_id": r["doc_id"], "score": float(r["n_occurrences"])} for r in top
-            ],
-        }
+        return self._collect_topk(self._occurrence_scored(plan), phrase, k, True)
+
+    @staticmethod
+    def _occurrence_scored(plan: DataFrame) -> DataFrame:
+        """A match-shaped (doc_id, n_occurrences, …) plan as (doc_id,
+        score): phrase-shaped hits rank by occurrence count."""
+        return plan.select(
+            "doc_id", F.col("n_occurrences").cast("double").alias("score")
+        )
 
     def phrase_scored_plan(self, phrase: str, slop: int = 0,
                            slop_mode: str = "ordered",
@@ -1646,19 +1510,19 @@ class QueryEngine:
         base = self.phrase_plan(phrase, slop, slop_mode)
         idf_map = self.term_idf(sorted(set(terms)))
         sum_idf = float(sum(idf_map.get(t, 0.0) for t in terms))
-        k1, b = self.k1, self.b
+        return self._pseudo_term_scored(base, sum_idf, method)
+
+    def _pseudo_term_scored(self, base: DataFrame, sum_idf: float,
+                            method: str) -> DataFrame:
+        """Score a (doc_id, n_occurrences, …) match plan as ONE Lucene
+        pseudo-term: idf ``sum_idf``, tf = n_occurrences, the doc's
+        norm from a hit-set-sized join to the live docs table."""
         dl = self._docs.select("doc_id", "doc_len")
         j = base.join(dl, "doc_id").filter(F.col("doc_len") > 0)
-        pf = F.col("n_occurrences").cast("double")
-        if method == "bm25":
-            score = F.lit(sum_idf) * (
-                (pf * (k1 + 1))
-                / (pf + k1 * (1 - b + b * (F.col("doc_len") / F.lit(self.avg_doc_len))))
-            )
-        elif method == "tfidf":
-            score = F.lit(sum_idf) * (pf / F.col("doc_len"))
-        else:
-            raise ValueError(f"unknown scoring method {method!r}")
+        score = F.lit(sum_idf) * impact_col(
+            method, F.col("n_occurrences").cast("double"), F.col("doc_len"),
+            self.avg_doc_len, self.k1, self.b,
+        )
         return j.select("doc_id", "n_occurrences", score.alias("score"))
 
     def _mpp_slots(self, phrase: str,
@@ -1739,7 +1603,7 @@ class QueryEngine:
         terms = [str(t) for t in terms]
         query_label = " ".join(terms)
         if not terms:
-            return {"query": query_label, "total_hits": 0, "results": []}
+            return empty_result(query_label)
         mode = "ordered" if in_order else "unordered"
         if self.stats["config"].get("positional"):
             res = self._turbo_phrase([[t] for t in terms], k, slop, mode)
@@ -1747,23 +1611,8 @@ class QueryEngine:
                 res["query"] = query_label
                 return res
         plan = self.span_near_plan(terms, slop, in_order)
-        obs = Observation()
-        with self._interactive():
-            top = (
-                plan.observe(obs, F.count(F.lit(1)).alias("n"))
-                .orderBy(F.col("n_occurrences").desc(), F.col("doc_id"))
-                .limit(k)
-                .collect()
-            )
-            total = int(obs.get["n"])
-        return {
-            "query": query_label,
-            "total_hits": total,
-            "results": [
-                {"doc_id": r["doc_id"], "score": float(r["n_occurrences"])}
-                for r in top
-            ],
-        }
+        return self._collect_topk(self._occurrence_scored(plan), query_label,
+                                  k, True)
 
     def match_phrase_prefix_plan(self, phrase: str,
                                  max_expansions: int = 50) -> DataFrame:
@@ -1806,29 +1655,13 @@ class QueryEngine:
         if self.stats["config"].get("positional"):
             slots = self._mpp_slots(phrase, max_expansions)
             if slots is None:
-                return {"query": phrase, "total_hits": 0, "results": []}
+                return empty_result(phrase)
             res = self._turbo_phrase(slots, k)
             if res is not None:
                 res["query"] = phrase
                 return res
         plan = self.match_phrase_prefix_plan(phrase, max_expansions)
-        obs = Observation()
-        with self._interactive():
-            top = (
-                plan.observe(obs, F.count(F.lit(1)).alias("n"))
-                .orderBy(F.col("n_occurrences").desc(), F.col("doc_id"))
-                .limit(k)
-                .collect()
-            )
-            total = int(obs.get["n"])
-        return {
-            "query": phrase,
-            "total_hits": total,
-            "results": [
-                {"doc_id": r["doc_id"], "score": float(r["n_occurrences"])}
-                for r in top
-            ],
-        }
+        return self._collect_topk(self._occurrence_scored(plan), phrase, k, True)
 
     def match_phrase_prefix_scored_plan(self, phrase: str,
                                         max_expansions: int = 50,
@@ -1852,20 +1685,7 @@ class QueryEngine:
         all_terms = [t for s in slots for t in s]
         idf_map = self.term_idf(sorted(set(all_terms)))
         sum_idf = float(sum(idf_map.get(t, 0.0) for t in all_terms))
-        k1, b = self.k1, self.b
-        dl = self._docs.select("doc_id", "doc_len")
-        j = base.join(dl, "doc_id").filter(F.col("doc_len") > 0)
-        pf = F.col("n_occurrences").cast("double")
-        if method == "bm25":
-            score = F.lit(sum_idf) * (
-                (pf * (k1 + 1))
-                / (pf + k1 * (1 - b + b * (F.col("doc_len") / F.lit(self.avg_doc_len))))
-            )
-        elif method == "tfidf":
-            score = F.lit(sum_idf) * (pf / F.col("doc_len"))
-        else:
-            raise ValueError(f"unknown scoring method {method!r}")
-        return j.select("doc_id", "n_occurrences", score.alias("score"))
+        return self._pseudo_term_scored(base, sum_idf, method)
 
     # ------------------------------------------------------------- boolean
     def boolean_plan(self, query: str) -> DataFrame:
@@ -2035,21 +1855,12 @@ class QueryEngine:
         res = self._turbo_boolean(query, k)
         if res is not None:
             return res
-        plan = self.boolean_plan(query)
-        obs = Observation()
-        with self._interactive():
-            rows = (
-                plan.observe(obs, F.count(F.lit(1)).alias("n"))
-                .orderBy("doc_id")
-                .limit(k)
-                .collect()
-            )
-            total = obs.get["n"]
-        return {
-            "query": query,
-            "total_hits": int(total),
-            "results": [{"doc_id": r["doc_id"], "score": 1.0} for r in rows],
-        }
+        # unranked: every hit scores 1.0, so the shared (score desc,
+        # doc_id asc) order is doc_id order
+        plan = self.boolean_plan(query).select(
+            "doc_id", F.lit(1.0).alias("score")
+        )
+        return self._collect_topk(plan, query, k, True)
 
     # --------------------------------------------------------------- batch
     def _turbo_batch(self, queries: Sequence[str], k: int,
@@ -2079,13 +1890,8 @@ class QueryEngine:
             return None
         for q in queries:
             acc = self._turbo_accum(per_query[q], idf_map, slices, method)
-            if acc is None:
-                continue
-            docs_u, scores = acc
-            top = np.lexsort((docs_u, -scores))[:k]
-            out[q] = [
-                {"doc_id": int(docs_u[i]), "score": float(scores[i])} for i in top
-            ]
+            if acc is not None:
+                out[q] = turbo_topk(*acc, k, None)["results"]
         return out
 
     def batch_ranked(self, queries: Sequence[str], k: int = 10,
@@ -2130,17 +1936,10 @@ class QueryEngine:
         )
         live_terms = sorted({r[1] for r in weight_rows})
         p = self._pruned_postings(live_terms).filter(F.col("doc_len") > 0)
-        k1, b = self.k1, self.b
-        if method == "bm25":
-            base_score = F.col("idf") * (
-                (F.col("tf") * (k1 + 1))
-                / (
-                    F.col("tf")
-                    + k1 * (1 - b + b * (F.col("doc_len") / F.lit(self.avg_doc_len)))
-                )
-            )
-        else:
-            base_score = (F.col("tf") / F.col("doc_len")) * F.col("idf")
+        base_score = F.col("idf") * impact_col(
+            method, F.col("tf"), F.col("doc_len"), self.avg_doc_len,
+            self.k1, self.b,
+        )
         scored = (
             p.join(weights, "term")
             .withColumn("s", base_score * F.col("mult"))
@@ -2201,9 +2000,7 @@ class QueryEngine:
         terms = self.prefix_expand(prefix, max_expansions)
         label = f"{prefix}*"
         if not terms:
-            return {"query": label,
-                    "total_hits": 0 if with_total_hits else None,
-                    "results": []}
+            return empty_result(label, with_total_hits)
         return self.ranked(label, k, method, with_total_hits, terms=terms)
 
     def fuzzy_ranked(self, term: str, k: int = 10, max_edits: int = 1,
@@ -2215,9 +2012,7 @@ class QueryEngine:
         terms = self.fuzzy_expand(term, max_edits, prefix_length, max_expansions)
         label = f"{term}~{max_edits}"
         if not terms:
-            return {"query": label,
-                    "total_hits": 0 if with_total_hits else None,
-                    "results": []}
+            return empty_result(label, with_total_hits)
         return self.ranked(label, k, method, with_total_hits, terms=terms)
 
     def wildcard_expand(self, pattern: str,
@@ -2240,9 +2035,7 @@ class QueryEngine:
         :meth:`prefix_ranked`)."""
         terms = self.wildcard_expand(pattern, max_expansions)
         if not terms:
-            return {"query": pattern,
-                    "total_hits": 0 if with_total_hits else None,
-                    "results": []}
+            return empty_result(pattern, with_total_hits)
         return self.ranked(pattern, k, method, with_total_hits, terms=terms)
 
     def regexp_expand(self, pattern: str,
@@ -2266,9 +2059,7 @@ class QueryEngine:
         terms = self.regexp_expand(pattern, max_expansions)
         label = f"/{pattern}/"
         if not terms:
-            return {"query": label,
-                    "total_hits": 0 if with_total_hits else None,
-                    "results": []}
+            return empty_result(label, with_total_hits)
         return self.ranked(label, k, method, with_total_hits, terms=terms)
 
     # ------------------------------------------------------ term suggester
@@ -2359,11 +2150,7 @@ class QueryEngine:
         idf_map = self.term_idf(all_terms)
         live = sorted(t for t in all_terms if idf_map.get(t, 0.0) != 0.0)
         if not live:
-            return {
-                "query": None,
-                "total_hits": 0 if want_total else None,
-                "results": [],
-            }
+            return empty_result(None, want_total)
         if sum(self._df_cache.get(t, 0) for t in live) > self.TURBO_MAX_POSTINGS:
             return None
         try:
@@ -2377,11 +2164,7 @@ class QueryEngine:
                 q_docs.append(acc[0])
                 q_scores.append(acc[1])
         if not q_docs:
-            return {
-                "query": None,
-                "total_hits": 0 if want_total else None,
-                "results": [],
-            }
+            return empty_result(None, want_total)
         D = np.concatenate(q_docs)
         S = np.concatenate(q_scores)
         docs_u, inv = np.unique(D, return_inverse=True)
@@ -2389,14 +2172,8 @@ class QueryEngine:
         best = np.zeros(docs_u.size, dtype=np.float64)
         np.maximum.at(best, inv, S)
         score = best + float(tie_breaker) * (tot - best)
-        top = np.lexsort((docs_u, -score))[:k]
-        return {
-            "query": None,
-            "total_hits": int(docs_u.size) if want_total else None,
-            "results": [
-                {"doc_id": int(docs_u[i]), "score": float(score[i])} for i in top
-            ],
-        }
+        return turbo_topk(docs_u, score, k,
+                          int(docs_u.size) if want_total else None)
 
     def dis_max(self, queries: Sequence[str], k: int = 10,
                 tie_breaker: float = 0.0, method: str = "bm25",
@@ -2414,41 +2191,8 @@ class QueryEngine:
             return res
         plan = self.dis_max_plan(queries, tie_breaker, method)
         if plan is None:
-            return {
-                "query": label,
-                "total_hits": 0 if with_total_hits else None,
-                "results": [],
-            }
-        if not with_total_hits:
-            with self._interactive():
-                top = (
-                    plan.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                    .limit(k)
-                    .collect()
-                )
-            return {
-                "query": label,
-                "total_hits": None,
-                "results": [
-                    {"doc_id": r["doc_id"], "score": r["score"]} for r in top
-                ],
-            }
-        obs = Observation()
-        with self._interactive():
-            top = (
-                plan.observe(obs, F.count(F.lit(1)).alias("n"))
-                .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .limit(k)
-                .collect()
-            )
-            total = int(obs.get["n"])
-        return {
-            "query": label,
-            "total_hits": total,
-            "results": [
-                {"doc_id": r["doc_id"], "score": r["score"]} for r in top
-            ],
-        }
+            return empty_result(label, with_total_hits)
+        return self._collect_topk(plan, label, k, with_total_hits)
 
     def constant_score_plan(self, query: str,
                             boost: float = 1.0) -> Optional[DataFrame]:
@@ -2675,26 +2419,19 @@ class QueryEngine:
                 return np.array([], dtype=np.int64)
             return np.unique(np.concatenate(segs))
 
-        def empty():
-            return {
-                "query": None,
-                "total_hits": 0 if want_total else None,
-                "results": [],
-            }
-
         must_acc = []
         for c in must_t:
             a = accum(c)
             if a is None:
-                return empty()
+                return empty_result(None, want_total)
             must_acc.append(a)
         should_acc = [a for a in (accum(c) for c in should_t) if a is not None]
         if msm > len(should_acc):
-            return empty()
+            return empty_result(None, want_total)
         if universe is None:
             segs = [a[0] for a in must_acc + should_acc]
             if not segs:
-                return empty()
+                return empty_result(None, want_total)
             U = np.unique(np.concatenate(segs))
         else:
             U = universe
@@ -2722,16 +2459,8 @@ class QueryEngine:
             nd = member(c)
             if nd.size:
                 keep &= ~np.isin(U, nd, assume_unique=True)
-        docs_u, scores = U[keep], score[keep]
-        top = np.lexsort((docs_u, -scores))[:k]
-        return {
-            "query": None,
-            "total_hits": int(docs_u.size) if want_total else None,
-            "results": [
-                {"doc_id": int(docs_u[i]), "score": float(scores[i])}
-                for i in top
-            ],
-        }
+        return turbo_topk(U[keep], score[keep], k,
+                          int(keep.sum()) if want_total else None)
 
     def bool_search(self, must: Sequence[str] = (),
                     should: Sequence[str] = (),
@@ -2760,36 +2489,7 @@ class QueryEngine:
             res["query"] = label
             return res
         plan = self.bool_plan(must, should, filter_, must_not, msm, method)
-        if not with_total_hits:
-            with self._interactive():
-                top = (
-                    plan.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                    .limit(k)
-                    .collect()
-                )
-            return {
-                "query": label,
-                "total_hits": None,
-                "results": [
-                    {"doc_id": r["doc_id"], "score": r["score"]} for r in top
-                ],
-            }
-        obs = Observation()
-        with self._interactive():
-            top = (
-                plan.observe(obs, F.count(F.lit(1)).alias("n"))
-                .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .limit(k)
-                .collect()
-            )
-            total = int(obs.get["n"])
-        return {
-            "query": label,
-            "total_hits": total,
-            "results": [
-                {"doc_id": r["doc_id"], "score": r["score"]} for r in top
-            ],
-        }
+        return self._collect_topk(plan, label, k, with_total_hits)
 
     def match_plan(self, terms: Sequence[str]) -> DataFrame:
         """Distinct (doc_id, doc_len) matching ANY of the analyzed
@@ -3284,9 +2984,7 @@ class QueryEngine:
         terms = self.mlt_terms(doc_id, max_query_terms)
         label = f"mlt:{doc_id}"
         if not terms:
-            return {"query": label,
-                    "total_hits": 0 if with_total_hits else None,
-                    "results": []}
+            return empty_result(label, with_total_hits)
         return self.ranked(
             label, k, method, with_total_hits,
             terms=terms, exclude_docs=[doc_id],

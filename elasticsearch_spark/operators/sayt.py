@@ -48,7 +48,7 @@ from dataclasses import replace
 from typing import Dict, Optional, Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -229,27 +229,4 @@ class SearchAsYouTypeEngine:
         asc) tie-break; total_hits = docs matching in ANY subfield."""
         plan = self.plan(query, boosts, max_expansions, method, operator,
                          minimum_should_match)
-        if plan is None:
-            return {
-                "query": query,
-                "total_hits": 0 if with_total_hits else None,
-                "results": [],
-            }
-        any_eng = next(iter(self.mm.engines.values()))
-        if with_total_hits:
-            obs = Observation()
-            plan = plan.observe(obs, F.count(F.lit(1)).alias("n"))
-        with any_eng._interactive():
-            top = (
-                plan.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .limit(k)
-                .collect()
-            )
-            total = int(obs.get["n"]) if with_total_hits else None
-        return {
-            "query": query,
-            "total_hits": total,
-            "results": [
-                {"doc_id": r["doc_id"], "score": r["score"]} for r in top
-            ],
-        }
+        return self.mm._collect(plan, query, k, with_total_hits)

@@ -38,6 +38,7 @@ from pyspark.sql import types as T
 from ..functions import codec
 from ..functions.tokenizer import preprocess_query
 from ..functions.udfs import term_bucket
+from .query import turbo_topk
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -506,9 +507,6 @@ class WandEngine:
             scored_rids.add(rid)
             docs_all.append(d)
             scores_all.append(s)
-        cand_d = np.concatenate(docs_all)
-        cand_s = np.concatenate(scores_all)
-        order = np.lexsort((cand_d, -cand_s))[:k]
         total = None
         if with_total_hits:
             # docs partition by range, so the exact count is the sum of
@@ -519,9 +517,9 @@ class WandEngine:
             total = int(sum(len(d) for d in docs_all)) + sum(
                 range_doc_count(rid) for rid in by_ub if rid not in scored_rids
             )
-        return [
-            {"doc_id": int(cand_d[i]), "score": float(cand_s[i])} for i in order
-        ], total
+        top = turbo_topk(np.concatenate(docs_all), np.concatenate(scores_all),
+                         k, total)
+        return top["results"], total
 
     def topk(self, query: str, k: int = 10, with_total_hits: bool = False) -> dict:
         """Reference result shape; ``with_total_hits`` adds the exact

@@ -238,3 +238,36 @@ def test_top_hits_by_matches_recompute(spark, turbo, plan_eng, mid_terms):
         for i, (_s, d) in enumerate(lst[:2], start=1):
             want.append((attr, i, d))
     assert got == sorted(want)
+
+
+@pytest.mark.parametrize(
+    "entry", ["ranked", "ranked_after", "match_search", "dis_max", "bool_search"]
+)
+def test_plan_tier_without_total_hits(plan_eng, mid_terms, entry):
+    """The plan-tier top-k with ``with_total_hits=False`` (turbo=False
+    engine, so the Spark collect runs) returns exactly the page of the
+    counted call, with ``total_hits`` None."""
+    q1 = " ".join(mid_terms[:2])
+    q2 = " ".join(mid_terms[1:])
+    first = plan_eng.ranked(q1, k=3)["results"]
+    cursor = (first[-1]["score"], first[-1]["doc_id"])
+    call = {
+        "ranked": lambda wt: plan_eng.ranked(q1, k=15, with_total_hits=wt),
+        "ranked_after": lambda wt: plan_eng.ranked(
+            q1, k=15, search_after=cursor, with_total_hits=wt
+        ),
+        "match_search": lambda wt: plan_eng.match_search(
+            q2, k=15, minimum_should_match=2, with_total_hits=wt
+        ),
+        "dis_max": lambda wt: plan_eng.dis_max(
+            [q1, q2], k=15, tie_breaker=0.3, with_total_hits=wt
+        ),
+        "bool_search": lambda wt: plan_eng.bool_search(
+            must=[q1], should=[q2], k=15, with_total_hits=wt
+        ),
+    }[entry]
+    counted, bare = call(True), call(False)
+    assert counted["total_hits"] > 0 and counted["results"]
+    assert bare["total_hits"] is None
+    assert bare["query"] == counted["query"]
+    assert bare["results"] == counted["results"]

@@ -187,23 +187,6 @@ def test_blocks_roundtrip(spark, index_dir, oracle_index):
         assert sorted(got[term]) == plist, term
 
 
-@pytest.mark.parametrize("query", RANKED_QUERIES)
-def test_fused_plan_rank_identity(engine, oracle_index, query):
-    """The single-job broadcast-join plan must match the driver-lookup
-    plan (and hence the oracle) exactly."""
-    want = oracle_index.query(query, k=10)
-    plan = engine.score_plan_fused(query)
-    if plan is None:
-        assert want["total_hits"] == 0 or want["results"] == []
-        return
-    got = (
-        plan.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(10).collect()
-    )
-    assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want["results"]], query
-    for g, w in zip(got, want["results"]):
-        assert abs(g["score"] - w["score"]) < 1e-9, query
-
-
 def test_tfidf_x3_requires_variant_index(engine):
     with pytest.raises(ValueError):
         engine.tfidf_x3_plan("machine learning")
@@ -351,6 +334,33 @@ def test_turbo_lru_never_evicts_current_call_terms(spark, index_dir):
     assert eng._term_cache_rows == sum(
         sl.rows for sl in eng._term_postings_cache.values()
     )
+
+
+def test_point_read_term_slices_own_their_memory(spark, index_dir):
+    """A multi-term cache miss reads every term in ONE pyarrow pass, but
+    each term's cached arrays must own their memory — views into the
+    shared read would keep the whole read alive while any sibling term
+    stays cached, so evicting a term would free nothing and the cache
+    ceiling would undercount the RAM actually held.  (Disjoint views of
+    one buffer do not overlap, so ``shares_memory`` alone cannot see
+    them; ``owndata`` can.)"""
+    import numpy as np
+
+    eng = QueryEngine(spark, index_dir, turbo=True)
+    a, b = [
+        r["term"]
+        for r in spark.read.parquet(os.path.join(index_dir, "dictionary"))
+        .orderBy(F.col("df").desc(), F.col("term"))
+        .limit(2)
+        .collect()
+    ]
+    sa, sb = eng._term_slices([a, b], "bm25")  # one two-term miss
+    assert sa.doc.size and sb.doc.size
+    for x in (sa.doc, sa.tf, sa.dl):
+        for y in (sb.doc, sb.tf, sb.dl):
+            assert not np.shares_memory(x, y)
+    for arr in (sa.doc, sa.tf, sa.dl, sb.doc, sb.tf, sb.dl):
+        assert arr.flags.owndata
 
 
 def test_turbo_zero_budget_results_identical(spark, index_dir):
