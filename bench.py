@@ -9,8 +9,10 @@ Measures, at ``local[$SPARK_GRAFT_CPUS]`` over ``$SPARK_GRAFT_SF_DIR``:
    like the reference (boolean vs ranked);
 3. the headline documents-table queries from the driver gate.
 
-Prints ONE JSON line: ``{"metric", "value" (total sec), "unit": "sec",
-"queries": {name: sec}, "sf", ...extras}``.
+Prints two JSON lines: the full one, ``{"metric", "value" (total
+sec), "unit": "sec", "queries": {name: sec}, "sf", ...extras}``, then a
+compact headline (``metric``, ``value``, ``unit``, warm p50,
+``qps_batch``) that fits a short tail capture.
 
 Protocol mirrors the reference harness: 3x10 warmup queries before
 measurement (``plot_ab_compression.py:47-52``), percentiles via numpy
@@ -204,11 +206,9 @@ def build_and_query(spark, corpus_path: str, tag: str, full: bool = True) -> dic
     wand_ms = wand_loop()
     wand_warm_ms = wand_loop()
 
-    # multi-field WAND receipt: per-field block-max pruning for
-    # multi_match (title^2/text over an 8k-doc slice, 256-doc ranges so
-    # the UB prune has ranges to skip) — reports how many block runs
-    # the query DECODED vs the exhaustive plan's total, the number the
-    # pruning exists to shrink
+    # multi-field WAND receipt: multi_match through MultiMatchWand
+    # (title^2/text over an 8k-doc slice, 256-doc ranges) — reports the
+    # block runs the queries touch and the latency
     mm_wand_stats = _mm_wand_receipt(spark, raw, all_ranked[:5])
 
     # batch path: all ranked queries in one job (the throughput shape)
@@ -241,7 +241,7 @@ def build_and_query(spark, corpus_path: str, tag: str, full: bool = True) -> dic
         "qps_sequential_warm": round(len(queries) / (lat_warm_ms.sum() / 1000), 1),
         "qps_batch": round(len(all_ranked) / batch_s, 1),
         # turbo-tier memory receipt: Python-driver RSS around the warm
-        # loop + the LRU caches' own accounting vs their ceilings
+        # loop + the LRU cache's own accounting vs its ceiling
         # (tests/test_spark_engine.py pins the budget in CI)
         "driver_rss_mb": {
             "before_warm_loop": round(rss_before_warm, 1),
@@ -249,8 +249,6 @@ def build_and_query(spark, corpus_path: str, tag: str, full: bool = True) -> dic
             "warm_loop_growth": round(rss_after_warm - rss_before_warm, 1),
             "term_cache_rows": int(getattr(engine, "_term_cache_rows", 0)),
             "term_cache_ceiling": int(engine.TURBO_CACHE_MAX_POSTINGS),
-            "wand_cache_bytes": int(getattr(wand, "_block_cache_bytes", 0)),
-            "wand_cache_ceiling": int(wand.TURBO_CACHE_MAX_BYTES),
         },
     }
 
@@ -259,142 +257,6 @@ def _is_boolean(q: str) -> bool:
     from elasticsearch_spark.functions.tokenizer import is_boolean_query
 
     return is_boolean_query(q)
-
-
-# ------------------------------------------------------------ A/B vs prev round
-PREV_TAG = os.environ.get("SPARK_GRAFT_AB_TAG", "r4")
-
-
-def _load_prev_package(tag: str):
-    """Extract ``elasticsearch_spark`` at git tag ``tag`` under the alias
-    module name ``es_spark_<tag>`` (every intra-package import is
-    relative, so the rename is drop-in) and zip it for executors."""
-    import io
-    import subprocess
-    import tarfile
-    import tempfile
-    import zipfile
-
-    alias = f"es_spark_{tag}"
-    root = tempfile.mkdtemp(prefix=f"ab_{tag}_")
-    out = subprocess.run(
-        ["git", "-C", REPO, "archive", tag, "elasticsearch_spark"],
-        capture_output=True, check=True,
-    )
-    with tarfile.open(fileobj=io.BytesIO(out.stdout)) as tf:
-        tf.extractall(root)
-    os.rename(os.path.join(root, "elasticsearch_spark"), os.path.join(root, alias))
-    zip_path = os.path.join(root, alias + ".zip")
-    with zipfile.ZipFile(zip_path, "w") as z:
-        for r, _d, files in os.walk(os.path.join(root, alias)):
-            for fn in files:
-                p = os.path.join(r, fn)
-                z.write(p, os.path.relpath(p, root))
-    return root, alias, zip_path
-
-
-def _ab_run(spark, corpus_path: str, tag: str, pkg: str) -> dict:
-    """One build + query-latency measurement driven by the HEAD harness
-    but executing ``pkg``'s engine code (pkg = the live package or the
-    aliased previous-round package)."""
-    import importlib
-
-    B = importlib.import_module(pkg + ".operators.build")
-    Q = importlib.import_module(pkg + ".operators.query")
-
-    idx_dir = f"/tmp/es_spark_bench_idx_{tag}"
-    shutil.rmtree(idx_dir, ignore_errors=True)
-    raw = spark.read.parquet(corpus_path)
-    t0 = time.time()
-    manifest = B.IndexBuilder(
-        spark, idx_dir, B.IndexConfig(n_buckets=32, doc_range_bits=11)
-    ).build(raw)
-    build_s = time.time() - t0
-    n_docs = manifest["stats"]["doc_count"]
-
-    with open(os.path.join(REPO, "fixtures", "queryset.json")) as f:
-        queries = json.load(f)["queries"]
-    engine = Q.QueryEngine(spark, idx_dir)
-    for q in queries[:10]:  # one warmup round
-        engine.query(q, k=10)
-    lat = []
-    for q in queries:
-        t = time.time()
-        if _is_boolean(q):
-            engine.boolean_topk(q, k=10)
-        else:
-            engine.ranked(q, k=10, with_total_hits=False)
-        lat.append(time.time() - t)
-    lat_ms = np.array(lat) * 1000
-    ranked = [q for q in queries if not _is_boolean(q)]
-    t = time.time()
-    engine.batch_ranked(ranked, k=10)
-    batch_s = time.time() - t
-    return {
-        "build_seconds": round(build_s, 2),
-        "docs_per_sec": round(n_docs / build_s, 1),
-        "p50_ms": round(float(np.percentile(lat_ms, 50)), 1),
-        "p95_ms": round(float(np.percentile(lat_ms, 95)), 1),
-        "qps_batch": round(len(ranked) / batch_s, 1),
-    }
-
-
-def run_ab(spark) -> dict:
-    """Interleaved same-session A/B of HEAD vs the previous round's tag.
-
-    The r1->r2 driver bench totals moved ±16% on queries whose code was
-    unchanged — this host shows 3-5x contention windows, so a number is
-    only meaningful relative to a same-session interleaved control.
-    Each trial runs <prev> then HEAD back-to-back in the SAME JVM on the
-    same corpus (contention hits both); best-of-N per version is the
-    comparison.  A slice of the unchanged headline gate queries is also
-    A/B'd under both code versions as a pure-contention control (same
-    code, so any spread there is host noise, not regression)."""
-    try:
-        root, alias, zip_path = _load_prev_package(PREV_TAG)
-    except Exception as e:  # no tag in a fresh clone etc. — skip, don't fail
-        return {"error": f"prev package unavailable: {e}"}
-    sys.path.insert(0, root)
-    spark.sparkContext.addPyFile(zip_path)
-
-    trials = int(os.environ.get("SPARK_GRAFT_AB_TRIALS", "2"))
-    ab_docs = int(os.environ.get("SPARK_GRAFT_AB_DOCS", "10000"))
-    corpus = ensure_corpus(ab_docs)
-    runs: dict = {PREV_TAG: [], "head": []}
-    ctl: dict = {PREV_TAG: [], "head": []}
-    import importlib
-
-    for _t in range(trials):
-        for name, pkg in ((PREV_TAG, alias), ("head", "elasticsearch_spark")):
-            runs[name].append(_ab_run(spark, corpus, f"ab_{name}", pkg))
-            eq_mod = importlib.import_module(pkg + ".plans.entry_queries")
-            c = {}
-            for qname in ("dictionary", "doc_stats"):
-                t0 = time.time()
-                eq_mod.QUERIES[qname](spark, SF_DIR).collect()
-                c[qname] = round(time.time() - t0, 3)
-            ctl[name].append(c)
-
-    out: dict = {"tag": PREV_TAG, "trials": trials, "ab_docs": ab_docs}
-    for name in (PREV_TAG, "head"):
-        best = {
-            "build_seconds": min(r["build_seconds"] for r in runs[name]),
-            "docs_per_sec": max(r["docs_per_sec"] for r in runs[name]),
-            "p50_ms": min(r["p50_ms"] for r in runs[name]),
-            "p95_ms": min(r["p95_ms"] for r in runs[name]),
-            "qps_batch": max(r["qps_batch"] for r in runs[name]),
-            "trials": runs[name],
-            "headline_control": {
-                q: min(c[q] for c in ctl[name]) for q in ctl[name][0]
-            },
-        }
-        out[name] = best
-    out["speedup_head_vs_prev"] = {
-        "build": round(out[PREV_TAG]["build_seconds"] / out["head"]["build_seconds"], 3),
-        "p50": round(out[PREV_TAG]["p50_ms"] / out["head"]["p50_ms"], 3),
-        "qps_batch": round(out["head"]["qps_batch"] / out[PREV_TAG]["qps_batch"], 3),
-    }
-    return out
 
 
 def main():
@@ -414,9 +276,6 @@ def main():
         per_query[name] = round(time.time() - t0, 3)
 
     extras = {}
-    if os.environ.get("SPARK_GRAFT_AB", "1") != "0":
-        extras["ab_vs_prev"] = run_ab(spark)
-
     if os.environ.get("SPARK_GRAFT_SCALING") == "1":
         spark.stop()
         extras["scaling"] = run_scaling(corpus_path)
@@ -434,15 +293,22 @@ def main():
     }
     out.update(extras)
     print(json.dumps(out))
+    # compact headline LAST: the full line overflows a short tail capture
+    print(json.dumps({
+        "metric": out["metric"],
+        "value": out["value"],
+        "unit": out["unit"],
+        "query_ms_warm_p50": core["query_ms_warm"]["p50"],
+        "qps_batch": core["qps_batch"],
+    }))
 
 
 def _mm_wand_receipt(spark, raw, queries) -> dict:
     """Build a small two-field index (title = first 3 tokens of text,
-    the multi-field gate recipe) and serve ``multi_match`` through the
-    multi-field block-max WAND path (operators/multifield.py
-    MultiMatchWand), reporting decoded vs total block runs — the
-    postings-touched receipt the pruning exists for — plus rank
-    identity with the exhaustive plan tier on the first query."""
+    the multi-field gate recipe) and serve ``multi_match`` through
+    ``MultiMatchWand`` (operators/multifield.py), reporting the block
+    runs touched — exhaustive scoring decodes all of them — plus rank
+    identity with the plan tier on the first query."""
     from pyspark.sql import functions as F
 
     from elasticsearch_spark.operators.build import IndexConfig

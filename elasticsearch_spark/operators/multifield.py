@@ -643,29 +643,25 @@ class MultiMatchEngine:
         field_lens = []
         for fname, boost in boosts.items():
             eng = self.engines[fname]
-            if not eng.turbo:
-                return None
             eng.term_idf(uniq)  # populate the live df cache
-            if (
-                sum(eng._df_cache.get(t, 0) for t in uniq)
-                > eng.TURBO_MAX_POSTINGS
-            ):
+            # ONE batched point read per field through the hot-term
+            # cache, codes repeated over the per-term slices — the
+            # _turbo_scored_rows recipe
+            got = eng._turbo_slices(uniq)
+            if got is None:
                 return None
+            slices = list(got.values())
+            code_parts.append(np.repeat(
+                np.arange(len(uniq), dtype=np.int64),
+                [sl.sdoc.size for sl in slices],
+            ))
+            doc_parts.append(np.concatenate([sl.sdoc for sl in slices]))
+            tf = np.concatenate([
+                sl.tf if sl.pos is None else sl.tf[sl.pos]
+                for sl in slices
+            ])
+            wtf_parts.append(tf.astype(np.float64) * float(boost))
             try:
-                # ONE batched point read per field through the hot-term
-                # cache, codes repeated over the per-term slices — the
-                # _turbo_scored_rows recipe
-                slices = eng._term_slices(uniq)
-                code_parts.append(np.repeat(
-                    np.arange(len(uniq), dtype=np.int64),
-                    [sl.sdoc.size for sl in slices],
-                ))
-                doc_parts.append(np.concatenate([sl.sdoc for sl in slices]))
-                tf = np.concatenate([
-                    sl.tf if sl.pos is None else sl.tf[sl.pos]
-                    for sl in slices
-                ])
-                wtf_parts.append(tf.astype(np.float64) * float(boost))
                 field_lens.append((float(boost), eng._turbo_doc_lens()))
             except Exception:
                 return None
@@ -853,65 +849,21 @@ def _meta_config(meta: dict) -> IndexConfig:
 
 
 class MultiMatchWand:
-    """Block-max WAND for ``multi_match`` over a multi-field index —
-    the >cutover-scale serving path for best_fields / most_fields
-    (task: prune postings work instead of materializing full per-field
-    hit sets like the plan/turbo tiers).
-
-    Upper-bound algebra over each field's per-doc-range block metadata
-    (``max_impact`` per (term, range), the single-field WAND phase-0
-    inputs — ``operators/wand.py``):
-
-    * per field:   UB_f(range) = Σ_t boost_f · w_t,f · max_impact ·
-      ub_scale (exactly the single-field bound)
-    * most_fields: UB(range)   = Σ_f UB_f(range)
-    * best_fields: score(d) = (1−tb)·max_f s_f(d) + tb·Σ_f s_f(d)
-      ≤ (1−tb)·max_f UB_f + tb·Σ_f UB_f = UB(range)  (0 ≤ tb ≤ 1)
-
-    Then the standard lossless two-phase dance: score the top-S UB
-    ranges exactly (per-field dense-array decode → combine per doc
-    slot), θ = k-th best, decode only ranges with UB ≥ θ.  Ranges
-    below θ cannot place a doc in the top-k because UB bounds every
-    per-doc combined score.  Results are identical to
-    ``MultiMatchEngine.multi_match_plan`` (pytest-enforced).
-
-    The distributed twin is structural: phase 0 is the same metadata
-    aggregation per field unioned before the groupBy(range_id), and the
-    kernel is per-field ``applyInPandas`` arrays combined per range —
-    this driver tier exists for the same reason as
-    ``WandEngine._turbo_topk`` (the point read IS the latency at
-    interactive scale) and doubles as the receipt generator
-    (``stats["blocks_decoded"] / ["blocks_total"]`` = postings work
-    actually done vs the exhaustive plan)."""
-
-    SEED_RANGES = 4
+    """best_fields / most_fields ``multi_match`` top-k under the WAND
+    entry point's contract: no total hits, optional work ``stats``.  It
+    serves from :meth:`MultiMatchEngine.multi_match` — the per-field
+    turbo tier below each field engine's cutover, the distributed plan
+    above it — so its results ARE that engine's."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
-        from .wand import WandEngine
-
-        self.spark = spark
-        self.index_dir = index_dir
-        meta = _load_meta(index_dir)
-        self.fields: List[str] = list(meta["fields"])
-        self.wands = {
-            f: WandEngine(spark, os.path.join(index_dir, "fields", f))
-            for f in self.fields
-        }
-        bits = {w.range_bits for w in self.wands.values()}
-        if len(bits) != 1:
-            raise ValueError(f"field sub-indexes disagree on range_bits: {bits}")
-        self.range_bits = bits.pop()
+        self.engine = MultiMatchEngine(spark, index_dir)
+        self.fields: List[str] = self.engine.fields
 
     def topk(self, query: str, k: int = 10, fields: FieldsArg = None,
              match_type: str = "best_fields", tie_breaker: float = 0.0,
              with_stats: bool = False) -> dict:
-        """Reference result shape (+ ``stats`` when asked): rank- and
-        score-identical to the multi_match plan tier for
-        best_fields/most_fields."""
-        import numpy as np
-
-        from ..functions import codec
-
+        """Reference result shape (+ ``stats`` when asked, see
+        :meth:`_stats`)."""
         if match_type not in ("best_fields", "most_fields"):
             raise ValueError(
                 f"multi-field WAND serves best_fields/most_fields, "
@@ -920,126 +872,57 @@ class MultiMatchWand:
         if not 0.0 <= tie_breaker <= 1.0:
             raise ValueError("tie_breaker must be in [0, 1]")
         boosts = parse_fields(fields, default=self.fields)
-        fnames = [f for f in boosts if f in self.wands]
-        if len(fnames) != len(boosts):
-            missing = set(boosts) - set(self.wands)
+        missing = set(boosts) - set(self.engine.engines)
+        if missing:
             raise KeyError(f"fields {sorted(missing)} are not indexed")
-        # per-field weights (idf × multiplicity × boost) + block rows
-        field_rows: Dict[str, Dict[int, list]] = {}
-        field_w: Dict[str, Dict[str, float]] = {}
-        ub_f: Dict[str, Dict[int, float]] = {}
-        blocks_total = 0
-        for f in fnames:
-            w = self.wands[f]._weights(query)
-            if not w:
-                continue
-            rows = self.wands[f]._term_block_rows(sorted(w))
-            blocks_total += len(rows)
-            by_range: Dict[int, list] = {}
-            ubf: Dict[int, float] = {}
-            boost = float(boosts[f])
-            for row in rows:
-                scale, term, rid, mi = row[0], row[1], row[2], row[3]
-                ubf[rid] = ubf.get(rid, 0.0) + boost * w[term] * mi * scale
-                by_range.setdefault(rid, []).append(row)
-            for group in by_range.values():
-                group.sort(key=lambda x: x[1])
-            field_rows[f] = by_range
-            field_w[f] = {t: boost * v for t, v in w.items()}
-            ub_f[f] = ubf
-        empty = empty_result(query, False)
-        if not field_rows:
-            if with_stats:
-                empty["stats"] = {"ranges_scored": 0, "ranges_total": 0,
-                                  "blocks_decoded": 0, "blocks_total": 0}
-            return empty
-        # combined per-range UB
-        all_rids = set()
-        for ubf in ub_f.values():
-            all_rids.update(ubf)
-        if not all_rids:
-            # live weights but zero block rows (e.g. a segment without
-            # blocks): nothing to score — without this guard the final
-            # np.concatenate([]) raises
-            if with_stats:
-                empty["stats"] = {"ranges_scored": 0, "ranges_total": 0,
-                                  "blocks_decoded": 0,
-                                  "blocks_total": blocks_total}
-            return empty
-        tb = float(tie_breaker)
-        ub: Dict[int, float] = {}
-        for rid in all_rids:
-            vals = [ub_f[f].get(rid, 0.0) for f in field_rows]
-            if match_type == "most_fields":
-                ub[rid] = sum(vals)
-            else:
-                ub[rid] = (1.0 - tb) * max(vals) + tb * sum(vals)
-
-        blocks_decoded = 0
-
-        def score_range(rid):
-            nonlocal blocks_decoded
-            base = rid << self.range_bits
-            size = 1 << self.range_bits
-            per_field = []
-            for f, by_range in field_rows.items():
-                rows_r = by_range.get(rid)
-                if not rows_r:
-                    continue
-                wand = self.wands[f]
-                tomb = (
-                    np.asarray(sorted(wand._tombstones), dtype=np.int64)
-                    if wand._tombstones else np.empty(0, dtype=np.int64)
-                )
-                arr = np.zeros(size, dtype=np.float64)
-                for scale, term, _r, _mi, db, tbx, lb in rows_r:
-                    blocks_decoded += 1
-                    d, t, l = codec.decode_block(db, tbx, lb, wand.codec)
-                    ok = l > 0
-                    if tomb.size:
-                        ok &= ~np.isin(d, tomb)
-                    imp = codec.bm25_impact(
-                        t[ok], l[ok], wand.avg_doc_len, wand.k1, wand.b
-                    )
-                    np.add.at(arr, d[ok] - base, field_w[f][term] * imp)
-                per_field.append(arr)
-            if not per_field:
-                e = np.empty(0, dtype=np.int64)
-                return e, np.empty(0, dtype=np.float64)
-            stack = np.stack(per_field)
-            tot = stack.sum(axis=0)
-            if match_type == "most_fields":
-                comb = tot
-            else:
-                best = stack.max(axis=0)
-                comb = best + tb * (tot - best)
-            nz = np.nonzero(comb)[0]
-            return nz + base, comb[nz]
-
-        by_ub = sorted(ub, key=lambda r: -ub[r])
-        docs_all, scores_all = [], []
-        n_scored = 0
-        for rid in by_ub[: self.SEED_RANGES]:
-            d, s = score_range(rid)
-            n_scored += 1
-            docs_all.append(d)
-            scores_all.append(s)
-        cand_s = np.concatenate(scores_all) if scores_all else np.empty(0)
-        theta0 = np.sort(cand_s)[::-1][k - 1] if cand_s.size >= k else 0.0
-        for rid in by_ub[self.SEED_RANGES:]:
-            if ub[rid] < theta0:
-                continue
-            d, s = score_range(rid)
-            n_scored += 1
-            docs_all.append(d)
-            scores_all.append(s)
-        out = turbo_topk(np.concatenate(docs_all), np.concatenate(scores_all),
-                         k, None, query)
+        out = self.engine.multi_match(
+            query, k, fields=boosts, match_type=match_type,
+            tie_breaker=tie_breaker, with_total_hits=False,
+        )
         if with_stats:
-            out["stats"] = {
-                "ranges_scored": n_scored,
-                "ranges_total": len(ub),
-                "blocks_decoded": blocks_decoded,
-                "blocks_total": blocks_total,
-            }
+            out["stats"] = self._stats(query, boosts)
         return out
+
+    def _stats(self, query: str, boosts: Dict[str, float]) -> dict:
+        """Postings work of the query: the (field, term, doc-range) runs
+        its live terms touch — one block row each on an index without
+        updates — and the doc ranges they span.  Scoring is exhaustive,
+        so decoded == total and scored == total.  Counted from the
+        cached slices when every field is under the turbo cutover, else
+        in one Spark job."""
+        import numpy as np
+
+        fields = []
+        for f in boosts:
+            eng = self.engine.engines[f]
+            idf = eng.term_idf(eng._terms(query))
+            live = sorted(t for t, v in idf.items() if v != 0.0)
+            if live:
+                fields.append((f, eng, live, eng.stats["config"]["doc_range_bits"]))
+        slices = [eng._turbo_slices(live) for _f, eng, live, _b in fields]
+        if all(sl is not None for sl in slices):
+            runs = [
+                np.unique(sl.doc >> bits)
+                for per_term, (_f, _e, _l, bits) in zip(slices, fields)
+                for sl in per_term.values()
+            ]
+            n_runs = sum(r.size for r in runs)
+            n_ranges = np.unique(np.concatenate(runs)).size if runs else 0
+        else:
+            plans = [
+                eng._pruned_postings(live).select(
+                    F.lit(f).alias("field"), "term",
+                    F.shiftright("doc_id", bits).alias("rid"),
+                )
+                for f, eng, live, bits in fields
+            ]
+            u = plans[0]
+            for p in plans[1:]:
+                u = u.unionByName(p)
+            row = u.agg(
+                F.countDistinct("field", "term", "rid").alias("runs"),
+                F.countDistinct("rid").alias("ranges"),
+            ).collect()[0]
+            n_runs, n_ranges = int(row["runs"]), int(row["ranges"])
+        return {"ranges_scored": n_ranges, "ranges_total": n_ranges,
+                "blocks_decoded": n_runs, "blocks_total": n_runs}

@@ -241,7 +241,9 @@ class QueryEngine:
         self._universe_cache = None  # live doc-id array (boolean NOT)
         self._doc_len_cache = None   # live (doc_id, doc_len) arrays
         if hasattr(self, "_tfidf"):
-            del self._tfidf  # lazy re-read after index update
+            # the engine_tfidf_x3 gate caches the variant table here;
+            # lazy re-read after index update
+            del self._tfidf
         if hasattr(self, "_blocks_df"):
             del self._blocks_df
         try:
@@ -365,6 +367,31 @@ class QueryEngine:
             _t, old = cache.popitem(last=False)
             self._term_cache_rows -= old.rows
         return out
+
+    def _turbo_admits(self, terms: Sequence[str], extra: int = 0) -> bool:
+        """The turbo cutover: the tier is on and Σ live df over the
+        distinct ``terms`` plus ``extra`` rows (boolean NOT's doc
+        universe) is within TURBO_MAX_POSTINGS.  Live df comes from
+        ``_df_cache``, so callers run :meth:`term_idf` over ``terms``
+        first."""
+        return self.turbo and (
+            sum(self._df_cache.get(t, 0) for t in terms) + extra
+            <= self.TURBO_MAX_POSTINGS
+        )
+
+    def _turbo_slices(self, terms: Sequence[str],
+                      method: Optional[str] = None,
+                      extra: int = 0) -> Optional[Dict[str, "TermSlice"]]:
+        """The ONE turbo admission gate: term -> cached slice (with
+        ``method``'s impacts) for ``terms``, or None when
+        :meth:`_turbo_admits` declines or the point read fails — the
+        caller then falls back to the distributed plan."""
+        if not self._turbo_admits(terms, extra):
+            return None
+        try:
+            return dict(zip(terms, self._term_slices(terms, method)))
+        except Exception:
+            return None
 
     def _impact(self, sl: "TermSlice", method: str):
         """Per-row BM25/TF-IDF impact (idf-free) over a slice's
@@ -492,12 +519,10 @@ class QueryEngine:
             # blended-idf callers: the budget check needs THIS index's
             # live df — populate the cache (cheap driver point lookup)
             self.term_idf(uniq)
-        if sum(self._df_cache.get(t, 0) for t in uniq) > self.TURBO_MAX_POSTINGS:
+        got = self._turbo_slices(uniq, method)
+        if got is None:
             return None
-        try:
-            slices = self._term_slices(uniq, method)
-        except Exception:
-            return None
+        slices = list(got.values())
         lens = [sl.sdoc.size for sl in slices]
         if not sum(lens):
             return empty
@@ -559,7 +584,7 @@ class QueryEngine:
                       filter_docs=None,
                       ) -> Optional[dict]:
         """Serve a ranked query entirely on the driver when the candidate
-        slice is small (Σ live df ≤ TURBO_MAX_POSTINGS): pyarrow pruned
+        slice is small (:meth:`_turbo_admits`): pyarrow pruned
         read + vectorized numpy scoring, zero Spark jobs.  Returns None
         when not applicable — the caller falls back to the distributed
         plan.  Result values are identical to the plan path (same
@@ -1040,16 +1065,12 @@ class QueryEngine:
         if exp:
             uniq_exp = sorted(set(exp))
             self.term_idf(uniq_exp)  # populate the live df cache
-            if (
-                sum(self._df_cache.get(t, 0) for t in uniq_exp)
-                > self.TURBO_MAX_POSTINGS
-            ):
+            slices = self._turbo_slices(uniq_exp)
+            if slices is None:
                 return None
-            try:
-                slices = self._term_slices(uniq_exp)
-            except Exception:
-                return None
-            pdocs = np.unique(np.concatenate([sl.sdoc for sl in slices]))
+            pdocs = np.unique(
+                np.concatenate([sl.sdoc for sl in slices.values()])
+            )
         all_doc = np.concatenate([doc, pdocs])
         if all_doc.size == 0:
             return empty_result(query, want_total)
@@ -1170,58 +1191,6 @@ class QueryEngine:
                 F.col("doc_id"), F.lit(0.0).alias("score")
             ).limit(0)
         return plan.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-
-    # ------------------------------------------------------ x=3 variant
-    def tfidf_x3_plan(self, query: str) -> Optional[DataFrame]:
-        """Scoring plan over the x=3 precomputed-score postings (index
-        built with ``store_tfidf=True``): the per-posting score
-        ``(tf/dl)*ln(N/df)`` was computed at build time, so the query
-        plan is just pruned-scan -> sum per doc — no idf lookup, no
-        arithmetic (reference ``plot_c_info_type.py:64-76``)."""
-        self._refresh_if_stale()
-        if not self.stats["config"].get("store_tfidf"):
-            raise ValueError("index was not built with store_tfidf=True")
-        if self._manifest.get("delta_segments") or self._manifest.get("dict_deltas"):
-            # the variant table bakes N and df into its scores at
-            # build/compaction time; delta-segment docs are absent and
-            # live N/df drift is not reflected until compact() refreshes
-            # it — warn instead of silently serving a stale corpus view
-            import warnings
-
-            warnings.warn(
-                "tfidf_x3 serves the BASE variant table only: pending delta "
-                "segments are not represented until compact() refreshes it",
-                stacklevel=2,
-            )
-        if not hasattr(self, "_tfidf"):
-            self._tfidf = self.spark.read.parquet(
-                os.path.join(self.index_dir, "tfidf")
-            )
-        terms = self._terms(query)
-        if not terms:
-            return None
-        from collections import Counter
-
-        counts = Counter(terms)
-        uniq = sorted(counts)
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in uniq})
-        mult_items: list = []
-        for t in uniq:
-            mult_items += [F.lit(t), F.lit(float(counts[t]))]
-        mult_col = F.create_map(*mult_items)[F.col("term")]
-        from .reader import filter_tombstones
-
-        p = filter_tombstones(
-            self._tfidf.filter(
-                F.col("bucket").isin(buckets) & F.col("term").isin(uniq)
-            ),
-            self._tombstones,
-        )
-        return (
-            p.withColumn("score", F.col("score") * mult_col)
-            .groupBy("doc_id")
-            .agg(F.sum("score").alias("score"))
-        )
 
     # -------------------------------------------------------------- phrase
     def _positional_term_postings(self, term: str) -> DataFrame:
@@ -1379,7 +1348,7 @@ class QueryEngine:
         if any(not s for s in live_slots):
             return empty_result(None)
         uniq = sorted({t for s in live_slots for t in s})
-        if sum(self._df_cache.get(t, 0) for t in uniq) > self.TURBO_MAX_POSTINGS:
+        if not self._turbo_admits(uniq):
             return None
         try:
             import numpy as np
@@ -1724,27 +1693,24 @@ class QueryEngine:
         )
         terms = sorted({t for t in rpn if t not in ("AND", "OR", "NOT")})
         self.term_idf(terms)  # populate the df cache (live, signed)
-        est = sum(self._df_cache.get(t, 0) for t in terms)
         needs_universe = "NOT" in rpn
-        if needs_universe:
-            est += self.doc_count
-        if est > self.TURBO_MAX_POSTINGS:
+        slices = self._turbo_slices(
+            terms, extra=self.doc_count if needs_universe else 0
+        )
+        if slices is None:
             return None
         import numpy as np
 
         empty = np.empty(0, dtype=np.int64)
-        try:
-            # sorted-unique doc-id array per term: postings rows are
-            # unique per (term, doc)
-            term_arrays = {
-                t: np.sort(sl.doc)
-                for t, sl in zip(terms, self._term_slices(terms))
-            }
-            universe = empty
-            if needs_universe:
+        # sorted-unique doc-id array per term: postings rows are unique
+        # per (term, doc)
+        term_arrays = {t: np.sort(sl.doc) for t, sl in slices.items()}
+        universe = empty
+        if needs_universe:
+            try:
                 universe = self._doc_universe()
-        except Exception:
-            return None
+            except Exception:
+                return None
 
         # numpy set algebra over sorted-unique arrays, mirroring
         # evaluate_rpn_df (NOT pops one operand; missing operand = empty)
@@ -1882,11 +1848,8 @@ class QueryEngine:
         out: Dict[str, list] = {q: [] for q in queries}
         if not live:
             return out
-        if sum(self._df_cache.get(t, 0) for t in live) > self.TURBO_MAX_POSTINGS:
-            return None
-        try:
-            slices = dict(zip(live, self._term_slices(live, method)))
-        except Exception:
+        slices = self._turbo_slices(live, method)
+        if slices is None:
             return None
         for q in queries:
             acc = self._turbo_accum(per_query[q], idf_map, slices, method)
@@ -2151,11 +2114,8 @@ class QueryEngine:
         live = sorted(t for t in all_terms if idf_map.get(t, 0.0) != 0.0)
         if not live:
             return empty_result(None, want_total)
-        if sum(self._df_cache.get(t, 0) for t in live) > self.TURBO_MAX_POSTINGS:
-            return None
-        try:
-            slices = dict(zip(live, self._term_slices(live, method)))
-        except Exception:
+        slices = self._turbo_slices(live, method)
+        if slices is None:
             return None
         q_docs, q_scores = [], []
         for counts in per_query:
@@ -2389,10 +2349,8 @@ class QueryEngine:
             if self._df_cache.get(t, 0) > 0
         }
         read_terms = sorted(scoring_live | member_live)
-        if (
-            sum(self._df_cache.get(t, 0) for t in read_terms)
-            > self.TURBO_MAX_POSTINGS
-        ):
+        slices = self._turbo_slices(read_terms, method)
+        if slices is None:
             return None
         universe = None
         if not must_t and msm == 0:
@@ -2401,10 +2359,6 @@ class QueryEngine:
                 universe = self._doc_universe()
             except Exception:
                 return None
-        try:
-            slices = dict(zip(read_terms, self._term_slices(read_terms, method)))
-        except Exception:
-            return None
 
         def accum(terms):
             """(docs_u, scores) of one scoring clause; None = dead."""

@@ -1,9 +1,15 @@
-"""Block-max WAND top-k over the compressed block index (SURVEY.md §4;
-reference skip-pointer optimization ``selfindex_i1_skip_pointers.py``
-upgraded to score-aware skipping).
+"""Ranked top-k through the WAND entry point (SURVEY.md §4; reference
+skip-pointer optimization ``selfindex_i1_skip_pointers.py`` upgraded to
+score-aware skipping).
 
-Three small jobs, no wide shuffle, provably the same top-k as exhaustive
-scoring:
+:class:`WandEngine` wraps one :class:`~.query.QueryEngine` on the same
+index dir: reader state, live df/idf, the hot-term ``TermSlice`` cache
+and the turbo cutover are that engine's.  Below the cutover
+:meth:`WandEngine.topk` IS ``QueryEngine._turbo_ranked`` — exhaustive
+numpy scoring over the cached per-term impacts, which measured faster
+than a driver-side block-max loop on every corpus tried.  Above it
+serves the distributed block-max plan: three small jobs, no wide
+shuffle, provably the same top-k as exhaustive scoring:
 
   phase 0  metadata-only aggregation: per doc-range upper bound
            UB(range) = Σ_t weight_t · max_impact_t,range  (weight =
@@ -24,10 +30,8 @@ UB ≥ θ0 (not >), so boundary ties survive to the exact final sort.
 
 from __future__ import annotations
 
-import json
-import os
 from collections import Counter
-from typing import Dict, List, Optional
+from typing import Dict
 
 import numpy as np
 import pandas as pd
@@ -36,9 +40,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import codec
+# unused here; kept as a module name because perfbench/spans.py wraps it
 from ..functions.tokenizer import preprocess_query
 from ..functions.udfs import term_bucket
-from .query import turbo_topk
+from .query import QueryEngine
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -94,94 +99,41 @@ def _make_kernel(weights: Dict[str, float], avg_doc_len: float, k1: float, b: fl
 
 
 class WandEngine:
-    """Top-k ranked retrieval over the ``blocks`` table."""
+    """Top-k ranked retrieval: the turbo tier of one wrapped
+    :class:`~.query.QueryEngine` below its cutover, the distributed
+    block-max plan (:meth:`topk_df` + :meth:`total_hits`) above it."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
-        self._load()
+        self.engine = QueryEngine(spark, index_dir)
+        self._blocks_manifest = None
 
-    def _load(self) -> None:
-        from . import reader as R
+    @property
+    def _block_sources(self):
+        """Live block sources ``[(blocks_df, ub_scale)]`` — base + delta
+        segments, each with its avgdl-drift correction factor so the
+        stored block-max bounds stay valid upper bounds (reader.py).
+        Read on first plan-tier use and re-read when the engine loads a
+        new manifest generation."""
+        from .reader import live_blocks
 
-        index_dir = self.index_dir
-        self.stats = R.load_stats(index_dir)
-        cfg = self.stats["config"]
-        self.n_buckets = cfg["n_buckets"]
-        self.range_bits = cfg["doc_range_bits"]
-        self.k1 = cfg.get("k1", 1.2)
-        self.b = cfg.get("b", 0.75)
-        self.pretokenized = cfg.get("pretokenized", False)
-        self.codec = cfg.get("codec", "vbyte")
-        self.avg_doc_len = self.stats["avg_doc_len"]
-        self.doc_count = self.stats["doc_count"]
-        # live block sources: [(blocks_df, ub_scale)] — base + delta
-        # segments, each with its avgdl-drift correction factor so the
-        # stored block-max bounds stay valid upper bounds (reader.py)
-        try:
-            self._manifest = R.load_manifest(index_dir)
-        except OSError:
-            self._manifest = {"segments": {}}
-        self._tombstones = R.tombstones(self._manifest)
-        self._block_sources = R.live_blocks(
-            self.spark, index_dir, self._manifest, self.stats
-        )
-        self._dictionary = self.spark.read.parquet(os.path.join(index_dir, "dictionary"))
-        self._idf_cache: Dict[str, float] = {}  # B6 idf cache (misses as 0.0)
-        self._df_cache: Dict[str, int] = {}
-        # hot-term block-row cache for the turbo kernel (see
-        # _term_block_rows) — invalidated here with every other cache
-        from collections import OrderedDict
-
-        self._block_row_cache: "OrderedDict[str, list]" = OrderedDict()
-        self._block_cache_bytes = 0
-        try:
-            self._manifest_mtime = os.path.getmtime(
-                os.path.join(index_dir, "manifest.json")
+        eng = self.engine
+        eng._refresh_if_stale()
+        if self._blocks_manifest is not eng._manifest:
+            self._blocks = live_blocks(
+                self.spark, self.index_dir, eng._manifest, eng.stats
             )
-        except OSError:
-            self._manifest_mtime = None
+            self._blocks_manifest = eng._manifest
+        return self._blocks
 
-    def _refresh_if_stale(self) -> None:
-        """Drop idf memo + stats + cached file listings when the index
-        changed on disk (see QueryEngine._refresh_if_stale)."""
-        try:
-            m = os.path.getmtime(os.path.join(self.index_dir, "manifest.json"))
-        except OSError:
-            return
-        if m != self._manifest_mtime:
-            self._load()
-
-    def _terms(self, query: str) -> List[str]:
-        return query.split() if self.pretokenized else preprocess_query(query)
-
-    def _weights(self, query: str) -> Dict[str, float]:
-        """term -> idf * multiplicity (0-idf terms dropped, like the
-        reference); dictionary lookups memoized across queries."""
-        self._refresh_if_stale()
-        terms = self._terms(query)
-        counts = Counter(terms)
-        missing = sorted(t for t in counts if t not in self._idf_cache)
-        if missing:
-            import math
-
-            from .reader import live_df_lookup
-
-            dfs = live_df_lookup(
-                self.spark, self.index_dir, missing, self.n_buckets, self._manifest
-            )
-            n1 = float(self.doc_count + 1)
-            for t in missing:
-                df_v = dfs.get(t, 0)
-                self._df_cache[t] = int(df_v) if df_v > 0 else 0
-                self._idf_cache[t] = (
-                    math.log(n1 / (df_v + 1)) if df_v > 0 else 0.0
-                )
-        return {
-            t: self._idf_cache[t] * c
-            for t, c in counts.items()
-            if self._idf_cache[t] != 0.0
-        }
+    def _term_weights(self, query: str) -> Dict[str, float]:
+        """term -> idf × multiplicity from the engine's live idf;
+        0-idf terms dropped, like the reference."""
+        eng = self.engine
+        counts = Counter(eng._terms(query))
+        idf = eng.term_idf(list(counts))
+        return {t: idf[t] * c for t, c in counts.items() if idf[t] != 0.0}
 
     # below this many doc-ranges the 3-phase UB dance costs more in job
     # scheduling than it saves in decode work — run the kernel once over
@@ -191,12 +143,15 @@ class WandEngine:
     SEED_RANGES = 4
 
     def topk_df(self, query: str, k: int = 10) -> DataFrame:
-        weights = self._weights(query)
+        weights = self._term_weights(query)
         empty = self.spark.createDataFrame([], RESULT_SCHEMA)
         if not weights:
             return empty
+        eng = self.engine
+        cfg = eng.stats["config"]
+        range_bits = cfg["doc_range_bits"]
         terms = sorted(weights)
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
+        buckets = sorted({term_bucket(t, eng.n_buckets) for t in terms})
 
         # prune each live source (base + delta segments), tag it with
         # its avgdl-drift UB scale, then union for the kernel phases —
@@ -220,16 +175,16 @@ class WandEngine:
         # space upper bound must cover tombstoned ids too (delta blocks
         # can hold ids past doc_count after removals).
         max_id = max(
-            self.stats["doc_count"] - 1,
-            int(self._manifest.get("next_doc_id", 0)) - 1,
+            eng.doc_count - 1,
+            int(eng._manifest.get("next_doc_id", 0)) - 1,
             0,
         )
-        n_ranges_max = (max_id >> self.range_bits) + 1
+        n_ranges_max = (max_id >> range_bits) + 1
+        kernel = _make_kernel(
+            weights, eng.avg_doc_len, eng.k1, eng.b, range_bits, k,
+            cfg.get("codec", "vbyte"), eng._tombstones,
+        )
         if n_ranges_max <= self.SINGLE_PHASE_RANGES:
-            kernel = _make_kernel(
-                weights, self.avg_doc_len, self.k1, self.b, self.range_bits, k,
-                self.codec, self._tombstones,
-            )
             scored = blocks.groupBy("range_id").applyInPandas(
                 lambda pdf: kernel(pdf), schema=RESULT_SCHEMA
             )
@@ -275,11 +230,6 @@ class WandEngine:
         if not seed_rids:
             return empty
 
-        kernel = _make_kernel(
-            weights, self.avg_doc_len, self.k1, self.b, self.range_bits, k,
-            self.codec, self._tombstones,
-        )
-
         # phase 1: exact threshold from the seed ranges
         seed = (
             blocks.filter(F.col("range_id").isin(seed_rids))
@@ -321,214 +271,24 @@ class WandEngine:
         the same count the TAAT path's Observation yields
         (``QueryEngine.ranked``).  Reference result shape includes
         total_hits (``selfindex_q_taat.py:203-209``)."""
-        weights = self._weights(query)
+        weights = self._term_weights(query)
         if not weights:
             return 0
-        terms = sorted(weights)
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
-        from .reader import live_postings
-
-        p = live_postings(self.spark, self.index_dir, self._manifest).filter(
-            F.col("bucket").isin(buckets)
-            & F.col("term").isin(terms)
-            & (F.col("doc_len") > 0)
+        p = self.engine._pruned_postings(sorted(weights)).filter(
+            F.col("doc_len") > 0
         )
         from ..session import interactive_aqe_off
 
         with interactive_aqe_off(self.spark):
             return int(p.agg(F.countDistinct("doc_id")).collect()[0][0])
 
-    # turbo cutover: max Σ df served by the driver-side kernel
-    TURBO_MAX_POSTINGS = 2_000_000
-
-    def _turbo_topk(self, query: str, k: int,
-                    with_total_hits: bool = False) -> Optional[tuple]:
-        """Block-max WAND evaluated ON THE DRIVER for small slices: a
-        pyarrow pruned read of the term's block runs (bucket partition
-        pruning + term predicate; blob columns only for surviving
-        ranges' rows), then the same UB-prune + decode-score algorithm
-        in numpy.  Identical results to the distributed phases —
-        lossless pruning with the per-source avgdl-drift UB scale and
-        tombstone skip.  Returns None above the cutover or on read
-        failure (callers fall back to the Spark path), else
-        ``(results, total_hits-or-None)``."""
-        if os.environ.get("SPARK_GRAFT_TURBO", "1") == "0":
-            return None
-        weights = self._weights(query)
-        if not weights:
-            return [], (0 if with_total_hits else None)
-        terms = sorted(weights)
-        if sum(self._df_cache.get(t, 0) for t in terms) > self.TURBO_MAX_POSTINGS:
-            return None
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
-        return self._turbo_topk_impl(terms, weights, buckets, k, with_total_hits)
-
-    # LRU blob-byte budget for the hot-term block cache (driver RAM; the
-    # reference holds the whole compressed index in RAM)
-    TURBO_CACHE_MAX_BYTES = 256 * 1024 * 1024
-
-    def _term_block_rows(self, terms) -> list:
-        """Block rows (ub_scale, term, range_id, max_impact, doc_blob,
-        tf_blob, len_blob) for ``terms`` across the live sources — LRU-
-        cached per term, because the pyarrow block point-read dominates
-        turbo WAND latency exactly as the postings read dominates ranked
-        latency (QueryEngine._term_slices).  Cached rows ARE the
-        raw read's rows, so results are identical by construction;
-        invalidated with every other cache on manifest-mtime change."""
-        import pyarrow.dataset as pads
-
-        from . import reader as R
-
-        cache = self._block_row_cache
-        # MRU-mark this call's cache hits BEFORE the eviction loop below:
-        # under a full cache the LRU pop could otherwise evict a term
-        # this very call is about to read (same hazard as
-        # QueryEngine._term_slices)
-        for t in terms:
-            if t in cache:
-                cache.move_to_end(t)
-        missing = sorted({t for t in terms if t not in cache})
-        if missing:
-            cols = ["term", "range_id", "max_impact", "doc_blob", "tf_blob", "len_blob"]
-            sources = [
-                (os.path.join(self.index_dir, "blocks"), self._block_sources[0][1])
-            ]
-            for seg, (_df, scale) in zip(
-                R.delta_segments(self._manifest), self._block_sources[1:]
-            ):
-                sources.append(
-                    (os.path.join(self.index_dir, "segments", seg, "blocks"), scale)
-                )
-            buckets = sorted({term_bucket(t, self.n_buckets) for t in missing})
-            found: Dict[str, list] = {t: [] for t in missing}
-            for path, scale in sources:
-                ds = pads.dataset(path, partitioning="hive")
-                expr = pads.field("bucket").isin(buckets) & pads.field(
-                    "term"
-                ).isin(missing)
-                tbl = ds.to_table(columns=cols, filter=expr)
-                for i in range(tbl.num_rows):
-                    row = (scale, *[tbl.column(c)[i].as_py() for c in cols])
-                    found[row[1]].append(row)
-            for t in missing:
-                rows_t = found[t]
-                cache[t] = rows_t
-                self._block_cache_bytes += sum(
-                    len(r[4]) + len(r[5]) + len(r[6]) for r in rows_t
-                )
-            while (
-                self._block_cache_bytes > self.TURBO_CACHE_MAX_BYTES
-                and len(cache) > len(set(terms))
-            ):
-                _t, old = cache.popitem(last=False)
-                self._block_cache_bytes -= sum(
-                    len(r[4]) + len(r[5]) + len(r[6]) for r in old
-                )
-        out: list = []
-        for t in terms:
-            cache.move_to_end(t)
-            out.extend(cache[t])
-        return out
-
-    def _turbo_topk_impl(self, terms, weights, buckets, k,
-                         with_total_hits: bool = False) -> Optional[tuple]:
-        try:
-            rows = self._term_block_rows(terms)
-        except Exception:
-            return None
-
-        # phase 0 (driver): per-range upper bounds with per-source scale;
-        # rows grouped by range ONCE (score_range used to re-filter the
-        # full row list per range — O(ranges x blocks))
-        ub: Dict[int, float] = {}
-        by_range: Dict[int, list] = {}
-        for row in rows:
-            scale, term, rid, mi = row[0], row[1], row[2], row[3]
-            ub[rid] = ub.get(rid, 0.0) + weights[term] * mi * scale
-            by_range.setdefault(rid, []).append(row)
-        if not ub:
-            return [], (0 if with_total_hits else None)
-        for group in by_range.values():
-            group.sort(key=lambda x: x[1])  # fixed term order, deterministic
-        tomb = (
-            np.asarray(sorted(self._tombstones), dtype=np.int64)
-            if self._tombstones
-            else np.empty(0, dtype=np.int64)
-        )
-
-        def score_range(rid) -> tuple:
-            base = rid << self.range_bits
-            arr = np.zeros(1 << self.range_bits, dtype=np.float64)
-            for scale, term, r, _mi, db, tb, lb in by_range[rid]:
-                w = weights[term]
-                d, t, l = codec.decode_block(db, tb, lb, self.codec)
-                ok = l > 0
-                if tomb.size:
-                    ok &= ~np.isin(d, tomb)
-                imp = codec.bm25_impact(t[ok], l[ok], self.avg_doc_len, self.k1, self.b)
-                np.add.at(arr, d[ok] - base, w * imp)
-            nz = np.nonzero(arr)[0]
-            return nz + base, arr[nz]
-
-        def range_doc_count(rid) -> int:
-            # live doc count of a range WITHOUT scoring it (total_hits
-            # for pruned ranges): decode doc+len streams only
-            ids = []
-            for _scale, _term, _r, _mi, db, tb, lb in by_range[rid]:
-                d, _t, l = codec.decode_block(db, tb, lb, self.codec)
-                ok = l > 0
-                if tomb.size:
-                    ok &= ~np.isin(d, tomb)
-                ids.append(d[ok])
-            merged = np.concatenate(ids) if ids else np.empty(0, np.int64)
-            return int(np.unique(merged).size)
-
-        # phase 1: threshold from the top-S UB ranges
-        by_ub = sorted(ub, key=lambda r: -ub[r])
-        docs_all, scores_all = [], []
-        scored_rids = set()
-        for rid in by_ub[: self.SEED_RANGES]:
-            d, s = score_range(rid)
-            scored_rids.add(rid)
-            docs_all.append(d)
-            scores_all.append(s)
-        cand_d = np.concatenate(docs_all) if docs_all else np.empty(0, np.int64)
-        cand_s = np.concatenate(scores_all) if scores_all else np.empty(0)
-        if cand_d.size >= k:
-            theta0 = np.sort(cand_s)[::-1][k - 1]
-        else:
-            theta0 = 0.0
-
-        # phase 2: only surviving ranges (UB >= theta0, lossless)
-        for rid in by_ub[self.SEED_RANGES:]:
-            if ub[rid] < theta0:
-                continue
-            d, s = score_range(rid)
-            scored_rids.add(rid)
-            docs_all.append(d)
-            scores_all.append(s)
-        total = None
-        if with_total_hits:
-            # docs partition by range, so the exact count is the sum of
-            # per-range unique live doc counts: scored ranges already
-            # yield theirs (every decoded doc scores > 0), pruned ranges
-            # pay a doc/len-stream decode (no tf, no scoring) — the
-            # honest cost of an exact count under pruning
-            total = int(sum(len(d) for d in docs_all)) + sum(
-                range_doc_count(rid) for rid in by_ub if rid not in scored_rids
-            )
-        top = turbo_topk(np.concatenate(docs_all), np.concatenate(scores_all),
-                         k, total)
-        return top["results"], total
-
     def topk(self, query: str, k: int = 10, with_total_hits: bool = False) -> dict:
         """Reference result shape; ``with_total_hits`` adds the exact
-        hit count (default off: it costs decode/count work that WAND
-        pruning exists to avoid — see :meth:`total_hits`)."""
-        turbo = self._turbo_topk(query, k, with_total_hits)
-        if turbo is not None:
-            results, total = turbo
-            return {"query": query, "total_hits": total, "results": results}
+        hit count (default off: above the cutover it costs the extra
+        count job of :meth:`total_hits`)."""
+        res = self.engine._turbo_ranked(query, k, "bm25", with_total_hits)
+        if res is not None:
+            return res
         # AQE off for the small interactive job (see QueryEngine._interactive)
         from ..session import interactive_aqe_off
 

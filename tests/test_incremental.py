@@ -243,8 +243,8 @@ def test_compaction_folds_deltas_and_preserves_results(spark, tmp_index_root):
 
 
 def test_wand_on_updated_index_matches_taat(spark, tmp_index_root):
-    """Block-max WAND over base + delta block sources (with avgdl-drift
-    UB scaling and tombstone skip) must return the exact TAAT top-k."""
+    """WAND over base + delta segments with tombstones must return the
+    exact TAAT result dicts, with and without total hits."""
     from elasticsearch_spark.operators.wand import WandEngine
 
     rows = corpus_rows(280)
@@ -263,16 +263,15 @@ def test_wand_on_updated_index_matches_taat(spark, tmp_index_root):
     eng = QueryEngine(spark, d)
     wand = WandEngine(spark, d)
     for q in QUERIES:
-        want = eng.ranked(q, k=10)["results"]
-        got = wand.topk(q, k=10)["results"]
-        assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want], q
-        for g, w in zip(got, want):
-            assert abs(g["score"] - w["score"]) < 1e-9, q
+        for total in (False, True):
+            assert wand.topk(q, k=10, with_total_hits=total) == eng.ranked(
+                q, k=10, with_total_hits=total
+            ), (q, total)
 
 
 def test_warm_turbo_caches_invalidate_on_update(spark, tmp_index_root):
     """The hot-term LRU caches (QueryEngine._term_postings_cache /
-    _universe_cache, WandEngine._block_row_cache) must be dropped on the
+    _universe_cache, also behind WandEngine) must be dropped on the
     manifest-mtime bump an update_index causes: engines WARMED before the
     update must answer identically to engines created after it."""
     from elasticsearch_spark.operators.wand import WandEngine
@@ -316,7 +315,7 @@ def test_warm_turbo_caches_invalidate_on_update(spark, tmp_index_root):
         "lens": warm_q._turbo_doc_lens()[0].tolist(),
         **derived(warm_q),
     }
-    assert warm_q._term_postings_cache and warm_w._block_row_cache
+    assert warm_q._term_postings_cache and warm_w.engine._term_postings_cache
     assert warm_q._doc_len_cache is not None
 
     rm = [

@@ -592,8 +592,37 @@ def test_multi_match_wand_matches_plan(spark, mf_dir, match_type, tie):
         for g, w in zip(got["results"], want["results"]):
             assert abs(g["score"] - w["score"]) < 1e-9, (query, match_type)
         st = got["stats"]
-        assert st["blocks_decoded"] <= st["blocks_total"]
-        assert st["ranges_scored"] <= st["ranges_total"]
+        assert st["blocks_decoded"] == st["blocks_total"]
+        assert st["ranges_scored"] == st["ranges_total"]
+        assert (st["blocks_total"] > 0) == bool(want["results"]), query
+
+
+def test_multi_match_wand_cutover_serves_plan(spark, mf_dir, monkeypatch):
+    """Above QueryEngine's turbo cutover MultiMatchWand must serve from
+    the distributed plan — Spark jobs run, the result equals the plan
+    tier's, and the work stats equal the turbo tier's count."""
+    from elasticsearch_spark.operators.multifield import MultiMatchWand
+    from elasticsearch_spark.operators.query import QueryEngine
+
+    query = "machine learning"
+    turbo_stats = MultiMatchWand(spark, mf_dir).topk(
+        query, k=10, fields=BOOSTS, with_stats=True
+    )["stats"]
+    monkeypatch.setattr(QueryEngine, "TURBO_MAX_POSTINGS", 0)
+    mmw = MultiMatchWand(spark, mf_dir)
+    sc = spark.sparkContext
+    group = "multi_match_wand_cutover"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        got = mmw.topk(query, k=10, fields=BOOSTS, with_stats=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 1
+    want = MultiMatchEngine(spark, mf_dir, turbo=False).multi_match(
+        query, k=10, fields=BOOSTS, with_total_hits=False
+    )
+    assert got.pop("stats") == turbo_stats
+    assert want["results"] and got == want
 
 
 def test_multi_match_wand_rejects_bad_args(spark, mf_dir):

@@ -246,36 +246,3 @@ def test_compaction_crash_mid_swap_rolls_forward(spark, corpora, tmp_index_root)
         assert not os.path.exists(os.path.join(d, t + ".new")), t
         assert not os.path.exists(os.path.join(d, t + ".old")), t
     assert not os.path.exists(os.path.join(d, "compact_commit.json"))
-
-
-def test_tfidf_x3_filters_tombstones_and_warns_on_deltas(spark, tmp_index_root):
-    """ADVICE r2: the x=3 variant table is refreshed only at compaction
-    — tombstoned docs must still be filtered from its plan, and pending
-    delta segments must raise a warning (not silently serve a stale
-    corpus view)."""
-    rows = corpus_rows(160)
-    base = spark.createDataFrame(rows[:140], INPUT_SCHEMA)
-    extra = spark.createDataFrame(rows[140:], INPUT_SCHEMA)
-    cfg = IndexConfig(n_buckets=4, doc_range_bits=6, store_tfidf=True)
-    d = os.path.join(tmp_index_root, "x3_tomb")
-    bld = IndexBuilder(spark, d, cfg)
-    bld.build(base)
-    eng = QueryEngine(spark, d)
-    # "sparkhead" is the planted head token — present in most docs
-    before = eng.tfidf_x3_plan("sparkhead").collect()
-    assert before
-    victim = int(
-        sorted(before, key=lambda r: (-r["score"], r["doc_id"]))[0]["doc_id"]
-    )
-    url = (
-        eng._docs.filter(F.col("doc_id") == victim).collect()[0]["url"]
-    )
-    bld.update_index(remove_urls=[url], compact=False)
-    eng2 = QueryEngine(spark, d)
-    got = {r["doc_id"] for r in eng2.tfidf_x3_plan("sparkhead").collect()}
-    assert got and victim not in got
-
-    bld.update_index(add=extra, compact=False)
-    eng3 = QueryEngine(spark, d)
-    with pytest.warns(UserWarning, match="BASE variant table"):
-        eng3.tfidf_x3_plan("sparkhead")

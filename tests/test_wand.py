@@ -1,5 +1,7 @@
-"""Block-max WAND must return exactly the exhaustive-scoring top-k
-(rank-identical, scores to 1e-9) — the pruning is provably lossless."""
+"""The WAND entry point must return exactly the exhaustive-scoring
+top-k: its turbo tier IS ``QueryEngine``'s (whole result dicts ``==``),
+and its distributed block-max plan is rank-identical with scores to
+1e-9 — the pruning is provably lossless."""
 
 import os
 
@@ -70,10 +72,11 @@ def test_wand_matches_oracle(spark, index_dir, oracle_index, query):
 def test_wand_matches_taat_plan(spark, index_dir):
     taat = QueryEngine(spark, index_dir)
     wand = WandEngine(spark, index_dir)
-    for query in QUERIES[:3]:
-        a = taat.ranked(query, k=10, with_total_hits=False)["results"]
-        b = wand.topk(query, k=10)["results"]
-        assert [r["doc_id"] for r in a] == [r["doc_id"] for r in b]
+    for query in QUERIES:
+        for total in (False, True):
+            assert wand.topk(query, k=10, with_total_hits=total) == taat.ranked(
+                query, k=10, with_total_hits=total
+            ), (query, total)
 
 
 def test_wand_empty_query(spark, index_dir):
@@ -150,33 +153,50 @@ def test_three_phase_path_rank_identity(spark, index_dir, oracle_index, query):
 
 @pytest.mark.parametrize("query", QUERIES)
 def test_wand_turbo_matches_spark_phases(spark, index_dir, query):
-    """The driver-side turbo kernel (pyarrow block read + numpy UB-prune
-    + decode-score) must equal the distributed topk_df phases exactly."""
+    """The turbo tier (``topk`` on a small corpus) must equal the
+    distributed topk_df phases exactly."""
     wand = WandEngine(spark, index_dir)
-    turbo = wand._turbo_topk(query, 10)
-    assert turbo is not None  # small corpus: always under the cutover
-    results, _total = turbo
+    results = wand.topk(query, 10)["results"]
     want = wand.topk_df(query, 10).collect()
     assert [r["doc_id"] for r in results] == [r["doc_id"] for r in want], query
     for g, w in zip(results, want):
         assert abs(g["score"] - w["score"]) < 1e-9, query
 
 
+def _spark_jobs(spark, group, fn, *args, **kwargs):
+    """``fn(*args, **kwargs)`` and the number of Spark jobs it ran
+    (counted under the job group ``group``, unique per call)."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn(*args, **kwargs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_wand_turbo_cutover_declines(spark, index_dir, monkeypatch):
+    """Above QueryEngine's cutover, topk serves from the distributed
+    plan: Spark jobs run and the results are unchanged."""
     wand = WandEngine(spark, index_dir)
-    monkeypatch.setattr(WandEngine, "TURBO_MAX_POSTINGS", 0)
-    q = QUERIES[0]
-    wand._weights(q)  # populate df cache
-    if any(wand._df_cache.get(t, 0) > 0 for t in wand._terms(q)):
-        assert wand._turbo_topk(q, 10) is None
+    q = "sparkhead"  # the planted head token: live df > 0
+    want, jobs = _spark_jobs(spark, "wand_cutover_turbo", wand.topk, q, 10)
+    assert jobs == 0 and want["results"]
+    monkeypatch.setattr(QueryEngine, "TURBO_MAX_POSTINGS", 0)
+    got, jobs = _spark_jobs(spark, "wand_cutover_plan", wand.topk, q, 10)
+    assert jobs >= 1
+    assert [r["doc_id"] for r in got["results"]] == [
+        r["doc_id"] for r in want["results"]
+    ]
+    for g, w in zip(got["results"], want["results"]):
+        assert abs(g["score"] - w["score"]) < 1e-9
 
 
 @pytest.mark.parametrize("query", QUERIES)
-def test_wand_total_hits_matches_taat(spark, index_dir, query):
+def test_wand_total_hits_matches_taat(spark, index_dir, query, monkeypatch):
     """with_total_hits=True must return the TAAT Observation count —
-    from BOTH tiers: the turbo kernel (scored ranges + doc-stream decode
-    of pruned ranges) and the distributed pair (plan top-k + bounded
-    count-distinct job)."""
+    from BOTH tiers: the turbo tier and the distributed pair (plan
+    top-k + bounded count-distinct job)."""
     eng = QueryEngine(spark, index_dir)
     want = eng.ranked(query, k=10)["total_hits"]
 
@@ -184,9 +204,9 @@ def test_wand_total_hits_matches_taat(spark, index_dir, query):
     got_turbo = wand.topk(query, k=10, with_total_hits=True)
     assert got_turbo["total_hits"] == want, query
 
-    plan_wand = WandEngine(spark, index_dir)
-    plan_wand.TURBO_MAX_POSTINGS = -1  # force the distributed path
-    got_plan = plan_wand.topk(query, k=10, with_total_hits=True)
+    # force the distributed path
+    monkeypatch.setattr(QueryEngine, "TURBO_MAX_POSTINGS", -1)
+    got_plan = WandEngine(spark, index_dir).topk(query, k=10, with_total_hits=True)
     assert got_plan["total_hits"] == want, query
     assert [r["doc_id"] for r in got_plan["results"]] == [
         r["doc_id"] for r in got_turbo["results"]
