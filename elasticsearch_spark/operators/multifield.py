@@ -50,6 +50,7 @@ from .build import IndexBuilder, IndexConfig, assign_doc_ids
 from .query import (
     empty_result,
     group_code_doc,
+    group_docs,
     impact_col,
     match_threshold,
     turbo_topk,
@@ -504,9 +505,8 @@ class MultiMatchEngine:
         best = np.full(kdoc.size, -np.inf)
         np.maximum.at(best, inv, s)
         ts = best + float(tie_breaker) * (tot - best)
-        docs_u, inv2 = np.unique(kdoc, return_inverse=True)
-        scores = np.bincount(inv2, weights=ts)
-        keep = np.bincount(inv2) >= required
+        docs_u, scores, n_terms, _ = group_docs(kdoc, ts)
+        keep = n_terms >= required
         docs_u, scores = docs_u[keep], scores[keep]
         return turbo_topk(docs_u, scores, k,
                           int(docs_u.size) if want_total else None, query)
@@ -673,27 +673,25 @@ class MultiMatchEngine:
         wtf = np.concatenate(wtf_parts)
         kcode, kdoc, inv = group_code_doc(codes, doc)
         tfc = np.bincount(inv, weights=wtf)
-        docs_u, inv2 = np.unique(kdoc, return_inverse=True)
-        # combined norm per candidate doc: every field's length counts
-        dlc = np.zeros(docs_u.size, dtype=np.float64)
+        # combined norm per (term, doc) key: every field's length counts
+        dlc = np.zeros(kdoc.size, dtype=np.float64)
         for boost, (ids, lens) in field_lens:
-            pos = np.searchsorted(ids, docs_u)
+            pos = np.searchsorted(ids, kdoc)
             pos_c = np.minimum(pos, max(ids.size - 1, 0))
-            hit = (ids.size > 0) & (ids[pos_c] == docs_u)
+            hit = (ids.size > 0) & (ids[pos_c] == kdoc)
             dlc += boost * np.where(hit, lens[pos_c], 0)
         warr = np.array(
             [float(blended[t]) * float(counts[t]) for t in uniq]
         )
         any_eng = next(iter(self.engines.values()))
-        dlc_per_key = dlc[inv2]
         if method == "bm25":
-            sat = bm25_impact(tfc, dlc_per_key, avgdl_c, any_eng.k1, any_eng.b)
+            sat = bm25_impact(tfc, dlc, avgdl_c, any_eng.k1, any_eng.b)
         elif method == "tfidf":
-            sat = tfc / dlc_per_key
+            sat = tfc / dlc
         else:
             raise ValueError(f"unknown scoring method {method!r}")
-        scores = np.bincount(inv2, weights=warr[kcode] * sat)
-        keep = np.bincount(inv2) >= required
+        docs_u, scores, n_terms, _ = group_docs(kdoc, warr[kcode] * sat)
+        keep = n_terms >= required
         docs_u, scores = docs_u[keep], scores[keep]
         return turbo_topk(docs_u, scores, k,
                           int(docs_u.size) if want_total else None, query)
@@ -726,7 +724,7 @@ class MultiMatchEngine:
     def _turbo_field_scores(self, eng, query: str, method: str):
         """Full per-doc score map for one field on the driver —
         delegates to the SHARED turbo scoring kernel
-        (``QueryEngine._turbo_score_map`` →  ``_turbo_scored_rows``):
+        (``QueryEngine._turbo_score_map`` → ``_turbo_accum``):
         one source of BM25/TF-IDF math for the single-field and
         multi-field tiers, so rank identity is structural, not
         test-only.  None -> caller falls back to the plan tier."""
@@ -754,15 +752,14 @@ class MultiMatchEngine:
         docs_all = np.concatenate([d for d, _s in per_field]) if per_field else None
         if docs_all is None or docs_all.size == 0:
             return empty_result(query, want_total)
-        uniq, inv = np.unique(docs_all, return_inverse=True)
         scores_all = np.concatenate([s for _d, s in per_field])
-        tot = np.bincount(inv, weights=scores_all, minlength=uniq.size)
-        if match_type == "most_fields":
-            combined = tot
-        else:
-            best = np.full(uniq.size, -np.inf)
-            np.maximum.at(best, inv, scores_all)
+        best_fields = match_type != "most_fields"
+        uniq, tot, _n, best = group_docs(docs_all, scores_all,
+                                         with_max=best_fields)
+        if best_fields:
             combined = best + float(tie_breaker) * (tot - best)
+        else:
+            combined = tot
         return turbo_topk(uniq, combined, k,
                           int(uniq.size) if want_total else None, query)
 

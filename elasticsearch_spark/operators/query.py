@@ -26,7 +26,7 @@ from __future__ import annotations
 import json
 import os
 from contextlib import contextmanager
-from functools import lru_cache
+from functools import cached_property
 from typing import Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -52,7 +52,9 @@ _CACHE_ENTRY_BYTES = 1024
 
 class TermSlice:
     """One term's entry in the turbo hot-term cache: the raw postings
-    rows ``(doc, tf, dl)`` in read order; ``sdoc`` = the doc_len > 0
+    rows ``(doc, tf, dl)`` in ascending doc-id order (one row per doc,
+    so ``doc`` is strictly increasing and the warm tier never re-sorts
+    it); ``sdoc`` = the doc_len > 0
     rows (the scoring rows; ``pos`` is their mask, None when every row
     qualifies and ``sdoc`` IS ``doc``); ``impact`` = method -> per-row
     BM25/TF-IDF impact over the ``sdoc`` rows, computed once per index
@@ -67,6 +69,9 @@ class TermSlice:
         pos = dl > 0
         self.pos = None if pos.all() else pos
         self.sdoc = doc if self.pos is None else doc[pos]
+        # warm reads hand ``doc``/``sdoc`` out without copying
+        for a in (doc, tf, dl, self.sdoc):
+            a.flags.writeable = False
         self.impact = {}
         self.rows = self._charge()
 
@@ -102,20 +107,82 @@ def group_code_doc(codes, doc):
     return c_s[new], d_s[new], inv
 
 
+def group_docs(doc, vals, with_max: bool = False):
+    """Group parallel ``doc``/``vals`` rows by doc id — the ONE turbo
+    doc-grouping helper.  Returns ``(docs_u, sums, counts, maxes)``
+    with ``docs_u`` ascending and ``maxes`` None unless ``with_max``.
+
+    One stable sort (``np.lexsort``), then ``np.bincount`` over the
+    sorted rows: each doc's rows are summed in input order, so the
+    sums are bit-identical to ``np.bincount`` over the inverse of
+    ``np.unique(doc)``.  One term's rows are already doc-unique and
+    ascending: callers pass them on without grouping."""
+    import numpy as np
+
+    if not doc.size:
+        return doc, vals, np.zeros(0, dtype=np.int64), (
+            vals if with_max else None
+        )
+    order = np.lexsort((doc,))
+    d = doc[order]
+    new = np.empty(d.size, dtype=bool)
+    new[0] = True
+    np.not_equal(d[1:], d[:-1], out=new[1:])
+    gid = new.astype(np.int64).cumsum() - 1
+    v = vals[order]
+    maxes = (
+        np.maximum.reduceat(v, np.flatnonzero(new)) if with_max else None
+    )
+    return d[new], np.bincount(gid, weights=v), np.bincount(gid), maxes
+
+
+def doc_union(parts):
+    """Ascending union of doc-id arrays that are each ascending and
+    unique (slices, grouped score maps): a single part is returned as
+    it is, with no sort."""
+    import numpy as np
+
+    if len(parts) == 1:
+        return parts[0]
+    if not parts:
+        return np.empty(0, dtype=np.int64)
+    return np.unique(np.concatenate(parts))
+
+
+def sorted_member(a, b):
+    """Mask of the entries of ``a`` present in the ascending array
+    ``b`` — one ``searchsorted``, no sort."""
+    import numpy as np
+
+    if not b.size:
+        return np.zeros(a.size, dtype=bool)
+    pos = np.minimum(np.searchsorted(b, a), b.size - 1)
+    return b[pos] == a
+
+
 def turbo_topk(docs, scores, k: int, total: Optional[int],
                query: Optional[str] = None) -> dict:
     """Driver-side top-k in the reference result shape: the ``k`` best
     rows of the parallel ``docs``/``scores`` arrays under the (score
     desc, doc_id asc) tie-break — the ONE turbo-tier top-k (its plan
-    twin is :meth:`QueryEngine._collect_topk`)."""
+    twin is :meth:`QueryEngine._collect_topk`).
+
+    Threshold top-k: for 0 < k < n, ``np.partition`` finds the k-th
+    best score and only the rows at or above it (ties at the cut-off
+    included, so the result is exact) are lexsorted."""
     import numpy as np
 
+    n = scores.size
+    if 0 < k < n:
+        keep = scores >= np.partition(scores, n - k)[n - k]
+        docs, scores = docs[keep], scores[keep]
     order = np.lexsort((docs, -scores))[:k]
     return {
         "query": query,
         "total_hits": total,
         "results": [
-            {"doc_id": int(docs[i]), "score": float(scores[i])} for i in order
+            {"doc_id": d, "score": s}
+            for d, s in zip(docs[order].tolist(), scores[order].tolist())
         ],
     }
 
@@ -185,8 +252,10 @@ class QueryEngine:
     * a TURBO path for interactive queries whose candidate posting count
       (Σ live df over query terms) is small: the driver reads the pruned
       postings slice directly via pyarrow (hive bucket pruning + term
-      predicate against row-group stats) and scores it in numpy — zero
-      Spark jobs, ~10-30 ms instead of the ~150 ms/job scheduling floor.
+      predicate against row-group stats), caches each term's rows as a
+      doc-ordered ``TermSlice`` and scores it in numpy — zero Spark
+      jobs; a warm read is ~0.05-0.1 ms p50 on a 1,200-doc index (4
+      vCPUs), against the ~150 ms/job scheduling floor of the plan.
       The same head-term/size cutover a production engine uses for its
       document-routing cache; disable with ``turbo=False`` or
       ``SPARK_GRAFT_TURBO=0``.
@@ -223,9 +292,10 @@ class QueryEngine:
         except OSError:
             self._manifest = {"segments": {}}
         self._tombstones = R.tombstones(self._manifest)
-        self._postings = R.live_postings(self.spark, index_dir, self._manifest)
-        self._docs = R.live_docs(self.spark, index_dir, self._manifest)
-        self._dictionary = self.spark.read.parquet(os.path.join(index_dir, "dictionary"))
+        # the plan tier's frames are built on first use (see _postings):
+        # constructing an engine or seeing a commit runs no Spark job
+        for name in ("_postings", "_docs", "_dictionary"):
+            self.__dict__.pop(name, None)
         # reference's idf cache (B6, selfindex_q_daat.py:114-117): terms
         # looked up once per engine lifetime; misses cached as 0.0 so an
         # unindexed term never re-queries the dictionary
@@ -252,6 +322,25 @@ class QueryEngine:
             )
         except OSError:
             self._manifest_mtime = None
+
+    @cached_property
+    def _postings(self) -> DataFrame:
+        """Live postings (base ∪ delta segments − tombstones) for the
+        plan tier — read on first use per index generation, like
+        ``_docs`` and ``_dictionary`` (``_load`` drops all three)."""
+        from .reader import live_postings
+
+        return live_postings(self.spark, self.index_dir, self._manifest)
+
+    @cached_property
+    def _docs(self) -> DataFrame:
+        from .reader import live_docs
+
+        return live_docs(self.spark, self.index_dir, self._manifest)
+
+    @cached_property
+    def _dictionary(self) -> DataFrame:
+        return self.spark.read.parquet(os.path.join(self.index_dir, "dictionary"))
 
     def _refresh_if_stale(self) -> None:
         """Invalidate caches (idf memo, stats, cached file listings) when
@@ -418,15 +507,19 @@ class QueryEngine:
         stats (postings are (term, doc_id)-sorted per bucket, so the
         min/max stats prune tightly).  Returns ``{term: (doc_id int64,
         tf int32, doc_len int32)}`` for every requested term (empty
-        arrays when absent), tombstone-filtered, rows of a term in read
-        order; each term's arrays own their memory (copies, not views
-        of the one read), so evicting a term frees its bytes.
+        arrays when absent), tombstone-filtered, rows of a term in
+        ascending doc-id order; each term's arrays own their memory
+        (copies, not views of the one read), so evicting a term frees
+        its bytes.
 
         Streams pyarrow record batches: each batch maps its term column
         to codes with ``pc.index_in`` and is tombstone-filtered at once,
         so peak driver memory is the numpy output plus ONE record
-        batch; one stable argsort of the codes then splits the rows
-        into per-term slices."""
+        batch; one ``lexsort((doc, code))`` then splits the rows into
+        per-term slices in doc order.  Read order is not doc order (a
+        ``shuffle_salt > 1`` index, delta segments after the base), and
+        this one sort per cold read is what keeps every warm read
+        sort-free."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
@@ -471,7 +564,7 @@ class QueryEngine:
             np.concatenate(part) if part else np.empty(0, dtype=ty)
             for part, ty in zip(parts, types)
         )
-        order = np.argsort(code, kind="stable")
+        order = np.lexsort((doc, code))
         doc, tf, dl = doc[order], tf[order], dl[order]
         counts = np.bincount(code, minlength=len(terms))
         ends = np.cumsum(counts)
@@ -480,68 +573,77 @@ class QueryEngine:
             for t, n, e in zip(terms, counts.tolist(), ends.tolist())
         }
 
-    def _turbo_scored_rows(self, terms: List[str], method: str,
-                           idf_map: Optional[Dict[str, float]] = None):
-        """The SHARED turbo scoring kernel — every driver-side ranked
-        tier (ranked, multi_match per-field maps, match operator/msm,
-        cross_fields) scores from here, over the cached per-term
-        impacts of :meth:`_term_slices`.
-
-        ``terms`` are ANALYZED query terms (duplicates = per-occurrence
-        multiplicity, like the reference's TAAT loop); ``idf_map``
-        overrides the live per-index idf (cross_fields passes BLENDED
-        statistics) — liveness (idf != 0) is judged against whichever
-        map applies.
-
-        Returns None when the turbo tier does not apply (disabled,
-        Σ df over budget, point-read failure) — callers fall back to
-        the distributed plan.  Otherwise ``(uniq_terms, codes, doc, s)``
-        posting rows (one per (term, doc), doc_len>0 filtered) where
-        ``s = idf × multiplicity × impact``; all arrays empty when no
-        term is live or nothing matches."""
+    def _turbo_bag(self, terms: List[str], method: Optional[str],
+                   idf_map: Optional[Dict[str, float]] = None):
+        """The live term bag of analyzed ``terms``: ``(mult, idf,
+        slices)`` with ``mult`` = live term -> multiplicity in sorted
+        term order (duplicates = per-occurrence multiplicity, like the
+        reference's TAAT loop) and ``slices`` = their cached slices with
+        ``method``'s impacts.  ``idf_map`` overrides the live per-index
+        idf (cross_fields passes BLENDED statistics) — liveness
+        (idf != 0) is judged against whichever map applies.  None when
+        the turbo tier does not apply (disabled, Σ df over budget,
+        point-read failure): callers fall back to the distributed
+        plan."""
         if not self.turbo:
             return None
-        import numpy as np
-        from collections import Counter
-
-        live_idf = self.term_idf(terms) if idf_map is None else idf_map
-        live = [t for t in terms if live_idf.get(t, 0.0) != 0.0]
-        uniq = sorted(set(live))
-        empty = (
-            uniq,
-            np.empty(0, dtype=np.int64),
-            np.empty(0, dtype=np.int64),
-            np.empty(0, dtype=np.float64),
-        )
-        if not live:
-            return empty
+        idf = self.term_idf(terms) if idf_map is None else idf_map
+        mult: Dict[str, int] = {}
+        for t in sorted(terms):
+            if idf.get(t, 0.0) != 0.0:
+                mult[t] = mult.get(t, 0) + 1
+        if not mult:
+            return mult, idf, {}
         if idf_map is not None:
             # blended-idf callers: the budget check needs THIS index's
             # live df — populate the cache (cheap driver point lookup)
-            self.term_idf(uniq)
-        got = self._turbo_slices(uniq, method)
+            self.term_idf(list(mult))
+        slices = self._turbo_slices(list(mult), method)
+        if slices is None:
+            return None
+        return mult, idf, slices
+
+    def _turbo_scored_rows(self, terms: List[str], method: str,
+                           idf_map: Optional[Dict[str, float]] = None):
+        """Per-(term, doc) scored posting rows over the cached slices —
+        the twin of :meth:`_scored_postings_rows` for the callers that
+        count matched terms per doc (match operator/msm,
+        match_bool_prefix) or group by (term, doc) (cross_fields).
+
+        Returns None when :meth:`_turbo_bag` declines.  Otherwise
+        ``(uniq_terms, codes, doc, s)`` posting rows (one per (term,
+        doc), doc_len>0 filtered) where ``s = idf × multiplicity ×
+        impact``; all arrays empty when no term is live or nothing
+        matches."""
+        import numpy as np
+
+        got = self._turbo_bag(terms, method, idf_map)
         if got is None:
             return None
-        slices = list(got.values())
-        lens = [sl.sdoc.size for sl in slices]
+        mult, idf, slices = got
+        uniq = list(mult)
+        lens = [slices[t].sdoc.size for t in uniq]
         if not sum(lens):
-            return empty
-        counts = Counter(live)
-        weights = np.array(
-            [live_idf[t] * float(counts[t]) for t in uniq], dtype=np.float64
-        )
+            return (uniq, np.empty(0, dtype=np.int64),
+                    np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
         codes = np.repeat(np.arange(len(uniq), dtype=np.int64), lens)
-        doc = np.concatenate([sl.sdoc for sl in slices])
-        impact = np.concatenate([sl.impact[method] for sl in slices])
-        return uniq, codes, doc, weights[codes] * impact
+        doc = np.concatenate([slices[t].sdoc for t in uniq])
+        s = np.concatenate([
+            (idf[t] * float(m)) * slices[t].impact[method]
+            for t, m in mult.items()
+        ])
+        return uniq, codes, doc, s
 
     @staticmethod
     def _turbo_accum(counts, idf_map: Dict[str, float],
                      slices: Dict[str, "TermSlice"], method: str):
-        """Per-doc ``(docs_u, scores)`` of one weighted term bag
-        (``counts``: term -> multiplicity) over cached slices: Σ idf ×
-        multiplicity × impact, summed in ``counts`` order.  None when no
-        live term has postings (a dead clause)."""
+        """The turbo scoring kernel: per-doc ``(docs_u, scores)`` of one
+        weighted term bag (``counts``: term -> multiplicity) over cached
+        slices, Σ idf × multiplicity × impact summed in ``counts``
+        order — ranked, multi_match per-field maps, batch, dis_max and
+        bool clauses all score here.  None when no live term has
+        postings (a dead clause).  One live term is its slice as it is
+        (doc-unique, doc-ordered): no grouping."""
         import numpy as np
 
         segs_d, segs_s = [], []
@@ -554,27 +656,28 @@ class QueryEngine:
             segs_s.append((w * float(mult)) * sl.impact[method])
         if not segs_d:
             return None
-        du, inv = np.unique(np.concatenate(segs_d), return_inverse=True)
-        return du, np.bincount(inv, weights=np.concatenate(segs_s))
+        if len(segs_d) == 1:
+            return segs_d[0], segs_s[0]
+        return group_docs(np.concatenate(segs_d), np.concatenate(segs_s))[:2]
 
     def _turbo_score_map(self, query: str, method: str = "bm25",
                          terms: Optional[List[str]] = None,
                          idf_map: Optional[Dict[str, float]] = None):
         """Full per-doc score map ``(docs_u, scores)`` on the driver —
-        the multi_match per-field building block (result-identical to
-        :meth:`score_plan`).  None -> caller falls back to the plan."""
+        the ranked and multi_match per-field building block
+        (result-identical to :meth:`score_plan`).  None -> caller falls
+        back to the plan."""
         import numpy as np
 
         if terms is None:
             terms = self._terms(query)
-        got = self._turbo_scored_rows(terms, method, idf_map)
+        got = self._turbo_bag(terms, method, idf_map)
         if got is None:
             return None
-        _uniq, _codes, doc, s = got
-        if doc.size == 0:
-            return (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
-        docs_u, inv = np.unique(doc, return_inverse=True)
-        return docs_u, np.bincount(inv, weights=s)
+        acc = self._turbo_accum(*got, method)
+        if acc is None:
+            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+        return acc
 
     def _turbo_ranked(self, query: str, k: int, method: str,
                       want_total: bool,
@@ -599,16 +702,12 @@ class QueryEngine:
             return None
         import numpy as np
 
-        if terms is None:
-            terms = self._terms(query)
-        got = self._turbo_scored_rows(terms, method)
+        got = self._turbo_score_map(query, method, terms)
         if got is None:
             return None
-        _uniq, _codes, doc, s = got
-        if doc.size == 0:
+        docs_u, scores = got
+        if docs_u.size == 0:
             return empty_result(query, want_total)
-        docs_u, inv = np.unique(doc, return_inverse=True)
-        scores = np.bincount(inv, weights=s)
         if filter_docs is not None:
             allow = np.asarray(sorted({int(d) for d in filter_docs}),
                                dtype=np.int64)
@@ -922,8 +1021,6 @@ class QueryEngine:
         (result-identical; shares :meth:`_turbo_scored_rows`)."""
         if not self.turbo:
             return None
-        import numpy as np
-
         terms = self._terms(query)
         if not terms:
             return empty_result(query, want_total)
@@ -938,9 +1035,8 @@ class QueryEngine:
         _uniq, _codes, doc, s = got
         if doc.size == 0:
             return empty_result(query, want_total)
-        docs_u, inv = np.unique(doc, return_inverse=True)
-        scores = np.bincount(inv, weights=s)
-        keep = np.bincount(inv) >= required
+        docs_u, scores, n_terms, _ = group_docs(doc, s)
+        keep = n_terms >= required
         docs_u, scores = docs_u[keep], scores[keep]
         return turbo_topk(docs_u, scores, k,
                           int(docs_u.size) if want_total else None, query)
@@ -1068,16 +1164,13 @@ class QueryEngine:
             slices = self._turbo_slices(uniq_exp)
             if slices is None:
                 return None
-            pdocs = np.unique(
-                np.concatenate([sl.sdoc for sl in slices.values()])
-            )
+            pdocs = doc_union([sl.sdoc for sl in slices.values()])
         all_doc = np.concatenate([doc, pdocs])
         if all_doc.size == 0:
             return empty_result(query, want_total)
         all_s = np.concatenate([s, np.ones(pdocs.size, dtype=np.float64)])
-        docs_u, inv = np.unique(all_doc, return_inverse=True)
-        scores = np.bincount(inv, weights=all_s)
-        keep = np.bincount(inv) >= required
+        docs_u, scores, n_clauses, _ = group_docs(all_doc, all_s)
+        keep = n_clauses >= required
         docs_u, scores = docs_u[keep], scores[keep]
         return turbo_topk(docs_u, scores, k,
                           int(docs_u.size) if want_total else None, query)
@@ -1681,11 +1774,11 @@ class QueryEngine:
 
     def _turbo_boolean(self, query: str, k: int) -> Optional[dict]:
         """Driver-side boolean evaluation for small slices: per-term
-        doc-id sets from a pyarrow pruned postings read, Python set
-        algebra mirroring ``evaluate_rpn_df`` exactly (NOT pops one
-        operand and subtracts from the doc universe, missing operands
-        are the empty set).  Declines (None) when Σ df — plus the doc
-        universe, if NOT is present — exceeds the cutover."""
+        doc-id sets from the cached slices, set algebra mirroring
+        ``evaluate_rpn_df`` exactly (NOT pops one operand and subtracts
+        from the doc universe, missing operands are the empty set).
+        Declines (None) when Σ df — plus the doc universe, if NOT is
+        present — exceeds the cutover."""
         if not self.turbo:
             return None
         rpn = to_rpn(
@@ -1702,9 +1795,6 @@ class QueryEngine:
         import numpy as np
 
         empty = np.empty(0, dtype=np.int64)
-        # sorted-unique doc-id array per term: postings rows are unique
-        # per (term, doc)
-        term_arrays = {t: np.sort(sl.doc) for t, sl in slices.items()}
         universe = empty
         if needs_universe:
             try:
@@ -1712,7 +1802,8 @@ class QueryEngine:
             except Exception:
                 return None
 
-        # numpy set algebra over sorted-unique arrays, mirroring
+        # set algebra over sorted-unique arrays (a slice's ``doc`` is
+        # one already; AND/NOT are searchsorted membership), mirroring
         # evaluate_rpn_df (NOT pops one operand; missing operand = empty)
         stack: list = []
 
@@ -1722,15 +1813,15 @@ class QueryEngine:
         for tok in rpn:
             if tok == "AND":
                 b_a, a_a = pop(), pop()
-                stack.append(np.intersect1d(a_a, b_a, assume_unique=True))
+                stack.append(a_a[sorted_member(a_a, b_a)])
             elif tok == "OR":
                 b_a, a_a = pop(), pop()
                 stack.append(np.union1d(a_a, b_a))
             elif tok == "NOT":
                 a_a = pop()
-                stack.append(np.setdiff1d(universe, a_a, assume_unique=True))
+                stack.append(universe[~sorted_member(universe, a_a)])
             else:
-                stack.append(term_arrays.get(tok, empty))
+                stack.append(slices[tok].doc)
         ids = stack[0] if stack else empty  # already sorted ascending
         return {
             "query": query,
@@ -2125,12 +2216,9 @@ class QueryEngine:
                 q_scores.append(acc[1])
         if not q_docs:
             return empty_result(None, want_total)
-        D = np.concatenate(q_docs)
-        S = np.concatenate(q_scores)
-        docs_u, inv = np.unique(D, return_inverse=True)
-        tot = np.bincount(inv, weights=S)
-        best = np.zeros(docs_u.size, dtype=np.float64)
-        np.maximum.at(best, inv, S)
+        docs_u, tot, _n, best = group_docs(
+            np.concatenate(q_docs), np.concatenate(q_scores), with_max=True
+        )
         score = best + float(tie_breaker) * (tot - best)
         return turbo_topk(docs_u, score, k,
                           int(docs_u.size) if want_total else None)
@@ -2368,10 +2456,9 @@ class QueryEngine:
             """Sorted unique docs containing ANY live term (filter
             context — no idf/doc_len gating: membership keeps the
             doc_len == 0 rows scoring drops)."""
-            segs = [slices[t].doc for t in set(terms) if t in slices]
-            if not segs:
-                return np.array([], dtype=np.int64)
-            return np.unique(np.concatenate(segs))
+            return doc_union(
+                [slices[t].doc for t in set(terms) if t in slices]
+            )
 
         must_acc = []
         for c in must_t:
@@ -2386,7 +2473,7 @@ class QueryEngine:
             segs = [a[0] for a in must_acc + should_acc]
             if not segs:
                 return empty_result(None, want_total)
-            U = np.unique(np.concatenate(segs))
+            U = doc_union(segs)
         else:
             U = universe
         score = np.zeros(U.size, dtype=np.float64)
@@ -2407,12 +2494,9 @@ class QueryEngine:
             add(a, ns)
         keep = (nm == len(must_acc)) & (ns >= msm)
         for c in filt_t:
-            fd = member(c)
-            keep &= np.isin(U, fd, assume_unique=True)
+            keep &= sorted_member(U, member(c))
         for c in not_t:
-            nd = member(c)
-            if nd.size:
-                keep &= ~np.isin(U, nd, assume_unique=True)
+            keep &= ~sorted_member(U, member(c))
         return turbo_topk(U[keep], score[keep], k,
                           int(keep.sum()) if want_total else None)
 

@@ -453,3 +453,122 @@ def test_remove_by_doc_ids_equals_remove_by_urls(spark, corpora, tmp_index_root)
     mc = bc.update_index(remove_urls=urls[:4], remove_doc_ids=ids[4:],
                          compact=False)
     assert mc["tombstones"] == sorted(ids)
+
+
+def _hits_match(got, want):
+    """Same doc ids in the same order; scores within 1e-9 (the plan
+    tier sums in Spark's order, the turbo tier in term order)."""
+    assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
+    for g, w in zip(got, want):
+        assert abs(g["score"] - w["score"]) < 1e-9
+
+
+def test_salted_index_turbo_doc_order_and_plan_identity(spark, corpora,
+                                                        tmp_index_root):
+    """On a ``shuffle_salt=3`` index with a delta segment and tombstones
+    the pyarrow read order is not doc order, yet every cached
+    ``TermSlice`` holds its rows in strictly increasing doc-id order
+    (the sort-free warm tier relies on it), and the turbo tier answers
+    ``boolean_topk`` (AND, OR, NOT, nested), ``ranked`` and
+    ``batch_ranked`` exactly like the plan tier, cold and warm, with
+    zero Spark jobs."""
+    import numpy as np
+
+    from tests.test_spark_engine import BOOLEAN_QUERIES, RANKED_QUERIES
+    from tests.test_wand import _spark_jobs
+
+    base, extra = corpora
+    d = os.path.join(tmp_index_root, "salted_turbo")
+    b = IndexBuilder(
+        spark, d, IndexConfig(n_buckets=4, doc_range_bits=6, shuffle_salt=3)
+    )
+    b.build(base)
+    removed = [
+        r["url"]
+        for r in spark.read.parquet(os.path.join(d, "docs"))
+        .orderBy("doc_id").limit(5).collect()
+    ]
+    b.update_index(add=extra, remove_urls=removed, compact=False)
+    bool_q = BOOLEAN_QUERIES + [
+        "(visit AND mail) OR NOT sparkhead",
+        "visit AND NOT (mail OR sparkhead)",
+    ]
+    ranked_q = [q for q in RANKED_QUERIES if q.strip()]
+
+    def run(eng):
+        out = {q: eng.boolean_topk(q, k=50) for q in bool_q}
+        for q in ranked_q:
+            out[q] = eng.ranked(q, k=20)
+        out["batch"] = eng.batch_ranked(ranked_q, k=20)
+        return out
+
+    want = run(QueryEngine(spark, d, turbo=False))
+    assert sum(want[q]["total_hits"] for q in bool_q) > 0
+    turbo = QueryEngine(spark, d)
+    for phase in ("cold", "warm"):
+        got, jobs = _spark_jobs(spark, f"salted_turbo_{phase}", run, turbo)
+        assert jobs == 0, phase
+        for q in bool_q:
+            assert got[q] == want[q], (phase, q)
+        for q in ranked_q:
+            assert got[q]["total_hits"] == want[q]["total_hits"], (phase, q)
+            _hits_match(got[q]["results"], want[q]["results"])
+        for q in ranked_q:
+            _hits_match(got["batch"][q], want["batch"][q])
+    cached = turbo._term_postings_cache
+    assert sum(sl.doc.size > 1 for sl in cached.values()) >= 5
+    for t, sl in cached.items():
+        assert (np.diff(sl.doc) > 0).all(), t
+        assert (np.diff(sl.sdoc) > 0).all(), t
+
+
+def test_engine_construction_and_turbo_reads_run_no_spark_jobs(
+        spark, corpora, tmp_index_root):
+    """The plan tier's frames (live postings, docs, dictionary) are
+    built on first plan-tier use, so constructing a ``QueryEngine`` and
+    serving turbo ``ranked``/``boolean_topk`` — cold, warm, and after
+    an ``update_index`` commit refreshed the engine — launch 0 Spark
+    jobs; the plan tier still answers like the turbo tier after the
+    refresh, over the new generation's frames."""
+    from tests.test_spark_engine import BOOLEAN_QUERIES, RANKED_QUERIES
+    from tests.test_wand import _spark_jobs
+
+    base, extra = corpora
+    d = os.path.join(tmp_index_root, "lazy_frames")
+    b = IndexBuilder(spark, d, IndexConfig(n_buckets=4, doc_range_bits=6))
+    b.build(base)
+    ranked_q = [q for q in RANKED_QUERIES if q.strip()]
+
+    (eng, plan), jobs = _spark_jobs(
+        spark, "lazy_ctor",
+        lambda: (QueryEngine(spark, d), QueryEngine(spark, d, turbo=False)),
+    )
+    assert jobs == 0
+
+    def serve():
+        return ([eng.ranked(q, k=10) for q in ranked_q]
+                + [eng.boolean_topk(q, k=10) for q in BOOLEAN_QUERIES])
+
+    for phase in ("cold", "warm"):
+        _res, jobs = _spark_jobs(spark, f"lazy_{phase}", serve)
+        assert jobs == 0, phase
+    assert plan.ranked(ranked_q[0], k=10)["results"]  # frames built now
+    assert plan._docs.count() == plan.doc_count
+
+    removed = [
+        r["url"]
+        for r in spark.read.parquet(os.path.join(d, "docs"))
+        .orderBy("doc_id").limit(5).collect()
+    ]
+    b.update_index(add=extra, remove_urls=removed, compact=False)
+    after, jobs = _spark_jobs(spark, "lazy_after_commit", serve)
+    assert jobs == 0
+    for q, t in zip(ranked_q, after):
+        p = plan.ranked(q, k=10)
+        assert p["total_hits"] == t["total_hits"], q
+        _hits_match(p["results"], t["results"])
+    for q, t in zip(BOOLEAN_QUERIES, after[len(ranked_q):]):
+        assert plan.boolean_topk(q, k=10) == t, q
+    # the refresh dropped the old generation's frames
+    assert plan._docs.count() == plan.doc_count
+    assert plan._docs.filter(F.col("url").isin(removed)).count() == 0
