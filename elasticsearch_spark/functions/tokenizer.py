@@ -113,7 +113,7 @@ def preprocess_boolean_query(query: str, stem_tokens: bool = True) -> Tuple[str,
         elif not stem_tokens:
             processed.append(word)
         elif word.isalnum() and word not in ENGLISH_STOPWORDS:
-            processed.append(stem(word))
+            processed.append(_stem_cached(word))
     return tuple(processed)
 
 

@@ -26,7 +26,7 @@ from __future__ import annotations
 import json
 import os
 from contextlib import contextmanager
-from functools import cached_property
+from functools import cached_property, lru_cache
 from typing import Dict, List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scoring import B_DEFAULT, K1_DEFAULT
 from ..functions.tokenizer import (
+    BOOLEAN_OPERATORS,
     is_boolean_query,
     preprocess_boolean_query,
     preprocess_query,
@@ -160,6 +161,87 @@ def sorted_member(a, b):
     return b[pos] == a
 
 
+@lru_cache(maxsize=4096)
+def parse_boolean(query: str, stem_tokens: bool
+                  ) -> Tuple[Tuple[str, ...], Tuple[str, ...], bool]:
+    """``query`` -> ``(rpn, terms, negated)``: the RPN of the boolean
+    query (``oracle.engine.to_rpn`` over ``preprocess_boolean_query``),
+    its distinct operand terms in sorted order, and whether the result
+    is a complement (a dry run of :func:`boolean_docs`' complement flags
+    over the RPN: only then is the doc universe needed).  A pure
+    function of the string and the stem flag, so it is memoized across
+    queries and engines; the memo is bounded."""
+    rpn = to_rpn(preprocess_boolean_query(query, stem_tokens=stem_tokens))
+    terms = tuple(sorted({t for t in rpn if t not in BOOLEAN_OPERATORS}))
+    flags: List[bool] = []
+
+    def pop() -> bool:
+        return flags.pop() if flags else False
+
+    for tok in rpn:
+        if tok == "NOT":
+            flags.append(not pop())
+        elif tok in ("AND", "OR"):
+            b, a = pop(), pop()
+            flags.append(a and b if tok == "AND" else a or b)
+        else:
+            flags.append(False)
+    return rpn, terms, bool(flags and flags[0])
+
+
+def _and_flagged(a, a_neg: bool, b, b_neg: bool):
+    """AND of two (ascending set, complemented) pairs, never
+    materializing a complement: A∩B, A∖B, B∖A, or ¬(A∪B)."""
+    import numpy as np
+
+    if a_neg and b_neg:
+        return np.union1d(a, b), True
+    if a_neg:
+        return b[~sorted_member(b, a)], False
+    if b_neg:
+        return a[~sorted_member(a, b)], False
+    if a.size > b.size:
+        a, b = b, a
+    return a[sorted_member(a, b)], False
+
+
+def boolean_docs(rpn: Sequence[str], term_docs, universe=None):
+    """Ascending doc ids matching the boolean ``rpn`` — the ONE turbo
+    boolean set-algebra kernel.  ``term_docs`` maps every operand term
+    to its ascending unique doc-id array (empty when unindexed);
+    ``universe`` is the ascending live doc-id array.  Same semantics as
+    the oracle's ``evaluate_rpn`` and the plan's ``evaluate_rpn_df``: a
+    missing operand is the empty set and the bottom stack entry is the
+    result.  Sets are (sorted array, complemented) pairs — NOT flips a
+    flag, A AND NOT B is ``A[~sorted_member(A, B)]``, OR goes through
+    De Morgan — so the work is O(Σdf log Σdf) and ``universe`` is read
+    only when the result itself is a complement
+    (:func:`parse_boolean`'s ``negated``; pass None otherwise)."""
+    import numpy as np
+
+    empty = np.empty(0, dtype=np.int64)
+    stack: list = []
+
+    def pop():
+        return stack.pop() if stack else (empty, False)
+
+    for tok in rpn:
+        if tok == "NOT":
+            a, a_neg = pop()
+            stack.append((a, not a_neg))
+        elif tok in ("AND", "OR"):
+            (b, b_neg), (a, a_neg) = pop(), pop()
+            if tok == "AND":
+                stack.append(_and_flagged(a, a_neg, b, b_neg))
+            else:  # A OR B = NOT (NOT A AND NOT B)
+                s, s_neg = _and_flagged(a, not a_neg, b, not b_neg)
+                stack.append((s, not s_neg))
+        else:
+            stack.append((term_docs[tok], False))
+    s, s_neg = stack[0] if stack else (empty, False)
+    return universe[~sorted_member(universe, s)] if s_neg else s
+
+
 def turbo_topk(docs, scores, k: int, total: Optional[int],
                query: Optional[str] = None) -> dict:
     """Driver-side top-k in the reference result shape: the ``k`` best
@@ -268,6 +350,8 @@ class QueryEngine:
         self.spark = spark
         self.index_dir = index_dir
         self.turbo = turbo and os.environ.get("SPARK_GRAFT_TURBO", "1") != "0"
+        # stat'ed on every read (_refresh_if_stale)
+        self._manifest_path = os.path.join(index_dir, "manifest.json")
         self._load()
 
     def _load(self) -> None:
@@ -317,9 +401,7 @@ class QueryEngine:
         if hasattr(self, "_blocks_df"):
             del self._blocks_df
         try:
-            self._manifest_mtime = os.path.getmtime(
-                os.path.join(index_dir, "manifest.json")
-            )
+            self._manifest_mtime = os.path.getmtime(self._manifest_path)
         except OSError:
             self._manifest_mtime = None
 
@@ -348,7 +430,7 @@ class QueryEngine:
         manifest mtime (update_index rewrites it last), one os.stat per
         query."""
         try:
-            m = os.path.getmtime(os.path.join(self.index_dir, "manifest.json"))
+            m = os.path.getmtime(self._manifest_path)
         except OSError:
             return
         if m != self._manifest_mtime:
@@ -389,10 +471,10 @@ class QueryEngine:
         import math
 
         self._refresh_if_stale()
-        missing = sorted({t for t in terms if t not in self._idf_cache})
-        if missing:
+        if not all(t in self._idf_cache for t in terms):
             from .reader import live_df_lookup
 
+            missing = sorted({t for t in terms if t not in self._idf_cache})
             dfs = live_df_lookup(
                 self.spark, self.index_dir, missing, self.n_buckets, self._manifest
             )
@@ -433,8 +515,8 @@ class QueryEngine:
         and invalidated with every other engine cache on manifest-mtime
         change (_refresh_if_stale -> _load)."""
         cache = self._term_postings_cache
-        missing = sorted({t for t in terms if t not in cache})
-        if missing:
+        if not all(t in cache for t in terms):
+            missing = sorted({t for t in terms if t not in cache})
             for t, cols in self._postings_point_read_raw(missing).items():
                 sl = cache[t] = TermSlice(*cols)
                 self._term_cache_rows += sl.rows
@@ -1755,14 +1837,11 @@ class QueryEngine:
         from .boolean import evaluate_rpn_df
 
         self._refresh_if_stale()
-
-        rpn = to_rpn(
-            preprocess_boolean_query(query, stem_tokens=not self.pretokenized)
-        )
+        rpn, _terms, _neg = parse_boolean(query, not self.pretokenized)
         return evaluate_rpn_df(
             rpn,
             lambda t: self._pruned_postings([t]).select("doc_id").distinct(),
-            self._docs.select("doc_id"),
+            lambda: self._docs.select("doc_id"),
         )
 
     def boolean(self, query: str) -> List[int]:
@@ -1773,60 +1852,36 @@ class QueryEngine:
         return sorted(r["doc_id"] for r in self.boolean_plan(query).collect())
 
     def _turbo_boolean(self, query: str, k: int) -> Optional[dict]:
-        """Driver-side boolean evaluation for small slices: per-term
-        doc-id sets from the cached slices, set algebra mirroring
-        ``evaluate_rpn_df`` exactly (NOT pops one operand and subtracts
-        from the doc universe, missing operands are the empty set).
-        Declines (None) when Σ df — plus the doc universe, if NOT is
-        present — exceeds the cutover."""
+        """Driver-side boolean evaluation over the cached slices
+        (:func:`boolean_docs`, the plan twin is ``evaluate_rpn_df``).
+        The query is parsed once per distinct string
+        (:func:`parse_boolean`).  Sets are the sorted slices carrying a
+        complement flag, so the work is O(Σdf); the doc universe is
+        read — and ``doc_count`` charged at admission — only when the
+        result itself is a complement.  Declines (None) above the
+        cutover."""
         if not self.turbo:
             return None
-        rpn = to_rpn(
-            preprocess_boolean_query(query, stem_tokens=not self.pretokenized)
-        )
-        terms = sorted({t for t in rpn if t not in ("AND", "OR", "NOT")})
+        rpn, terms, negated = parse_boolean(query, not self.pretokenized)
         self.term_idf(terms)  # populate the df cache (live, signed)
-        needs_universe = "NOT" in rpn
         slices = self._turbo_slices(
-            terms, extra=self.doc_count if needs_universe else 0
+            terms, extra=self.doc_count if negated else 0
         )
         if slices is None:
             return None
-        import numpy as np
-
-        empty = np.empty(0, dtype=np.int64)
-        universe = empty
-        if needs_universe:
+        universe = None
+        if negated:
             try:
                 universe = self._doc_universe()
             except Exception:
                 return None
-
-        # set algebra over sorted-unique arrays (a slice's ``doc`` is
-        # one already; AND/NOT are searchsorted membership), mirroring
-        # evaluate_rpn_df (NOT pops one operand; missing operand = empty)
-        stack: list = []
-
-        def pop() -> "np.ndarray":
-            return stack.pop() if stack else empty
-
-        for tok in rpn:
-            if tok == "AND":
-                b_a, a_a = pop(), pop()
-                stack.append(a_a[sorted_member(a_a, b_a)])
-            elif tok == "OR":
-                b_a, a_a = pop(), pop()
-                stack.append(np.union1d(a_a, b_a))
-            elif tok == "NOT":
-                a_a = pop()
-                stack.append(universe[~sorted_member(universe, a_a)])
-            else:
-                stack.append(slices[tok].doc)
-        ids = stack[0] if stack else empty  # already sorted ascending
+        ids = boolean_docs(
+            rpn, {t: sl.doc for t, sl in slices.items()}, universe
+        )
         return {
             "query": query,
             "total_hits": int(ids.size),
-            "results": [{"doc_id": int(d), "score": 1.0} for d in ids[:k]],
+            "results": [{"doc_id": d, "score": 1.0} for d in ids[:k].tolist()],
         }
 
     def _doc_universe(self):

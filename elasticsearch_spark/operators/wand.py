@@ -104,9 +104,22 @@ class WandEngine:
     block-max plan (:meth:`topk_df` + :meth:`total_hits`) above it."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
-        self.spark = spark
-        self.index_dir = index_dir
-        self.engine = QueryEngine(spark, index_dir)
+        self._wrap(QueryEngine(spark, index_dir))
+
+    @classmethod
+    def from_engine(cls, engine: QueryEngine) -> "WandEngine":
+        """A WandEngine over an existing ``engine``: one ``TermSlice``
+        cache, one idf memo and one refresh per commit for both, where
+        ``WandEngine(spark, engine.index_dir)`` would read and cache
+        every term a second time."""
+        wand = cls.__new__(cls)
+        wand._wrap(engine)
+        return wand
+
+    def _wrap(self, engine: QueryEngine) -> None:
+        self.spark = engine.spark
+        self.index_dir = engine.index_dir
+        self.engine = engine
         self._blocks_manifest = None
 
     @property

@@ -438,7 +438,7 @@ def _boolean(spark, sf_dir, query: str) -> DataFrame:
     out = evaluate_rpn_df(
         rpn,
         lambda t: tok.filter(F.col("term") == t).select("doc_id").distinct(),
-        _docs(spark, sf_dir).select("doc_id"),
+        lambda: _docs(spark, sf_dir).select("doc_id"),
     )
     return out.orderBy("doc_id")
 
@@ -1536,7 +1536,7 @@ def wand_bm25_topk(spark, sf_dir):
     from ..operators.wand import WandEngine
 
     eng = _engine(spark, sf_dir)
-    wand = WandEngine(spark, eng.index_dir)
+    wand = WandEngine.from_engine(eng)
     res = wand.topk_df(" ".join(Q1_TERMS), k=10)
     return res.select(
         "doc_id", F.round("score", 6).alias("score_r")
@@ -1861,7 +1861,7 @@ def wand_total_hits(spark, sf_dir):
     from ..operators.wand import WandEngine
 
     eng = _engine(spark, sf_dir)
-    wand = WandEngine(spark, eng.index_dir)
+    wand = WandEngine.from_engine(eng)
     total = wand.total_hits(" ".join(Q1_TERMS))
     return (
         wand.topk_df(" ".join(Q1_TERMS), k=10)
@@ -1878,7 +1878,7 @@ def wand_total_hits_turbo(spark, sf_dir):
     from ..operators.wand import WandEngine
 
     eng = _engine(spark, sf_dir)
-    wand = WandEngine(spark, eng.index_dir)
+    wand = WandEngine.from_engine(eng)
     res = wand.topk(" ".join(Q1_TERMS), k=10, with_total_hits=True)
     return spark.createDataFrame(
         [

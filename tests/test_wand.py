@@ -79,6 +79,25 @@ def test_wand_matches_taat_plan(spark, index_dir):
             ), (query, total)
 
 
+def test_wand_from_engine_shares_the_engine(spark, index_dir):
+    """``WandEngine.from_engine`` wraps the given engine (one TermSlice
+    cache, one refresh) and answers like a WandEngine that builds its
+    own, on the turbo tier and on the block-max plan."""
+    eng = QueryEngine(spark, index_dir)
+    wand = WandEngine.from_engine(eng)
+    assert wand.engine is eng
+    assert (wand.spark, wand.index_dir) == (spark, index_dir)
+    own = WandEngine(spark, index_dir)
+    for query in QUERIES:
+        for total in (False, True):
+            assert wand.topk(query, k=10, with_total_hits=total) == own.topk(
+                query, k=10, with_total_hits=total
+            ), (query, total)
+    assert set(eng._term_postings_cache) == set(own.engine._term_postings_cache)
+    rows = [tuple(r) for r in wand.topk_df(QUERIES[0], k=10).collect()]
+    assert rows == [tuple(r) for r in own.topk_df(QUERIES[0], k=10).collect()]
+
+
 def test_wand_empty_query(spark, index_dir):
     wand = WandEngine(spark, index_dir)
     assert wand.topk("the and of", k=10)["results"] == []
