@@ -378,7 +378,7 @@ class MultiMatchEngine:
             if eng is None:
                 raise KeyError(f"field {fname!r} is not indexed "
                                f"(have {self.fields})")
-            eng.term_idf(distinct)  # populate the live df cache
+            eng._fill_df(distinct)
             for t in distinct:
                 bdf[t] = max(bdf[t], eng._df_cache.get(t, 0))
             n = max(n, eng.doc_count)
@@ -643,7 +643,7 @@ class MultiMatchEngine:
         field_lens = []
         for fname, boost in boosts.items():
             eng = self.engines[fname]
-            eng.term_idf(uniq)  # populate the live df cache
+            eng._fill_df(uniq)
             # ONE batched point read per field through the hot-term
             # cache, codes repeated over the per-term slices — the
             # _turbo_scored_rows recipe
@@ -721,15 +721,6 @@ class MultiMatchEngine:
         )
 
     # --------------------------------------------------------- turbo tier
-    def _turbo_field_scores(self, eng, query: str, method: str):
-        """Full per-doc score map for one field on the driver —
-        delegates to the SHARED turbo scoring kernel
-        (``QueryEngine._turbo_score_map`` → ``_turbo_accum``):
-        one source of BM25/TF-IDF math for the single-field and
-        multi-field tiers, so rank identity is structural, not
-        test-only.  None -> caller falls back to the plan tier."""
-        return eng._turbo_score_map(query, method)
-
     def _turbo_multi_match(self, query: str, k: int,
                            boosts: Dict[str, float], match_type: str,
                            tie_breaker: float, method: str,
@@ -744,7 +735,9 @@ class MultiMatchEngine:
                                f"(have {self.fields})")
             if not eng.turbo:
                 return None
-            got = self._turbo_field_scores(eng, query, method)
+            # the shared single-field turbo kernel: one source of the
+            # BM25/TF-IDF math for both engines
+            got = eng._turbo_score_map(query, method)
             if got is None:
                 return None
             docs_u, scores = got

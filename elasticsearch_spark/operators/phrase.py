@@ -11,23 +11,34 @@ after the preprocessing pipeline, so stopword removal shortens gaps —
 the only self-consistent definition when the index stores processed
 tokens, and the one Lucene uses with its default position increments).
 
-Plan shape (all built-in higher-order functions, JVM-side, no UDFs):
+One positional matcher serves the engine on both tiers: phrase,
+span_near and match_phrase_prefix are all lists of SLOTS (alternative
+terms per phrase position), and
+
+    decode_positional_rows:  compressed block rows -> {term: {doc: positions}}
+    match_slots:             per-slot union -> candidate docs -> per-doc
+                             starts (shifted intersection, or a
+                             ``*_starts`` kernel with slop / unordered)
+                             -> [(doc_id, n_occurrences, starts)]
+
+run per doc range inside :func:`phrase_slots_kernel` (the plan tier's
+``groupBy(range_id).applyInPandas``) and over the driver's pyarrow read
+in ``QueryEngine._turbo_phrase`` (the turbo tier).
+
+The join fold (:func:`phrase_match` / :func:`phrase_match_slots`, all
+JVM-side higher-order functions) serves only :func:`phrase_query` over a
+tokenized docs table, which has no block layout:
 
     for each phrase term i: postings_i = (doc_id, positions:array<int>)
     shift:      p_i' = transform(positions, x -> x - i)
     match:      fold  p = array_intersect(p, p_i')  over inner joins on
                 doc_id, filtering size(p) > 0 as soon as it empties
-                (early pruning: each join shrinks the candidate set)
     result:     (doc_id, n_occurrences, start_positions)
-
-At 10^12-doc scale each join is doc_id-equi and term-filtered, so
-Catalyst broadcasts the rare-term side; position arrays stay bounded by
-per-doc term frequency.
 """
 
 from __future__ import annotations
 
-from typing import Callable, List, Optional, Sequence
+from typing import Callable, Dict, Iterable, List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -216,10 +227,11 @@ def unordered_starts(slot_pos, slop: int):
 
 
 def _starts_fn(slop: int, slop_mode: str):
-    """Resolve the per-doc sloppy-match kernel shared by the Spark
-    tiers: ``ordered`` = :func:`sloppy_starts` (in-order, the engine's
+    """Resolve the per-doc match kernel :func:`match_slots` runs:
+    ``ordered`` = :func:`sloppy_starts` (in-order, the engine's
     historical semantics), ``moves`` = :func:`movable_starts`
-    (Lucene/ES transposition-aware)."""
+    (Lucene/ES transposition-aware), ``unordered`` =
+    :func:`unordered_starts` (span_near ``in_order=false``)."""
     if slop_mode == "ordered":
         return sloppy_starts
     if slop_mode == "moves":
@@ -229,30 +241,79 @@ def _starts_fn(slop: int, slop_mode: str):
     raise ValueError(f"unknown slop_mode {slop_mode!r}")
 
 
-def phrase_match_kernel(blocks: DataFrame, terms: Sequence[str],
-                        codec_name: str = "vbyte",
-                        tombstones: Optional[Sequence[int]] = None,
-                        slop: int = 0,
-                        slop_mode: str = "ordered") -> DataFrame:
-    """Positional phrase matching as ONE doc-range-partitioned kernel
-    over the compressed block layout — the WAND-kernel shape applied to
-    adjacency.
+def decode_positional_rows(rows, codec_name: str = "vbyte",
+                           tombstones: Optional[Iterable[int]] = None
+                           ) -> Dict[str, Dict[int, "np.ndarray"]]:
+    """Decode compressed block rows ``(term, doc_blob, tf_blob,
+    len_blob, pos_blob)`` into ``{term: {doc_id: positions}}``, dropping
+    tombstoned docs.  A term may have several rows (a range's base and
+    delta sources); their doc ids are disjoint, so they merge by plain
+    dict update."""
+    import numpy as np
 
-    ``blocks`` must already be pruned to the phrase terms' (bucket,
-    term) block runs and carry (term, range_id, doc_blob, tf_blob,
-    len_blob, pos_blob).  One ``groupBy(range_id).applyInPandas`` then
-    decodes each term's doc/tf/position streams ONCE per doc-range and
-    intersects shifted positions in numpy.  vs the k−1 join cascade
-    (:func:`phrase_match`, kept as the semantics oracle): a 4-term
-    phrase costs one bounded shuffle of the terms' block rows instead
-    of 3 distributed joins, and docs partition by range so no
-    cross-range state exists.  Identity to the join plan is
-    pytest-enforced; the ``phrase_*`` driver gates hash-check this
-    kernel against DuckDB."""
-    return phrase_slots_kernel(
-        blocks, [[t] for t in terms], codec_name, tombstones, slop,
-        slop_mode,
-    )
+    from ..functions import codec as C
+
+    tomb = frozenset(int(t) for t in tombstones) if tombstones else frozenset()
+    per_term: Dict[str, Dict[int, np.ndarray]] = {}
+    for term, doc_blob, tf_blob, len_blob, pos_blob in rows:
+        d, tf, _l = C.decode_block(doc_blob, tf_blob, len_blob, codec_name)
+        flat = C.decode_positions(pos_blob, tf, codec_name)
+        slot = per_term.setdefault(term, {})
+        for doc, pos in zip(d.tolist(), np.split(flat, np.cumsum(tf)[:-1])):
+            if doc not in tomb:
+                slot[doc] = pos
+    return per_term
+
+
+def match_slots(per_term: Dict[str, Dict[int, "np.ndarray"]],
+                slots: Sequence[Sequence[str]], slop: int = 0,
+                slop_mode: str = "ordered"
+                ) -> List[Tuple[int, int, "np.ndarray"]]:
+    """The one positional matcher: ``[(doc_id, n_occurrences,
+    starts)]`` in doc-id order, ``starts`` sorted.  Each slot is a SET
+    of alternative terms; its positions within a doc are the union of
+    its alternatives' positions (one token per position, so the
+    alternatives are disjoint and occurrence counts stay exact).  A
+    slot with no term in ``per_term`` matches nothing.  At slop 0 the
+    ordered match is the shifted-position intersection; otherwise (and
+    always for ``unordered``, which differs from adjacency even at slop
+    0) the mode's per-doc ``*_starts`` kernel decides."""
+    import numpy as np
+
+    starts_fn = _starts_fn(slop, slop_mode)
+    sloppy = bool(slop) or slop_mode == "unordered"
+    slot_maps = []
+    for alts in slots:
+        present = [per_term[t] for t in alts if t in per_term]
+        if not present:
+            return []
+        if len(present) == 1:
+            slot_maps.append(present[0])
+            continue
+        m: Dict[int, np.ndarray] = {}
+        for docs in present:
+            for doc, pos in docs.items():
+                prev = m.get(doc)
+                m[doc] = pos if prev is None else np.union1d(prev, pos)
+        slot_maps.append(m)
+    if not slot_maps:
+        return []
+    cand = set(slot_maps[0])
+    for m in slot_maps[1:]:
+        cand &= m.keys()
+    out = []
+    for doc in sorted(cand):
+        if sloppy:
+            p = starts_fn([m[doc] for m in slot_maps], slop)
+        else:
+            p = slot_maps[0][doc]
+            for i, m in enumerate(slot_maps[1:], start=1):
+                p = np.intersect1d(p, m[doc] - i)
+                if p.size == 0:
+                    break
+        if p.size:
+            out.append((doc, int(p.size), np.sort(p)))
+    return out
 
 
 def phrase_slots_kernel(blocks: DataFrame, slots: Sequence[Sequence[str]],
@@ -260,76 +321,33 @@ def phrase_slots_kernel(blocks: DataFrame, slots: Sequence[Sequence[str]],
                         tombstones: Optional[Sequence[int]] = None,
                         slop: int = 0,
                         slop_mode: str = "ordered") -> DataFrame:
-    """Generalized phrase kernel: each phrase position (``slot``) is a
-    SET of alternative terms — the shape behind ES ``match_phrase_prefix``
-    (last slot = the prefix's dictionary expansions) and synonym-aware
-    phrases.  A slot's positions within a doc are the union of its
-    alternatives' positions; since one token occupies each position,
-    alternatives are disjoint per (doc, position) and occurrence counts
-    stay exact.  Singleton slots reduce to the plain phrase kernel."""
+    """The plan tier's positional kernel: ONE doc-range-partitioned
+    pass over the compressed block layout.  ``blocks`` must already be
+    pruned to the slot terms' (bucket, term) block runs and carry
+    (term, range_id, doc_blob, tf_blob, len_blob, pos_blob); one
+    ``groupBy(range_id).applyInPandas`` decodes each range's rows
+    (:func:`decode_positional_rows`) and matches them
+    (:func:`match_slots`).  A k-term phrase costs one bounded shuffle
+    of the terms' block rows, and a match spans one doc, so no state
+    crosses ranges."""
     slots = [list(s) for s in slots]
-    uniq = sorted({t for s in slots for t in s})
-    tomb_set = frozenset(int(t) for t in tombstones) if tombstones else frozenset()
-    starts_fn = _starts_fn(slop, slop_mode)
-    # unordered (span_near inOrder=false) differs from adjacency even at
-    # slop=0, so it always routes through its starts kernel
-    sloppy = bool(slop) or slop_mode == "unordered"
+    _starts_fn(slop, slop_mode)  # reject an unknown mode on the driver
+    cols = ["term", "doc_blob", "tf_blob", "len_blob", "pos_blob"]
 
     def kernel(pdf):
-        import numpy as np
         import pandas as pd
 
-        from ..functions import codec as C
-
-        cols = ["doc_id", "n_occurrences", "start_positions"]
-        per_term: dict = {}
-        for row in pdf.itertuples(index=False):
-            if row.term not in uniq:
-                continue
-            d, tf, _l = C.decode_block(
-                row.doc_blob, row.tf_blob, row.len_blob, codec_name
-            )
-            flat = C.decode_positions(row.pos_blob, tf, codec_name)
-            splits = np.split(flat, np.cumsum(tf)[:-1])
-            slot = per_term.setdefault(row.term, {})
-            # multiple rows per (term, range) = base + delta sources;
-            # their doc ids are disjoint, so dict update merges cleanly
-            for doc, pos in zip(d.tolist(), splits):
-                if doc not in tomb_set:
-                    slot[doc] = pos
-        empty = pd.DataFrame(columns=cols).astype(
-            {"doc_id": "int64", "n_occurrences": "int64"}
+        per_term = decode_positional_rows(
+            pdf[cols].itertuples(index=False, name=None), codec_name,
+            tombstones,
         )
-        slot_maps = []
-        for alts in slots:
-            present = [t for t in alts if t in per_term]
-            if not present:
-                return empty
-            if len(present) == 1:
-                slot_maps.append(per_term[present[0]])
-            else:
-                m: dict = {}
-                for t in present:
-                    for doc, pos in per_term[t].items():
-                        prev = m.get(doc)
-                        m[doc] = pos if prev is None else np.union1d(prev, pos)
-                slot_maps.append(m)
-        cand = set(slot_maps[0])
-        for m in slot_maps[1:]:
-            cand &= m.keys()
-        out = []
-        for doc in sorted(cand):
-            if sloppy:
-                p = starts_fn([m[doc] for m in slot_maps], slop)
-            else:
-                p = slot_maps[0][doc]
-                for i, m in enumerate(slot_maps[1:], start=1):
-                    p = np.intersect1d(p, m[doc] - i)
-                    if p.size == 0:
-                        break
-            if p.size:
-                out.append((doc, int(p.size), np.sort(p).astype("int32").tolist()))
-        return pd.DataFrame(out, columns=cols)
+        out = [
+            (doc, n, p.astype("int32").tolist())
+            for doc, n, p in match_slots(per_term, slots, slop, slop_mode)
+        ]
+        return pd.DataFrame(
+            out, columns=["doc_id", "n_occurrences", "start_positions"]
+        )
 
     return blocks.groupBy("range_id").applyInPandas(
         kernel, schema=PHRASE_RESULT_SCHEMA
@@ -374,8 +392,8 @@ def phrase_match_slots(
     slots: Sequence[Sequence[str]],
     slop: int = 0,
 ) -> DataFrame:
-    """Join-cascade twin of :func:`phrase_slots_kernel` (semantics
-    oracle; also the fallback for pre-position-codec indexes).  A
+    """Join-fold twin of :func:`match_slots` over per-term positional
+    postings (serves :func:`phrase_query` over a tokens table).  A
     slot's positions are the per-doc union of its alternatives'
     positions (flatten + distinct — disjoint anyway, one token per
     position), then the same shifted ``array_intersect`` fold as

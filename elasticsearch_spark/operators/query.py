@@ -378,7 +378,7 @@ class QueryEngine:
         self._tombstones = R.tombstones(self._manifest)
         # the plan tier's frames are built on first use (see _postings):
         # constructing an engine or seeing a commit runs no Spark job
-        for name in ("_postings", "_docs", "_dictionary"):
+        for name in ("_postings", "_docs", "_dictionary", "_blocks"):
             self.__dict__.pop(name, None)
         # reference's idf cache (B6, selfindex_q_daat.py:114-117): terms
         # looked up once per engine lifetime; misses cached as 0.0 so an
@@ -392,14 +392,12 @@ class QueryEngine:
 
         self._term_postings_cache: "OrderedDict[str, TermSlice]" = OrderedDict()
         self._term_cache_rows = 0
-        self._universe_cache = None  # live doc-id array (boolean NOT)
-        self._doc_len_cache = None   # live (doc_id, doc_len) arrays
+        # live (doc_id, doc_len) arrays; the ids are boolean NOT's universe
+        self._doc_len_cache = None
         if hasattr(self, "_tfidf"):
             # the engine_tfidf_x3 gate caches the variant table here;
             # lazy re-read after index update
             del self._tfidf
-        if hasattr(self, "_blocks_df"):
-            del self._blocks_df
         try:
             self._manifest_mtime = os.path.getmtime(self._manifest_path)
         except OSError:
@@ -436,6 +434,16 @@ class QueryEngine:
         if m != self._manifest_mtime:
             self._load()
 
+    def _segment_paths(self, table: str) -> List[str]:
+        """The live sources of one index table for the driver-side
+        pyarrow readers: the base directory, then each delta segment's."""
+        from .reader import delta_segments
+
+        return [os.path.join(self.index_dir, table)] + [
+            os.path.join(self.index_dir, "segments", s, table)
+            for s in delta_segments(self._manifest)
+        ]
+
     # ---------------------------------------------------------------- util
     @contextmanager
     def _interactive(self):
@@ -463,11 +471,20 @@ class QueryEngine:
 
     def term_idf(self, terms: Sequence[str]) -> Dict[str, float]:
         """term -> idf ln((N+1)/(df+1)), memoized across queries (the
-        reference's idf_cache).  df is the LIVE document frequency —
-        driver-side pyarrow point reads over the signed dictionary
-        sources (base + delta-segment partials − removed-doc partials;
-        no Spark job), idf computed here from the live doc count, which
-        keeps scores exact across incremental updates."""
+        reference's idf_cache; see :meth:`_fill_df`)."""
+        self._fill_df(terms)
+        # unindexed terms carry 0.0 — callers treat 0-idf and missing
+        # identically (reference semantics)
+        return {t: self._idf_cache[t] for t in set(terms)}
+
+    def _fill_df(self, terms: Sequence[str]) -> None:
+        """Refresh a stale engine, then make sure ``_df_cache`` and
+        ``_idf_cache`` hold every term of ``terms``.  df is the LIVE
+        document frequency — driver-side pyarrow point reads over the
+        signed dictionary sources (base + delta-segment partials −
+        removed-doc partials; no Spark job), idf computed here from the
+        live doc count, which keeps scores exact across incremental
+        updates."""
         import math
 
         self._refresh_if_stale()
@@ -485,9 +502,6 @@ class QueryEngine:
                 self._idf_cache[t] = (
                     math.log(n1 / (df_v + 1)) if df_v > 0 else 0.0
                 )
-        # unindexed terms carry 0.0 — callers treat 0-idf and missing
-        # identically (reference semantics)
-        return {t: self._idf_cache[t] for t in set(terms)}
 
     # --------------------------------------------------- turbo fast path
     # LRU budget for the hot-term postings cache, in cached posting rows
@@ -543,7 +557,7 @@ class QueryEngine:
         """The turbo cutover: the tier is on and Σ live df over the
         distinct ``terms`` plus ``extra`` rows (boolean NOT's doc
         universe) is within TURBO_MAX_POSTINGS.  Live df comes from
-        ``_df_cache``, so callers run :meth:`term_idf` over ``terms``
+        ``_df_cache``, so callers run :meth:`_fill_df` over ``terms``
         first."""
         return self.turbo and (
             sum(self._df_cache.get(t, 0) for t in terms) + extra
@@ -607,14 +621,8 @@ class QueryEngine:
         import pyarrow.compute as pc
         import pyarrow.dataset as pads
 
-        from .reader import delta_segments
-
         terms = list(terms)
         buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
-        paths = [os.path.join(self.index_dir, "postings")] + [
-            os.path.join(self.index_dir, "segments", s, "postings")
-            for s in delta_segments(self._manifest)
-        ]
         cols = ["term", "doc_id", "tf", "doc_len"]
         types = [np.int64, np.int64, np.int32, np.int32]
         value_set = pa.array(terms, type=pa.string())
@@ -624,7 +632,7 @@ class QueryEngine:
             else None
         )
         parts: List[list] = [[], [], [], []]
-        for p in paths:
+        for p in self._segment_paths("postings"):
             ds = pads.dataset(p, partitioning="hive")
             expr = pads.field("bucket").isin(buckets) & pads.field("term").isin(terms)
             for batch in ds.to_batches(columns=cols, filter=expr):
@@ -679,7 +687,7 @@ class QueryEngine:
         if idf_map is not None:
             # blended-idf callers: the budget check needs THIS index's
             # live df — populate the cache (cheap driver point lookup)
-            self.term_idf(list(mult))
+            self._fill_df(list(mult))
         slices = self._turbo_slices(list(mult), method)
         if slices is None:
             return None
@@ -1242,7 +1250,7 @@ class QueryEngine:
         pdocs = np.empty(0, dtype=np.int64)
         if exp:
             uniq_exp = sorted(set(exp))
-            self.term_idf(uniq_exp)  # populate the live df cache
+            self._fill_df(uniq_exp)
             slices = self._turbo_slices(uniq_exp)
             if slices is None:
                 return None
@@ -1368,71 +1376,57 @@ class QueryEngine:
         return plan.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
     # -------------------------------------------------------------- phrase
-    def _positional_term_postings(self, term: str) -> DataFrame:
-        """``(doc_id, positions)`` for one term, served from the
-        COMPRESSED block layout: bucket-partition-pruned + term-predicate
-        scan of the blocks table, then an Arrow-batched kernel decodes
-        the delta-VByte doc/tf/position streams (positions split
-        per-posting by the tf counts).  Falls back to the uncompressed
-        positional postings for indexes built before pos_blob existed."""
-        blocks = self._blocks()
-        if blocks is None or "pos_blob" not in blocks.columns:
-            return (
-                self._pruned_postings([term])
-                .filter(F.col("term") == term)
-                .select("doc_id", "positions")
+    @cached_property
+    def _blocks(self) -> DataFrame:
+        """Live blocks (base ∪ delta segments) for the plan tier's
+        positional kernel — read on first use per index generation, like
+        ``_postings`` (``_load`` drops it)."""
+        from .reader import live_blocks
+
+        sources = [
+            df for df, _scale in live_blocks(
+                self.spark, self.index_dir, self._manifest, self.stats
             )
-        codec_name = self.stats["config"].get("codec", "vbyte")
-        bucket = term_bucket(term, self.n_buckets)
-        pruned = blocks.filter(
-            (F.col("bucket") == bucket) & (F.col("term") == term)
-        ).select("doc_blob", "tf_blob", "len_blob", "pos_blob")
+        ]
+        merged = sources[0]
+        for s in sources[1:]:
+            merged = merged.unionByName(s)
+        return merged
 
-        def decode(batches):
-            import numpy as np
-            import pandas as pd
+    def _positional_plan(self, slots: List[List[str]], slop: int = 0,
+                         slop_mode: str = "ordered") -> DataFrame:
+        """The plan tier's one positional read: ``(doc_id,
+        n_occurrences, start_positions)`` for ``slots`` (alternative
+        terms per phrase position) from the doc-range kernel
+        (:func:`~.phrase.phrase_slots_kernel`) over the live blocks,
+        pruned to the slot terms' (bucket, term) runs."""
+        if not self.stats["config"].get("positional"):
+            raise ValueError("index was not built with positional=True")
+        if not slots:
+            return self._empty_phrase_plan()
+        from .phrase import phrase_slots_kernel
 
-            from ..functions import codec as C
+        terms = sorted({t for s in slots for t in s})
+        buckets = sorted({term_bucket(t, self.n_buckets) for t in terms})
+        pruned = self._blocks.filter(
+            F.col("bucket").isin(buckets) & F.col("term").isin(terms)
+        ).select("term", "range_id", "doc_blob", "tf_blob", "len_blob", "pos_blob")
+        return phrase_slots_kernel(
+            pruned, slots, self.stats["config"].get("codec", "vbyte"),
+            self._tombstones, slop, slop_mode,
+        )
 
-            for pdf in batches:
-                doc_ids: list = []
-                pos_lists: list = []
-                for r in pdf.itertuples(index=False):
-                    d, t, _l = C.decode_block(
-                        r.doc_blob, r.tf_blob, r.len_blob, codec_name
-                    )
-                    flat = C.decode_positions(r.pos_blob, t, codec_name)
-                    doc_ids.extend(d.tolist())
-                    pos_lists.extend(
-                        a.astype(np.int32) for a in np.split(flat, np.cumsum(t)[:-1])
-                    )
-                yield pd.DataFrame({"doc_id": doc_ids, "positions": pos_lists})
-
-        decoded = pruned.mapInPandas(decode, schema="doc_id long, positions array<int>")
-        from .reader import filter_tombstones
-
-        return filter_tombstones(decoded, self._tombstones)
-
-    def _blocks(self) -> Optional[DataFrame]:
-        """Live blocks view (base ∪ delta segments).  Returns None when
-        any source lacks pos_blob (pre-position-codec index) so phrase
-        falls back to the uncompressed positional postings."""
-        if not hasattr(self, "_blocks_df"):
-            from .reader import live_blocks
-
-            sources = [
-                df for df, _scale in live_blocks(
-                    self.spark, self.index_dir, self._manifest, self.stats
-                )
-            ]
-            if any("pos_blob" not in s.columns for s in sources):
-                self._blocks_df = None
-            else:
-                merged = sources[0]
-                for s in sources[1:]:
-                    merged = merged.unionByName(s)
-                self._blocks_df = merged
-        return self._blocks_df
+    def _positional_search(self, slots: List[List[str]], label: str, k: int,
+                           slop: int = 0, slop_mode: str = "ordered") -> dict:
+        """Occurrence-ranked top-k of a positional query in the
+        reference result shape: the turbo tier when it admits the slots,
+        else :meth:`_positional_plan` through :meth:`_collect_topk`."""
+        res = self._turbo_phrase(slots, k, slop, slop_mode)
+        if res is not None:
+            res["query"] = label
+            return res
+        plan = self._positional_plan(slots, slop, slop_mode)
+        return self._collect_topk(self._occurrence_scored(plan), label, k, True)
 
     def phrase_plan(self, phrase: str, slop: int = 0,
                     slop_mode: str = "ordered") -> DataFrame:
@@ -1449,46 +1443,13 @@ class QueryEngine:
           slop (``movable_starts``): a transposed bigram matches at
           slop 2; identical to ordered at slop ≤ 1.
 
-        Served by the doc-range POSITIONAL KERNEL over the compressed
-        blocks (one bounded shuffle of the phrase terms' block runs,
-        shifted-position intersection in numpy) — a k-term phrase used
-        to cost k−1 distributed joins.  Falls back to the join cascade
-        (:meth:`phrase_plan_join`) for pre-position-codec indexes
-        (ordered mode only — move-based slop needs the block layout)."""
+        Served by the doc-range positional kernel over the compressed
+        blocks (:meth:`_positional_plan`: one bounded shuffle of the
+        phrase terms' block runs, matching in numpy)."""
         self._refresh_if_stale()
-        terms = self._phrase_terms_checked(phrase)
-        if not terms:
-            return self._empty_phrase_plan()
-        blocks = self._blocks()
-        if blocks is None:
-            if slop and slop_mode == "moves":
-                raise ValueError(
-                    "move-based slop requires the positional block layout"
-                )
-            return self.phrase_plan_join(phrase, slop)
-        from .phrase import phrase_match_kernel
-
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in set(terms)})
-        pruned = blocks.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(sorted(set(terms)))
-        ).select("term", "range_id", "doc_blob", "tf_blob", "len_blob", "pos_blob")
-        return phrase_match_kernel(
-            pruned, terms, self.stats["config"].get("codec", "vbyte"),
-            self._tombstones, slop, slop_mode,
+        return self._positional_plan(
+            [[t] for t in self._terms(phrase)], slop, slop_mode
         )
-
-    def phrase_plan_join(self, phrase: str, slop: int = 0) -> DataFrame:
-        """The join-cascade phrase plan (k−1 doc_id-equi joins over
-        per-term positional postings) — kept as the semantics oracle for
-        the kernel (identity pytest-enforced) and as the fallback for
-        indexes whose blocks predate the position codec."""
-        from .phrase import phrase_match
-
-        self._refresh_if_stale()
-        terms = self._phrase_terms_checked(phrase)
-        if not terms:
-            return self._empty_phrase_plan()
-        return phrase_match(self._positional_term_postings, terms, slop)
 
     def _phrase_terms_checked(self, phrase: str) -> List[str]:
         if not self.stats["config"].get("positional"):
@@ -1505,97 +1466,48 @@ class QueryEngine:
     def _turbo_phrase(self, slots: List[List[str]], k: int,
                       slop: int = 0,
                       slop_mode: str = "ordered") -> Optional[dict]:
-        """Driver-side phrase evaluation for small slices: pyarrow
-        pruned read of the slots' block runs, decode doc/tf/position
-        streams in numpy, shifted-position intersection per candidate
-        doc (identical adjacency semantics to operators/phrase.py).
-        Each slot is a set of alternative terms (singletons for a plain
-        phrase; the last slot carries the expansions for
-        match_phrase_prefix) — a slot's per-doc positions are the union
-        over its live alternatives."""
-        if not self.turbo:
+        """Driver-side twin of :meth:`_positional_plan` + top-k: a
+        pyarrow pruned read of the live slot terms' block runs, then
+        the same decoder and matcher as the plan kernel
+        (:func:`~.phrase.decode_positional_rows`,
+        :func:`~.phrase.match_slots`), ranked by (occurrences desc,
+        doc_id asc).  Each slot is a set of alternative terms
+        (singletons for a plain phrase; the last slot carries the
+        expansions for match_phrase_prefix).  None when the index is not
+        positional or the cutover declines."""
+        if not self.turbo or not self.stats["config"].get("positional"):
             return None
         all_terms = sorted({t for s in slots for t in s})
-        self.term_idf(all_terms)  # populate live df cache
+        self._fill_df(all_terms)
         live_slots = [
             [t for t in s if self._df_cache.get(t, 0) > 0] for s in slots
         ]
-        if any(not s for s in live_slots):
+        if not live_slots or any(not s for s in live_slots):
             return empty_result(None)
         uniq = sorted({t for s in live_slots for t in s})
         if not self._turbo_admits(uniq):
             return None
+        from .phrase import decode_positional_rows, match_slots
+
         try:
-            import numpy as np
             import pyarrow.dataset as pads
 
-            from ..functions import codec as C
-            from .reader import delta_segments
-
-            codec_name = self.stats["config"].get("codec", "vbyte")
             buckets = sorted({term_bucket(t, self.n_buckets) for t in uniq})
-            paths = [os.path.join(self.index_dir, "blocks")] + [
-                os.path.join(self.index_dir, "segments", s, "blocks")
-                for s in delta_segments(self._manifest)
-            ]
+            expr = pads.field("bucket").isin(buckets) & pads.field("term").isin(uniq)
             cols = ["term", "doc_blob", "tf_blob", "len_blob", "pos_blob"]
-            per_term: Dict[str, Dict[int, "np.ndarray"]] = {t: {} for t in uniq}
-            tombs = set(self._tombstones)
-            for p in paths:
-                ds = pads.dataset(p, partitioning="hive")
-                expr = pads.field("bucket").isin(buckets) & pads.field("term").isin(
-                    uniq
+            rows: list = []
+            for p in self._segment_paths("blocks"):
+                tbl = pads.dataset(p, partitioning="hive").to_table(
+                    columns=cols, filter=expr
                 )
-                tbl = ds.to_table(columns=cols, filter=expr)
-                for i in range(tbl.num_rows):
-                    t = tbl.column("term")[i].as_py()
-                    pos_blob = tbl.column("pos_blob")[i].as_py()
-                    if pos_blob is None:
-                        return None  # pre-position-codec blocks: use plan
-                    d, tf, _l = C.decode_block(
-                        tbl.column("doc_blob")[i].as_py(),
-                        tbl.column("tf_blob")[i].as_py(),
-                        tbl.column("len_blob")[i].as_py(),
-                        codec_name,
-                    )
-                    flat = C.decode_positions(pos_blob, tf, codec_name)
-                    splits = np.split(flat, np.cumsum(tf)[:-1])
-                    for doc, pos in zip(d.tolist(), splits):
-                        if doc not in tombs:
-                            per_term[t][doc] = pos
+                rows.extend(zip(*(tbl.column(c).to_pylist() for c in cols)))
+            per_term = decode_positional_rows(
+                rows, self.stats["config"].get("codec", "vbyte"),
+                self._tombstones,
+            )
         except Exception:
             return None
-
-        slot_maps = []
-        for alts in live_slots:
-            if len(alts) == 1:
-                slot_maps.append(per_term.get(alts[0], {}))
-            else:
-                m: Dict[int, "np.ndarray"] = {}
-                for t in alts:
-                    for doc, pos in per_term.get(t, {}).items():
-                        prev = m.get(doc)
-                        m[doc] = pos if prev is None else np.union1d(prev, pos)
-                slot_maps.append(m)
-        cand = set(slot_maps[0])
-        for m in slot_maps[1:]:
-            cand &= m.keys()
-        results = []
-        from .phrase import _starts_fn
-
-        starts_fn = _starts_fn(slop, slop_mode)
-        sloppy = bool(slop) or slop_mode == "unordered"
-        for doc in cand:
-            if sloppy:
-                p = starts_fn([m[doc] for m in slot_maps], slop)
-            else:
-                p = slot_maps[0][doc]
-                for i, m in enumerate(slot_maps[1:], start=1):
-                    p = np.intersect1d(p, m[doc] - i)
-                    if p.size == 0:
-                        break
-            if p.size:
-                results.append((doc, int(p.size), np.sort(p).tolist()))
+        results = match_slots(per_term, live_slots, slop, slop_mode)
         results.sort(key=lambda r: (-r[1], r[0]))
         return {
             "query": None,
@@ -1615,16 +1527,9 @@ class QueryEngine:
         Small slices are served by the driver-side turbo path (zero
         Spark jobs)."""
         self._refresh_if_stale()
-        if self.stats["config"].get("positional"):
-            terms = self._terms(phrase)
-            if terms:
-                res = self._turbo_phrase([[t] for t in terms], k, slop,
-                                         slop_mode)
-                if res is not None:
-                    res["query"] = phrase
-                    return res
-        plan = self.phrase_plan(phrase, slop, slop_mode)
-        return self._collect_topk(self._occurrence_scored(plan), phrase, k, True)
+        return self._positional_search(
+            [[t] for t in self._terms(phrase)], phrase, k, slop, slop_mode
+        )
 
     @staticmethod
     def _occurrence_scored(plan: DataFrame) -> DataFrame:
@@ -1705,30 +1610,12 @@ class QueryEngine:
           (:func:`~.phrase.unordered_starts`) — this differs from
           adjacency even at slop=0, the genuinely new surface.
 
-        Same doc-range kernel shape as every positional query: prune
-        the clauses' block runs, ONE bounded shuffle, per-range numpy
-        matching; no cross-range state (a match spans one doc)."""
+        Same doc-range kernel as every positional query
+        (:meth:`_positional_plan`)."""
         self._refresh_if_stale()
-        if not self.stats["config"].get("positional"):
-            raise ValueError("index was not built with positional=True")
-        terms = [str(t) for t in terms]
-        if not terms:
-            return self._empty_phrase_plan()
-        blocks = self._blocks()
-        if blocks is None:
-            raise ValueError("span_near requires the positional block layout")
-        from .phrase import phrase_match_kernel
-
-        mode = "ordered" if in_order else "unordered"
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in set(terms)})
-        pruned = blocks.filter(
-            F.col("bucket").isin(buckets)
-            & F.col("term").isin(sorted(set(terms)))
-        ).select("term", "range_id", "doc_blob", "tf_blob", "len_blob",
-                 "pos_blob")
-        return phrase_match_kernel(
-            pruned, terms, self.stats["config"].get("codec", "vbyte"),
-            self._tombstones, slop, mode,
+        return self._positional_plan(
+            [[str(t)] for t in terms], slop,
+            "ordered" if in_order else "unordered",
         )
 
     def span_near(self, terms: Sequence[str], k: int = 10, slop: int = 0,
@@ -1748,45 +1635,24 @@ class QueryEngine:
         query_label = " ".join(terms)
         if not terms:
             return empty_result(query_label)
-        mode = "ordered" if in_order else "unordered"
-        if self.stats["config"].get("positional"):
-            res = self._turbo_phrase([[t] for t in terms], k, slop, mode)
-            if res is not None:
-                res["query"] = query_label
-                return res
-        plan = self.span_near_plan(terms, slop, in_order)
-        return self._collect_topk(self._occurrence_scored(plan), query_label,
-                                  k, True)
+        return self._positional_search(
+            [[t] for t in terms], query_label, k, slop,
+            "ordered" if in_order else "unordered",
+        )
 
     def match_phrase_prefix_plan(self, phrase: str,
                                  max_expansions: int = 50) -> DataFrame:
         """ES ``match_phrase_prefix`` plan ``(doc_id, n_occurrences,
         start_positions)``: the phrase must match with the last
         position holding ANY expansion of the last token's prefix.
-        Served by the slots kernel (one bounded shuffle of all slot
-        terms' block runs — the k−1-join cascade would pay the shared
-        prefix terms once PER expansion); join-cascade fallback for
-        pre-position-codec indexes."""
+        Served by the slots kernel (:meth:`_positional_plan`: one
+        bounded shuffle of all slot terms' block runs, so the shared
+        leading terms are read once, not once per expansion)."""
         self._refresh_if_stale()
         slots = self._mpp_slots(phrase, max_expansions)
         if slots is None:
             return self._empty_phrase_plan()
-        blocks = self._blocks()
-        all_terms = sorted({t for s in slots for t in s})
-        if blocks is None:
-            from .phrase import phrase_match_slots
-
-            return phrase_match_slots(self._positional_term_postings, slots)
-        from .phrase import phrase_slots_kernel
-
-        buckets = sorted({term_bucket(t, self.n_buckets) for t in all_terms})
-        pruned = blocks.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(all_terms)
-        ).select("term", "range_id", "doc_blob", "tf_blob", "len_blob", "pos_blob")
-        return phrase_slots_kernel(
-            pruned, slots, self.stats["config"].get("codec", "vbyte"),
-            self._tombstones,
-        )
+        return self._positional_plan(slots)
 
     def match_phrase_prefix(self, phrase: str, k: int = 10,
                             max_expansions: int = 50) -> dict:
@@ -1796,16 +1662,10 @@ class QueryEngine:
         the driver-side turbo kernel; the count rides the top-k job via
         Observation otherwise."""
         self._refresh_if_stale()
-        if self.stats["config"].get("positional"):
-            slots = self._mpp_slots(phrase, max_expansions)
-            if slots is None:
-                return empty_result(phrase)
-            res = self._turbo_phrase(slots, k)
-            if res is not None:
-                res["query"] = phrase
-                return res
-        plan = self.match_phrase_prefix_plan(phrase, max_expansions)
-        return self._collect_topk(self._occurrence_scored(plan), phrase, k, True)
+        slots = self._mpp_slots(phrase, max_expansions)
+        if slots is None:
+            return empty_result(phrase)
+        return self._positional_search(slots, phrase, k)
 
     def match_phrase_prefix_scored_plan(self, phrase: str,
                                         max_expansions: int = 50,
@@ -1863,7 +1723,7 @@ class QueryEngine:
         if not self.turbo:
             return None
         rpn, terms, negated = parse_boolean(query, not self.pretokenized)
-        self.term_idf(terms)  # populate the df cache (live, signed)
+        self._fill_df(terms)
         slices = self._turbo_slices(
             terms, extra=self.doc_count if negated else 0
         )
@@ -1872,7 +1732,7 @@ class QueryEngine:
         universe = None
         if negated:
             try:
-                universe = self._doc_universe()
+                universe = self._turbo_doc_lens()[0]
             except Exception:
                 return None
         ids = boolean_docs(
@@ -1884,59 +1744,26 @@ class QueryEngine:
             "results": [{"doc_id": d, "score": 1.0} for d in ids[:k].tolist()],
         }
 
-    def _doc_universe(self):
-        """Sorted live doc-id array (NOT's complement universe) — read
-        once per index generation via pyarrow and cached (invalidated in
-        _load with the other caches; ~8 B/doc driver RAM, the same
-        doc-id dictionary the reference holds in RAM)."""
-        if getattr(self, "_universe_cache", None) is not None:
-            return self._universe_cache
-        import numpy as np
-        import pyarrow.dataset as pads
-
-        from .reader import delta_segments
-
-        paths = [os.path.join(self.index_dir, "docs")] + [
-            os.path.join(self.index_dir, "segments", s, "docs")
-            for s in delta_segments(self._manifest)
-        ]
-        parts = []
-        for p in paths:
-            tbl = pads.dataset(p).to_table(columns=["doc_id"])
-            parts.append(tbl.column("doc_id").to_numpy(zero_copy_only=False))
-        universe = np.unique(np.concatenate(parts).astype(np.int64))
-        if self._tombstones:
-            universe = np.setdiff1d(
-                universe,
-                np.asarray(self._tombstones, dtype=np.int64),
-                assume_unique=True,
-            )
-        self._universe_cache = universe
-        return universe
-
     def _turbo_doc_lens(self):
         """Sorted live ``(doc_id, doc_len)`` arrays — the driver-side
         norms table (Lucene keeps exactly this per-field array in RAM).
         Read once per index generation via pyarrow across base + delta
         docs tables, tombstone-filtered, cached with the other turbo
-        caches (recreated in ``_load``; ~16 B/doc driver RAM).  Used by
-        tiers that need a doc's length WITHOUT a posting hit in this
-        field (``combined_fields``: the combined norm sums every queried
-        field's length even where the term matched elsewhere)."""
-        self._refresh_if_stale()
-        if getattr(self, "_doc_len_cache", None) is not None:
+        caches (recreated in ``_load``; ~16 B/doc driver RAM).  The ids
+        are the live doc universe (boolean NOT, filter-only bool): doc
+        ids are disjoint across segments (``update_index`` assigns new
+        ids past ``next_doc_id``), so they are unique.  The lengths
+        serve tiers that need a doc's length WITHOUT a posting hit in
+        this field (``combined_fields``: the combined norm sums every
+        queried field's length even where the term matched elsewhere).
+        Callers refresh the engine first (:meth:`_fill_df`)."""
+        if self._doc_len_cache is not None:
             return self._doc_len_cache
         import numpy as np
         import pyarrow.dataset as pads
 
-        from .reader import delta_segments
-
-        paths = [os.path.join(self.index_dir, "docs")] + [
-            os.path.join(self.index_dir, "segments", s, "docs")
-            for s in delta_segments(self._manifest)
-        ]
         ids_parts, len_parts = [], []
-        for p in paths:
+        for p in self._segment_paths("docs"):
             tbl = pads.dataset(p).to_table(columns=["doc_id", "doc_len"])
             ids_parts.append(
                 tbl.column("doc_id").to_numpy(zero_copy_only=False)
@@ -2306,7 +2133,7 @@ class QueryEngine:
         terms = self._terms(query)
         if not terms:
             return None
-        self.term_idf(terms)  # populate the live df cache
+        self._fill_df(terms)
         live = sorted({t for t in terms if self._df_cache.get(t, 0) > 0})
         if not live:
             return None
@@ -2328,7 +2155,7 @@ class QueryEngine:
         if pos is None:
             return None
         neg_terms = self._terms(negative)
-        self.term_idf(neg_terms)
+        self._fill_df(neg_terms)
         neg_live = sorted({t for t in neg_terms if self._df_cache.get(t, 0) > 0})
         if not neg_live:
             return pos
@@ -2365,7 +2192,7 @@ class QueryEngine:
         terms = self._terms(query)
         if not terms:
             return None
-        self.term_idf(terms)  # populate the live df cache
+        self._fill_df(terms)
         live = sorted({t for t in terms if self._df_cache.get(t, 0) > 0})
         if not live:
             return None
@@ -2499,7 +2326,7 @@ class QueryEngine:
         if not must_t and msm == 0:
             # candidate universe = all live docs (filter-only bool)
             try:
-                universe = self._doc_universe()
+                universe = self._turbo_doc_lens()[0]
             except Exception:
                 return None
 

@@ -3,13 +3,12 @@
 * ``cosine_topk``       — brute-force scan against one query vector:
   array-native dot product (``zip_with`` + ``aggregate``, whole-stage
   codegen, no explode, no shuffle except the final TakeOrdered).
-* ``knn_join``          — brute-force k-NN for every vector (quadratic;
-  validation baseline).
-* ``lsh_knn_join``      — the scale path: random-hyperplane LSH buckets
-  (seeded, deterministic), candidate pairs only within a bucket,
-  multi-table probing to trade recall for cost.
+* ``ivf_topk`` / ``IvfIndex`` — the scale path: an IVF-flat index
+  (driver-side k-means coarse quantizer, assignment table partitioned
+  by cell) whose probes are partition-pruned reads of the ``n_probe``
+  nearest cells.
 
-Exact cosine is always computed on candidates — LSH only limits the
+Exact cosine is always computed on candidates — IVF only limits the
 candidate set, so scores are exact and only recall is approximate.
 """
 
@@ -18,7 +17,7 @@ from __future__ import annotations
 from typing import List, Optional, Sequence
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -52,39 +51,6 @@ def cosine_topk(df: DataFrame, query_vec: Sequence[float], k: int = 10,
         .orderBy(F.col("cosine").desc(), F.col("id"))
         .limit(k)
     )
-
-
-def knn_join(df: DataFrame, k: int = 5, id_col: str = "vec_id",
-             vec_col: str = "embedding") -> DataFrame:
-    """Brute-force all-pairs k-NN: (id, neighbor_id, cosine).  O(n^2) —
-    small-corpus validation baseline for ``lsh_knn_join``."""
-    u = with_unit_vec(df, vec_col).select(F.col(id_col).alias("id"), "unit")
-    a, b = u.alias("a"), u.alias("b")
-    pairs = a.join(b, F.col("a.id") != F.col("b.id")).select(
-        F.col("a.id").alias("id"),
-        F.col("b.id").alias("neighbor_id"),
-        _dot(F.col("a.unit"), F.col("b.unit")).alias("cosine"),
-    )
-    w = Window.partitionBy("id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return pairs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
-
-
-def hyperplanes(dim: int, n_planes: int, seed: int = 7) -> List[List[float]]:
-    """Deterministic random hyperplanes (pure function of inputs)."""
-    rng = np.random.RandomState(seed)
-    return rng.randn(n_planes, dim).tolist()
-
-
-def lsh_bucket_col(vec_col, planes: List[List[float]]):
-    """Sign-bit bucket id from the hyperplane projections."""
-    bits = [
-        F.when(_dot(vec_col, F.array(*[F.lit(float(x)) for x in plane])) >= 0, 1 << i).otherwise(0)
-        for i, plane in enumerate(planes)
-    ]
-    out = bits[0]
-    for b_ in bits[1:]:
-        out = out + b_
-    return out.cast("long")
 
 
 def kmeans_centroids(df: DataFrame, n_cells: int, vec_col: str = "embedding",
@@ -240,45 +206,3 @@ class IvfIndex:
         )
         return self
 
-
-def lsh_knn_join(df: DataFrame, k: int = 5, n_planes: int = 8, n_tables: int = 4,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 seed: int = 7) -> DataFrame:
-    """Approximate k-NN: candidates = pairs sharing an LSH bucket in any
-    of ``n_tables`` hash tables; exact cosine on candidates; top-k per
-    id.  Shuffles only within buckets — the 10^12-row shape."""
-    u = with_unit_vec(df, vec_col).select(F.col(id_col).alias("id"), "unit")
-    dim = len(df.select(vec_col).first()[0])
-    tables = []
-    for t in range(n_tables):
-        planes = hyperplanes(dim, n_planes, seed + t)
-        tables.append(
-            u.select(
-                "id", "unit", F.lit(t).alias("tbl"),
-                lsh_bucket_col(F.col("unit"), planes).alias("bucket"),
-            )
-        )
-    buckets = tables[0]
-    for tdf in tables[1:]:
-        buckets = buckets.unionByName(tdf)
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") != F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id"),
-            F.col("b.id").alias("neighbor_id"),
-            F.col("a.unit").alias("ua"),
-            F.col("b.unit").alias("ub"),
-        )
-        .dropDuplicates(["id", "neighbor_id"])
-    )
-    scored = cand.select(
-        "id", "neighbor_id", _dot(F.col("ua"), F.col("ub")).alias("cosine")
-    )
-    w = Window.partitionBy("id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")

@@ -104,7 +104,7 @@ def test_not_admitted_without_the_universe(spark, indexes, plan_results):
                             eng.boolean_topk, q, k=1000)
     assert jobs == 0
     assert got == plan_results["static"][q]
-    assert eng._universe_cache is None
+    assert eng._doc_len_cache is None  # the doc universe was never read
     # a complemented result does charge the universe: over budget here
     assert parse_boolean(f"NOT ( {q} )", True)[2]
     assert eng._turbo_boolean(f"NOT ( {q} )", 10) is None

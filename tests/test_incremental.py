@@ -271,7 +271,7 @@ def test_wand_on_updated_index_matches_taat(spark, tmp_index_root):
 
 def test_warm_turbo_caches_invalidate_on_update(spark, tmp_index_root):
     """The hot-term LRU caches (QueryEngine._term_postings_cache /
-    _universe_cache, also behind WandEngine) must be dropped on the
+    _doc_len_cache, also behind WandEngine) must be dropped on the
     manifest-mtime bump an update_index causes: engines WARMED before the
     update must answer identically to engines created after it."""
     from elasticsearch_spark.operators.wand import WandEngine
@@ -309,7 +309,7 @@ def test_warm_turbo_caches_invalidate_on_update(spark, tmp_index_root):
 
     before = {
         "ranked": warm_q.ranked(query, k=10),
-        "not": warm_q.boolean_topk(not_query, k=10),  # warms _universe_cache
+        "not": warm_q.boolean_topk(not_query, k=10),
         "wand": warm_w.topk(query, k=10),
         # warms _doc_len_cache (the combined_fields norms array)
         "lens": warm_q._turbo_doc_lens()[0].tolist(),

@@ -9,7 +9,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from elasticsearch_spark.operators.build import IndexBuilder, IndexConfig
-from elasticsearch_spark.operators.phrase import phrase_query
+from elasticsearch_spark.operators.phrase import (
+    phrase_match,
+    phrase_match_slots,
+    phrase_query,
+    positional_postings,
+)
 from elasticsearch_spark.operators.query import QueryEngine
 from elasticsearch_spark.oracle.engine import OracleIndex
 from elasticsearch_spark.sources.webtext import corpus_rows, gen_corpus
@@ -49,7 +54,29 @@ def pos_engine(spark, tmp_index_root):
     return QueryEngine(spark, d)
 
 
-@pytest.mark.parametrize("phrase", PHRASES)
+def _join_postings_for(spark, eng, terms):
+    """``postings_for`` over the live tokens table's positional
+    postings: the input of the join fold (``phrase_match`` /
+    ``phrase_match_slots``) that serves ``phrase_query``, built from
+    the forward index rather than the compressed blocks."""
+    from elasticsearch_spark.operators.reader import live_tokens
+
+    post = positional_postings(
+        live_tokens(spark, eng.index_dir), sorted(set(terms))
+    )
+    return lambda t: post.filter(F.col("term") == t).select(
+        "doc_id", "positions"
+    )
+
+
+def _match_rows(df):
+    return {
+        r["doc_id"]: (r["n_occurrences"], list(r["start_positions"]))
+        for r in df.collect()
+    }
+
+
+@pytest.mark.parametrize("phrase", PHRASES + ["machine machine"])
 def test_phrase_parity(pos_engine, oracle_index, phrase):
     want = oracle_index.phrase_query(phrase)
     got = {
@@ -70,12 +97,26 @@ def test_phrase_result_shape(pos_engine, oracle_index):
 
 
 def test_phrase_requires_positional_index(spark, tmp_index_root):
-    d = os.path.join(tmp_index_root, "webtext_e2e")  # non-positional build
-    if not os.path.exists(os.path.join(d, "stats.json")):
-        pytest.skip("shared non-positional index not built in this session")
-    eng = QueryEngine(spark, d)
-    with pytest.raises(ValueError):
-        eng.phrase_plan("machine learning")
+    """Every positional entry point refuses a non-positional index, on
+    both tiers, whatever the phrase analyzes to."""
+    d = os.path.join(tmp_index_root, "phrase_non_positional")
+    IndexBuilder(spark, d, IndexConfig(n_buckets=4, doc_range_bits=6)).build(
+        spark.createDataFrame(corpus_rows(30), INPUT_SCHEMA)
+    )
+    for turbo in (True, False):
+        eng = QueryEngine(spark, d, turbo=turbo)
+        for call in (
+            lambda: eng.phrase_plan("machine learning"),
+            lambda: eng.phrase_plan("the"),
+            lambda: eng.phrase("machine learning"),
+            lambda: eng.phrase("machine learning", slop=2, slop_mode="moves"),
+            lambda: eng.span_near_plan(["machin", "learn"]),
+            lambda: eng.span_near(["machin", "learn"]),
+            lambda: eng.match_phrase_prefix_plan("machine lea"),
+            lambda: eng.match_phrase_prefix("machine lea"),
+        ):
+            with pytest.raises(ValueError):
+                call()
 
 
 def test_phrase_query_on_tokens_df(spark):
@@ -99,9 +140,10 @@ def test_phrase_query_on_tokens_df(spark):
 
 def test_phrase_served_from_compressed_blocks(spark, pos_engine):
     """The phrase path must read position streams from the block layout
-    (pos_blob present and non-null), and the block-decoded positional
-    postings must equal the uncompressed positional postings table."""
-    import numpy as np
+    (pos_blob present and non-null), and the block-decoded positions
+    (``decode_positional_rows``, the decoder both tiers call) must
+    equal the postings table's ``positions`` column."""
+    from elasticsearch_spark.operators.phrase import decode_positional_rows
 
     blocks = spark.read.parquet(os.path.join(pos_engine.index_dir, "blocks"))
     assert "pos_blob" in blocks.columns
@@ -112,10 +154,15 @@ def test_phrase_served_from_compressed_blocks(spark, pos_engine):
         .orderBy(F.col("df").desc())
         .first()["term"]
     )
-    got = {
-        r["doc_id"]: list(r["positions"])
-        for r in pos_engine._positional_term_postings(term).collect()
-    }
+    cols = ["term", "doc_blob", "tf_blob", "len_blob", "pos_blob"]
+    rows = [
+        tuple(r)
+        for r in blocks.filter(F.col("term") == term).select(*cols).collect()
+    ]
+    decoded = decode_positional_rows(
+        rows, pos_engine.stats["config"].get("codec", "vbyte")
+    )
+    got = {doc: pos.tolist() for doc, pos in decoded[term].items()}
     want = {
         r["doc_id"]: list(r["positions"])
         for r in pos_engine._pruned_postings([term])
@@ -123,6 +170,45 @@ def test_phrase_served_from_compressed_blocks(spark, pos_engine):
         .collect()
     }
     assert got == want and len(got) > 0
+
+
+def test_positional_blocks_carry_pos_blob_through_update_and_compact(
+        spark, tmp_index_root):
+    """A positional index writes ``pos_blob`` into every block it ever
+    writes — the base build, a delta segment and a compaction — so the
+    block layout alone serves every positional query."""
+    from elasticsearch_spark.operators.reader import delta_segments, load_manifest
+
+    rows = corpus_rows(140)
+    d = os.path.join(tmp_index_root, "phrase_pos_blob")
+    bld = IndexBuilder(
+        spark, d, IndexConfig(n_buckets=4, doc_range_bits=6, positional=True)
+    )
+    bld.build(spark.createDataFrame(rows[:110], INPUT_SCHEMA))
+    rm = [
+        r["url"]
+        for r in spark.read.parquet(os.path.join(d, "docs"))
+        .orderBy("doc_id").limit(3).collect()
+    ]
+    bld.update_index(
+        add=spark.createDataFrame(rows[110:], INPUT_SCHEMA), remove_urls=rm,
+        compact=False,
+    )
+
+    def null_pos_blobs(path):
+        blocks = spark.read.parquet(path)
+        assert blocks.count() > 0, path
+        return blocks.filter(F.col("pos_blob").isNull()).count()
+
+    segs = delta_segments(load_manifest(d))
+    assert segs
+    for seg in segs:
+        assert null_pos_blobs(os.path.join(d, "segments", seg, "blocks")) == 0
+    before = QueryEngine(spark, d).phrase("machine learning", k=1000)
+    bld.compact()
+    assert not delta_segments(load_manifest(d))
+    assert null_pos_blobs(os.path.join(d, "blocks")) == 0
+    assert QueryEngine(spark, d).phrase("machine learning", k=1000) == before
 
 
 def test_phrase_on_updated_index_matches_rebuild(spark, tmp_index_root):
@@ -164,21 +250,15 @@ def test_phrase_on_updated_index_matches_rebuild(spark, tmp_index_root):
 
 
 @pytest.mark.parametrize("phrase", PHRASES + ["machine machine"])
-def test_phrase_kernel_matches_join_plan(pos_engine, phrase):
+def test_phrase_kernel_matches_join_plan(spark, pos_engine, phrase):
     """The doc-range positional kernel (one shuffle, numpy shifted
-    intersection) must equal the k-1 join cascade exactly — including a
-    repeated-term phrase, where the same position list is intersected
-    under two different shifts."""
-
-    def rows(df):
-        return {
-            r["doc_id"]: (r["n_occurrences"], list(r["start_positions"]))
-            for r in df.collect()
-        }
-
-    assert rows(pos_engine.phrase_plan(phrase)) == rows(
-        pos_engine.phrase_plan_join(phrase)
-    ), phrase
+    intersection over the compressed blocks) must equal the k-1 join
+    fold over the tokens table exactly — including a repeated-term
+    phrase, where the same position list is intersected under two
+    different shifts."""
+    terms = pos_engine._terms(phrase)
+    want = phrase_match(_join_postings_for(spark, pos_engine, terms), terms)
+    assert _match_rows(pos_engine.phrase_plan(phrase)) == _match_rows(want), phrase
 
 
 @pytest.mark.parametrize("phrase", PHRASES)
@@ -242,25 +322,18 @@ def test_match_phrase_prefix_plan_matches_brute(spark, pos_engine, phrase):
 
 
 @pytest.mark.parametrize("phrase", MPP_PHRASES)
-def test_match_phrase_prefix_kernel_matches_join_slots(pos_engine, phrase):
-    """phrase_slots_kernel ≡ the join-cascade slots twin."""
-    from elasticsearch_spark.operators.phrase import phrase_match_slots
-
+def test_match_phrase_prefix_kernel_matches_join_slots(spark, pos_engine,
+                                                       phrase):
+    """phrase_slots_kernel ≡ the join-fold slots twin over the tokens
+    table."""
     slots = pos_engine._mpp_slots(phrase, 50)
     if slots is None:
         pytest.skip("phrase expands to nothing at this corpus")
-
-    def rows(df):
-        return {
-            r["doc_id"]: (r["n_occurrences"], list(r["start_positions"]))
-            for r in df.collect()
-        }
-
-    got = rows(pos_engine.match_phrase_prefix_plan(phrase))
-    want = rows(
-        phrase_match_slots(pos_engine._positional_term_postings, slots)
+    postings_for = _join_postings_for(
+        spark, pos_engine, [t for s in slots for t in s]
     )
-    assert got == want, phrase
+    got = _match_rows(pos_engine.match_phrase_prefix_plan(phrase))
+    assert got == _match_rows(phrase_match_slots(postings_for, slots)), phrase
 
 
 @pytest.mark.parametrize("phrase", MPP_PHRASES)
@@ -340,17 +413,15 @@ def test_sloppy_phrase_parity(pos_engine, oracle_index, phrase, slop):
 
 
 @pytest.mark.parametrize("phrase,slop", SLOPPY_CASES)
-def test_sloppy_kernel_matches_join_plan(pos_engine, phrase, slop):
-    """Doc-range kernel ≡ the higher-order-function join fold."""
-
-    def rows(df):
-        return {
-            r["doc_id"]: (r["n_occurrences"], list(r["start_positions"]))
-            for r in df.collect()
-        }
-
-    assert rows(pos_engine.phrase_plan(phrase, slop=slop)) == rows(
-        pos_engine.phrase_plan_join(phrase, slop=slop)
+def test_sloppy_kernel_matches_join_plan(spark, pos_engine, phrase, slop):
+    """Doc-range kernel ≡ the higher-order-function join fold over the
+    tokens table."""
+    terms = pos_engine._terms(phrase)
+    want = phrase_match(
+        _join_postings_for(spark, pos_engine, terms), terms, slop
+    )
+    assert _match_rows(pos_engine.phrase_plan(phrase, slop=slop)) == (
+        _match_rows(want)
     ), (phrase, slop)
 
 

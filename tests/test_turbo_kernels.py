@@ -3,11 +3,21 @@
 pure functions over hand-built arrays (no Spark; the turbo≡plan and
 result-dump tests cover them end to end).  Each is checked against the
 formulation it replaced, with ``==`` on result dicts and ``.tobytes()``
-on float sums."""
+on float sums.  The positional matcher both tiers share
+(``decode_positional_rows`` + ``match_slots``) is checked the same way,
+against the per-doc ``*_starts`` kernels and a brute adjacency scan."""
 
 import numpy as np
 import pytest
 
+from elasticsearch_spark.functions import codec as C
+from elasticsearch_spark.operators.phrase import (
+    decode_positional_rows,
+    match_slots,
+    movable_starts,
+    sloppy_starts,
+    unordered_starts,
+)
 from elasticsearch_spark.operators.query import (
     group_docs,
     sorted_member,
@@ -121,3 +131,135 @@ def test_sorted_member():
     assert sorted_member(a, b).tolist() == np.isin(a, b).tolist()
     assert sorted_member(a, b[:0]).tolist() == [False] * a.size
     assert sorted_member(a[:0], b).size == 0
+
+
+# ------------------------------------------------- positional matcher
+
+def _token_docs(seed, n_docs=40, vocab="abcd", max_len=14):
+    """doc -> token list over a tiny vocabulary (dense repeats, so
+    every mode has real matches), doc ids sparse and unsorted."""
+    rng = np.random.default_rng(seed)
+    ids = rng.choice(10_000, size=n_docs, replace=False).tolist()
+    return {
+        d: list(rng.choice(list(vocab), size=rng.integers(0, max_len)))
+        for d in ids
+    }
+
+
+def _per_term(docs):
+    """{term: {doc: sorted int64 positions}} — the decoder's output."""
+    out = {}
+    for d, toks in docs.items():
+        for i, t in enumerate(toks):
+            out.setdefault(t, {}).setdefault(d, []).append(i)
+    return {
+        t: {d: np.asarray(p, dtype=np.int64) for d, p in m.items()}
+        for t, m in out.items()
+    }
+
+
+def _per_doc(per_term, slots, starts_fn, slop):
+    """Reference: the mode's per-doc kernel over every doc holding all
+    slots, a slot's positions the sorted union of its alternatives."""
+    out = []
+    docs = set().union(*(m.keys() for m in per_term.values()))
+    for d in sorted(docs):
+        slot_pos = []
+        for alts in slots:
+            ps = [per_term[t][d] for t in alts if d in per_term.get(t, {})]
+            if not ps:
+                break
+            slot_pos.append(np.unique(np.concatenate(ps)))
+        else:
+            p = np.sort(np.asarray(starts_fn(slot_pos, slop)))
+            if p.size:
+                out.append((d, int(p.size), p.tolist()))
+    return out
+
+
+SLOT_CASES = [
+    [["a"], ["b"]],
+    [["a"], ["b"], ["c"]],
+    [["a"], ["a"]],                 # repeated term
+    [["b"], ["a", "c"]],            # alternatives (match_phrase_prefix)
+    [["a", "d"], ["b"], ["a"]],
+    [["c"]],                        # one slot
+]
+
+
+@pytest.mark.parametrize("seed", range(3))
+@pytest.mark.parametrize("slots", SLOT_CASES)
+def test_match_slots_modes_match_per_doc_kernels(seed, slots):
+    per_term = _per_term(_token_docs(seed))
+    for mode, fn, slops in (
+        ("ordered", sloppy_starts, (1, 2, 3)),
+        ("moves", movable_starts, (1, 2, 3)),
+        ("unordered", unordered_starts, (0, 1, 2)),
+    ):
+        for slop in slops:
+            got = [
+                (d, n, p.tolist())
+                for d, n, p in match_slots(per_term, slots, slop, mode)
+            ]
+            assert got == _per_doc(per_term, slots, fn, slop), (mode, slop)
+
+
+@pytest.mark.parametrize("seed", range(3))
+@pytest.mark.parametrize("slots", SLOT_CASES)
+def test_match_slots_exact_is_adjacency(seed, slots):
+    """slop 0 (ordered or moves): the shifted intersection equals a
+    brute scan of the token streams and the slop-0 chain kernel."""
+    docs = _token_docs(seed)
+    per_term = _per_term(docs)
+    want = []
+    for d in sorted(docs):
+        toks = docs[d]
+        k = len(slots)
+        starts = [
+            i for i in range(len(toks) - k + 1)
+            if all(toks[i + j] in alts for j, alts in enumerate(slots))
+        ]
+        if starts:
+            want.append((d, len(starts), starts))
+    for mode in ("ordered", "moves"):
+        got = [
+            (d, n, p.tolist())
+            for d, n, p in match_slots(per_term, slots, 0, mode)
+        ]
+        assert got == want, mode
+    assert want == _per_doc(per_term, slots, sloppy_starts, 0)
+    assert want  # real matches, not an empty-set agreement
+
+
+def test_match_slots_dead_slot_and_no_slots():
+    per_term = _per_term({3: list("abab"), 9: list("ba")})
+    assert match_slots(per_term, [["a"], ["zz"]]) == []
+    assert match_slots(per_term, [["zz", "b"], ["a"]]) != []
+    assert match_slots(per_term, []) == []
+    with pytest.raises(ValueError):
+        match_slots(per_term, [["a"]], 1, "sideways")
+
+
+def test_decode_positional_rows_round_trip_and_tombstones():
+    """Encoded block rows decode to the positions they were built from;
+    a term split over two rows (base + delta) merges, tombstoned docs
+    drop."""
+    docs = {5: list("abca"), 17: list("ccab"), 40: list("b"), 41: list("aa")}
+    per_term = _per_term(docs)
+    rows = []
+    for t, m in sorted(per_term.items()):
+        ids = sorted(m)
+        for part in (ids[:1], ids[1:]):  # two rows per term when possible
+            if not part:
+                continue
+            tf = [m[d].size for d in part]
+            blobs = C.encode_block(part, tf, [len(docs[d]) for d in part])
+            flat = np.concatenate([m[d] for d in part])
+            rows.append((t, *blobs, C.encode_positions(flat, tf)))
+    got = decode_positional_rows(rows, "vbyte")
+    assert {t: {d: p.tolist() for d, p in m.items()} for t, m in got.items()} == {
+        t: {d: p.tolist() for d, p in m.items()} for t, m in per_term.items()
+    }
+    dropped = decode_positional_rows(rows, "vbyte", [17, 41])
+    assert sorted(dropped["a"]) == [5]
+    assert sorted(dropped["c"]) == [5]
