@@ -59,9 +59,7 @@ ES_MAX_EXPANSIONS = 50  # ES index-level default for multi-term rewrite
 # driver-tier abort threshold: max distinct dictionary terms the
 # streaming range scan may accumulate before the caller falls back to
 # the in-plan capped tier (~100 B/term -> ~20 MB driver RAM at default)
-DRIVER_RANGE_MAX_TERMS = int(
-    os.environ.get("SPARK_GRAFT_EXPAND_DRIVER_MAX", 200_000)
-)
+DRIVER_RANGE_MAX_TERMS = 200_000
 
 # rows the last in-plan capped expansion collected (test receipt: must
 # be ≤ max_expansions, never range-sized).  THREAD-LOCAL: concurrent

@@ -41,18 +41,20 @@ import os
 import re
 import shutil
 from dataclasses import asdict
-from typing import Dict, List, Optional, Sequence, Tuple, Union
+from typing import Dict, List, Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .build import IndexBuilder, IndexConfig, assign_doc_ids
 from .query import (
+    combine_maps,
+    combine_plan,
     empty_result,
-    group_code_doc,
-    group_docs,
     impact_col,
+    live_bag,
     match_threshold,
+    sorted_lookup,
     turbo_topk,
 )
 
@@ -339,22 +341,8 @@ class MultiMatchEngine:
                 )
         if not plans:
             return None
-        u = plans[0]
-        for p in plans[1:]:
-            u = u.unionByName(p)
-        if match_type in ("most_fields", "bool_prefix"):
-            return u.groupBy("doc_id").agg(F.sum("score").alias("score"))
-        return (
-            u.groupBy("doc_id")
-            .agg(F.max("score").alias("best"), F.sum("score").alias("tot"))
-            .select(
-                "doc_id",
-                (
-                    F.col("best")
-                    + F.lit(float(tie_breaker)) * (F.col("tot") - F.col("best"))
-                ).alias("score"),
-            )
-        )
+        summed = match_type in ("most_fields", "bool_prefix")
+        return combine_plan(plans, None if summed else tie_breaker)
 
     # ------------------------------------------------------- cross_fields
     def _cross_fields_stats(self, query: str, boosts: Dict[str, float]):
@@ -409,8 +397,6 @@ class MultiMatchEngine:
         final groupBy(doc_id) reuses that exchange's partitioning
         (doc_id ⊂ (doc_id, term) keys — Catalyst needs no second
         shuffle)."""
-        from collections import Counter
-
         terms, bdf, blended = self._cross_fields_stats(query, boosts)
         if not terms:
             return None
@@ -420,47 +406,27 @@ class MultiMatchEngine:
         any_eng = next(iter(self.engines.values()))
         if required is None:
             return any_eng._empty_scored_plan()
-        live = [t for t in terms if blended[t] != 0.0]
-        if not live:
+        bag = live_bag(terms, blended)
+        if not bag:
             return None
-        counts = Counter(live)
-        uniq = sorted(counts)
         plans = []
         for fname, boost in boosts.items():
             eng = self.engines[fname]
             idf_items: list = []
-            for t in uniq:
+            for t, m in bag.items():
                 idf_items += [
                     F.lit(t),
-                    F.lit(float(blended[t]) * float(counts[t]) * float(boost)),
+                    F.lit(float(blended[t]) * float(m) * float(boost)),
                 ]
             w_col = F.create_map(*idf_items)[F.col("term")]
-            p = eng._pruned_postings(uniq).filter(F.col("doc_len") > 0)
+            p = eng._pruned_postings(list(bag)).filter(F.col("doc_len") > 0)
             impact = impact_col(method, F.col("tf"), F.col("doc_len"),
                                 eng.avg_doc_len, eng.k1, eng.b)
             plans.append(
                 p.select("doc_id", "term", (w_col * impact).alias("score"))
             )
-        u = plans[0]
-        for p in plans[1:]:
-            u = u.unionByName(p)
-        per_term = (
-            u.groupBy("doc_id", "term")
-            .agg(F.max("score").alias("best"), F.sum("score").alias("tot"))
-            .select(
-                "doc_id",
-                (
-                    F.col("best")
-                    + F.lit(float(tie_breaker)) * (F.col("tot") - F.col("best"))
-                ).alias("ts"),
-            )
-        )
-        return (
-            per_term.groupBy("doc_id")
-            .agg(F.sum("ts").alias("score"), F.count(F.lit(1)).alias("_nt"))
-            .filter(F.col("_nt") >= F.lit(int(required)))
-            .select("doc_id", "score")
-        )
+        per_term = combine_plan(plans, tie_breaker, keys=("doc_id", "term"))
+        return combine_plan([per_term], required=required)
 
     def _turbo_cross_fields(self, query: str, k: int,
                             boosts: Dict[str, float], tie_breaker: float,
@@ -468,10 +434,11 @@ class MultiMatchEngine:
                             minimum_should_match,
                             want_total: bool) -> Optional[dict]:
         """Driver-side twin of :meth:`_cross_fields_plan` + top-k
-        (result-identical; per-field rows come from the SHARED kernel
-        ``QueryEngine._turbo_scored_rows`` with the blended idf map)."""
-        import numpy as np
-
+        (result-identical): each field's live bag under the blended idf
+        map (``QueryEngine._turbo_bag``), then :func:`combine_maps`
+        twice — per term across fields with the tie-breaker (each
+        field's part is ``QueryEngine._turbo_accum`` over that one term
+        × boost), then across terms with the matched-term threshold."""
         terms, bdf, blended = self._cross_fields_stats(query, boosts)
         empty = empty_result(query, want_total)
         if not terms:
@@ -481,33 +448,23 @@ class MultiMatchEngine:
         )
         if required is None:
             return empty
-        rows_codes, rows_doc, rows_s = [], [], []
-        uniq_ref = None
+        reads = []
         for fname, boost in boosts.items():
             eng = self.engines[fname]
-            got = eng._turbo_scored_rows(terms, method, idf_map=blended)
+            got = eng._turbo_bag(terms, method, idf_map=blended)
             if got is None:
                 return None
-            uniq, codes, doc, s = got
-            if uniq_ref is None:
-                uniq_ref = uniq  # same live set for every field (blended map)
-            rows_codes.append(codes)
-            rows_doc.append(doc)
-            rows_s.append(s * float(boost))
-        codes = np.concatenate(rows_codes) if rows_codes else np.empty(0, np.int64)
-        if codes.size == 0:
-            return empty
-        doc = np.concatenate(rows_doc)
-        s = np.concatenate(rows_s)
-        # per-(term, doc) dis_max across fields
-        _kcode, kdoc, inv = group_code_doc(codes, doc)
-        tot = np.bincount(inv, weights=s)
-        best = np.full(kdoc.size, -np.inf)
-        np.maximum.at(best, inv, s)
-        ts = best + float(tie_breaker) * (tot - best)
-        docs_u, scores, n_terms, _ = group_docs(kdoc, ts)
-        keep = n_terms >= required
-        docs_u, scores = docs_u[keep], scores[keep]
+            reads.append((eng, float(boost), got[2]))
+        term_maps = []
+        for t, m in live_bag(terms, blended).items():
+            parts = []
+            for eng, boost, slices in reads:
+                acc = eng._turbo_accum({t: m}, blended, slices, method)
+                if acc is not None:
+                    parts.append((acc[0], acc[1] * boost))
+            if parts:
+                term_maps.append(combine_maps(parts, tie_breaker))
+        docs_u, scores = combine_maps(term_maps, required=required)
         return turbo_topk(docs_u, scores, k,
                           int(docs_u.size) if want_total else None, query)
 
@@ -550,8 +507,6 @@ class MultiMatchEngine:
         two-column; at lake scale it is query-independent for fixed
         weights and would be materialized once next to the index (the
         per-field docs tables are bucketed by doc_id already)."""
-        from collections import Counter
-
         boosts = parse_fields(fields, default=self.fields)
         terms, bdf, blended = self._cross_fields_stats(query, boosts)
         if not terms:
@@ -562,53 +517,41 @@ class MultiMatchEngine:
         any_eng = next(iter(self.engines.values()))
         if required is None:
             return any_eng._empty_scored_plan()
-        live = [t for t in terms if blended[t] != 0.0]
-        if not live:
+        bag = live_bag(terms, blended)
+        if not bag:
             return None
-        counts = Counter(live)
-        uniq = sorted(counts)
         w_items: list = []
-        for t in uniq:
-            w_items += [F.lit(t), F.lit(float(blended[t]) * float(counts[t]))]
+        for t, m in bag.items():
+            w_items += [F.lit(t), F.lit(float(blended[t]) * float(m))]
         w_col = F.create_map(*w_items)[F.col("term")]
         tf_parts, len_parts = [], []
         avgdl_c = 0.0
         for fname, boost in boosts.items():
             eng = self.engines[fname]
             tf_parts.append(
-                eng._pruned_postings(uniq)
+                eng._pruned_postings(list(bag))
                 .filter(F.col("doc_len") > 0)
                 .select(
                     "doc_id", "term",
-                    (F.col("tf") * F.lit(float(boost))).alias("wtf"),
+                    (F.col("tf") * F.lit(float(boost))).alias("score"),
                 )
             )
             len_parts.append(
                 eng._docs.select(
                     "doc_id",
-                    (F.col("doc_len") * F.lit(float(boost))).alias("wdl"),
+                    (F.col("doc_len") * F.lit(float(boost))).alias("score"),
                 )
             )
             avgdl_c += float(boost) * float(eng.avg_doc_len)
-        tfu = tf_parts[0]
-        for p in tf_parts[1:]:
-            tfu = tfu.unionByName(p)
-        tfc = tfu.groupBy("doc_id", "term").agg(F.sum("wtf").alias("tfc"))
-        dlu = len_parts[0]
-        for p in len_parts[1:]:
-            dlu = dlu.unionByName(p)
-        dlc = dlu.groupBy("doc_id").agg(F.sum("wdl").alias("dlc"))
-        joined = tfc.join(dlc, "doc_id")
-        sat = impact_col(method, F.col("tfc"), F.col("dlc"), avgdl_c,
+        # merged tf per (doc, term), combined norm per doc: both sums
+        tfc = combine_plan(tf_parts, keys=("doc_id", "term"))
+        dlc = combine_plan(len_parts).withColumnRenamed("score", "dlc")
+        sat = impact_col(method, F.col("score"), F.col("dlc"), avgdl_c,
                          any_eng.k1, any_eng.b)
-        return (
-            joined.select("doc_id", (w_col * sat).alias("score"))
-            .groupBy("doc_id")
-            .agg(F.sum("score").alias("score"),
-                 F.count(F.lit(1)).alias("_nt"))
-            .filter(F.col("_nt") >= F.lit(int(required)))
-            .select("doc_id", "score")
+        scored = tfc.join(dlc, "doc_id").select(
+            "doc_id", (w_col * sat).alias("score")
         )
+        return combine_plan([scored], required=required)
 
     def _turbo_combined_fields(self, query: str, k: int,
                                boosts: Dict[str, float], method: str,
@@ -617,7 +560,10 @@ class MultiMatchEngine:
         """Driver-side twin of :meth:`combined_fields_plan` + top-k
         (result-identical): per-field postings via the shared point
         read, per-field norms via ``QueryEngine._turbo_doc_lens``
-        (candidate docs need EVERY field's length, hit or not)."""
+        (candidate docs need EVERY field's length, hit or not), then
+        :func:`combine_maps` twice — per term across fields to sum the
+        weighted tf, then across terms with the matched-term
+        threshold."""
         import numpy as np
 
         from ..functions.codec import bm25_impact
@@ -629,70 +575,47 @@ class MultiMatchEngine:
         required = match_threshold(
             terms, bdf, blended, operator, minimum_should_match
         )
-        if required is None:
+        bag = live_bag(terms, blended)
+        if required is None or not bag:
             return empty
-        from collections import Counter
-
-        live = [t for t in terms if blended[t] != 0.0]
-        if not live:
-            return empty
-        counts = Counter(live)
-        uniq = sorted(counts)
-        code_parts, doc_parts, wtf_parts = [], [], []
+        reads = []
         avgdl_c = 0.0
-        field_lens = []
         for fname, boost in boosts.items():
             eng = self.engines[fname]
-            eng._fill_df(uniq)
-            # ONE batched point read per field through the hot-term
-            # cache, codes repeated over the per-term slices — the
-            # _turbo_scored_rows recipe
-            got = eng._turbo_slices(uniq)
-            if got is None:
+            eng._fill_df(list(bag))
+            slices = eng._turbo_slices(list(bag))
+            if slices is None:
                 return None
-            slices = list(got.values())
-            code_parts.append(np.repeat(
-                np.arange(len(uniq), dtype=np.int64),
-                [sl.sdoc.size for sl in slices],
-            ))
-            doc_parts.append(np.concatenate([sl.sdoc for sl in slices]))
-            tf = np.concatenate([
-                sl.tf if sl.pos is None else sl.tf[sl.pos]
-                for sl in slices
-            ])
-            wtf_parts.append(tf.astype(np.float64) * float(boost))
             try:
-                field_lens.append((float(boost), eng._turbo_doc_lens()))
+                lens = eng._turbo_doc_lens()
             except Exception:
                 return None
+            reads.append((float(boost), slices, lens))
             avgdl_c += float(boost) * float(eng.avg_doc_len)
-        if not doc_parts or sum(d.size for d in doc_parts) == 0:
-            return empty
-        codes = np.concatenate(code_parts)
-        doc = np.concatenate(doc_parts)
-        wtf = np.concatenate(wtf_parts)
-        kcode, kdoc, inv = group_code_doc(codes, doc)
-        tfc = np.bincount(inv, weights=wtf)
-        # combined norm per (term, doc) key: every field's length counts
-        dlc = np.zeros(kdoc.size, dtype=np.float64)
-        for boost, (ids, lens) in field_lens:
-            pos = np.searchsorted(ids, kdoc)
-            pos_c = np.minimum(pos, max(ids.size - 1, 0))
-            hit = (ids.size > 0) & (ids[pos_c] == kdoc)
-            dlc += boost * np.where(hit, lens[pos_c], 0)
-        warr = np.array(
-            [float(blended[t]) * float(counts[t]) for t in uniq]
-        )
         any_eng = next(iter(self.engines.values()))
-        if method == "bm25":
-            sat = bm25_impact(tfc, dlc, avgdl_c, any_eng.k1, any_eng.b)
-        elif method == "tfidf":
-            sat = tfc / dlc
-        else:
-            raise ValueError(f"unknown scoring method {method!r}")
-        docs_u, scores, n_terms, _ = group_docs(kdoc, warr[kcode] * sat)
-        keep = n_terms >= required
-        docs_u, scores = docs_u[keep], scores[keep]
+        term_maps = []
+        for t, m in bag.items():
+            parts = []
+            for boost, slices, _lens in reads:
+                sl = slices[t]
+                tf = sl.tf if sl.pos is None else sl.tf[sl.pos]
+                parts.append((sl.sdoc, tf.astype(np.float64) * boost))
+            kdoc, tfc = combine_maps(parts)
+            if not kdoc.size:
+                continue
+            # combined norm: every field's length counts, hit or not
+            dlc = np.zeros(kdoc.size, dtype=np.float64)
+            for boost, _slices, (ids, lens) in reads:
+                pos, hit = sorted_lookup(kdoc, ids)
+                dlc[hit] += boost * lens[pos[hit]]
+            if method == "bm25":
+                sat = bm25_impact(tfc, dlc, avgdl_c, any_eng.k1, any_eng.b)
+            elif method == "tfidf":
+                sat = tfc / dlc
+            else:
+                raise ValueError(f"unknown scoring method {method!r}")
+            term_maps.append((kdoc, float(blended[t]) * float(m) * sat))
+        docs_u, scores = combine_maps(term_maps, required=required)
         return turbo_topk(docs_u, scores, k,
                           int(docs_u.size) if want_total else None, query)
 
@@ -725,9 +648,12 @@ class MultiMatchEngine:
                            boosts: Dict[str, float], match_type: str,
                            tie_breaker: float, method: str,
                            want_total: bool) -> Optional[dict]:
-        import numpy as np
-
-        per_field: List[Tuple["np.ndarray", "np.ndarray"]] = []
+        """Driver-side twin of :meth:`multi_match_plan` for
+        best_fields/most_fields: each field's score map
+        (``QueryEngine._turbo_score_map``) × boost, then
+        :func:`combine_maps` — summed, or with the tie-breaker for
+        best_fields."""
+        per_field = []
         for fname, boost in boosts.items():
             eng = self.engines.get(fname)
             if eng is None:
@@ -742,19 +668,11 @@ class MultiMatchEngine:
                 return None
             docs_u, scores = got
             per_field.append((docs_u, scores * float(boost)))
-        docs_all = np.concatenate([d for d, _s in per_field]) if per_field else None
-        if docs_all is None or docs_all.size == 0:
-            return empty_result(query, want_total)
-        scores_all = np.concatenate([s for _d, s in per_field])
-        best_fields = match_type != "most_fields"
-        uniq, tot, _n, best = group_docs(docs_all, scores_all,
-                                         with_max=best_fields)
-        if best_fields:
-            combined = best + float(tie_breaker) * (tot - best)
-        else:
-            combined = tot
-        return turbo_topk(uniq, combined, k,
-                          int(uniq.size) if want_total else None, query)
+        docs_u, scores = combine_maps(
+            per_field, None if match_type == "most_fields" else tie_breaker
+        )
+        return turbo_topk(docs_u, scores, k,
+                          int(docs_u.size) if want_total else None, query)
 
     # ------------------------------------------------------------ results
     def multi_match(self, query: str, k: int = 10, fields: FieldsArg = None,

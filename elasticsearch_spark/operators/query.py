@@ -23,7 +23,6 @@ expressions.
 
 from __future__ import annotations
 
-import json
 import os
 from contextlib import contextmanager
 from functools import cached_property, lru_cache
@@ -90,24 +89,6 @@ class TermSlice:
         return self.rows - old
 
 
-def group_code_doc(codes, doc):
-    """Group rows by ``(code, doc)`` without packing both into one
-    scalar key (``codes * dmax + doc`` wraps int64 for sparse or huge
-    doc ids): one stable lexsort, groups in ascending (code, doc)
-    order.  Returns ``(g_code, g_doc, inv)`` with ``inv`` the group of
-    each input row, so ``np.bincount(inv, weights=…)`` sums each
-    group's rows in input order."""
-    import numpy as np
-
-    order = np.lexsort((doc, codes))
-    c_s, d_s = codes[order], doc[order]
-    new = np.ones(order.size, dtype=bool)
-    new[1:] = (c_s[1:] != c_s[:-1]) | (d_s[1:] != d_s[:-1])
-    inv = np.empty(order.size, dtype=np.int64)
-    inv[order] = np.cumsum(new) - 1
-    return c_s[new], d_s[new], inv
-
-
 def group_docs(doc, vals, with_max: bool = False):
     """Group parallel ``doc``/``vals`` rows by doc id — the ONE turbo
     doc-grouping helper.  Returns ``(docs_u, sums, counts, maxes)``
@@ -137,6 +118,78 @@ def group_docs(doc, vals, with_max: bool = False):
     return d[new], np.bincount(gid, weights=v), np.bincount(gid), maxes
 
 
+def combine_maps(parts, tie_breaker: Optional[float] = None,
+                 required: int = 0):
+    """The ONE turbo combine: per-doc ``(docs_u, scores)`` of the
+    doc-unique, doc-ordered ``(docs, scores)`` parts (per-term rows,
+    per-clause or per-field score maps).  A doc's score is the sum of
+    its parts' scores — one :func:`group_docs` over the parts
+    concatenated in order, so each sum runs in part order — or, with
+    ``tie_breaker``, dis_max's ``best + tie_breaker × (sum − best)``;
+    only docs in at least ``required`` parts are kept.  One part with
+    ``required`` ≤ 1 is returned as it is.  The plan twin is
+    :func:`combine_plan`."""
+    import numpy as np
+
+    if len(parts) == 1 and required <= 1:
+        return parts[0]
+    if not parts:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+    docs_u, tot, n, best = group_docs(
+        np.concatenate([d for d, _s in parts]),
+        np.concatenate([s for _d, s in parts]),
+        with_max=tie_breaker is not None,
+    )
+    if tie_breaker is not None:
+        tot = best + float(tie_breaker) * (tot - best)
+    if required > 1:
+        keep = n >= required
+        docs_u, tot = docs_u[keep], tot[keep]
+    return docs_u, tot
+
+
+def combine_plan(parts: Sequence[DataFrame],
+                 tie_breaker: Optional[float] = None, required: int = 0,
+                 keys: Sequence[str] = ("doc_id",)) -> DataFrame:
+    """The ONE plan-tier combine, twin of :func:`combine_maps`: the
+    ``(*keys, score)`` parts unioned into one ``groupBy(*keys)`` whose
+    aggregate carries the sum, the max only with ``tie_breaker`` and
+    the part count only when ``required`` > 1 (parts are unique per
+    key, so ``count(*)`` counts the parts a key appears in; every
+    grouped key is in at least one)."""
+    cols = [*keys, "score"]
+    u = parts[0].select(*cols)
+    for p in parts[1:]:
+        u = u.unionByName(p.select(*cols))
+    aggs = [F.sum("score").alias("tot")]
+    if tie_breaker is not None:
+        aggs.append(F.max("score").alias("best"))
+    if required > 1:
+        aggs.append(F.count(F.lit(1)).alias("_n"))
+    g = u.groupBy(*keys).agg(*aggs)
+    if required > 1:
+        g = g.filter(F.col("_n") >= F.lit(int(required)))
+    score = F.col("tot")
+    if tie_breaker is not None:
+        score = F.col("best") + F.lit(float(tie_breaker)) * (
+            F.col("tot") - F.col("best")
+        )
+    return g.select(*keys, score.alias("score"))
+
+
+def live_bag(terms: Sequence[str], idf: Dict[str, float]) -> Dict[str, int]:
+    """The live term bag of analyzed ``terms``: term -> multiplicity
+    over the terms whose idf is not 0 (unindexed and df == N terms score
+    nothing, reference semantics), in sorted term order — the one order
+    every scorer sums a query's terms in.  A repeated term counts once
+    per occurrence, like the reference's TAAT loop."""
+    bag: Dict[str, int] = {}
+    for t in sorted(terms):
+        if idf.get(t, 0.0) != 0.0:
+            bag[t] = bag.get(t, 0) + 1
+    return bag
+
+
 def doc_union(parts):
     """Ascending union of doc-id arrays that are each ascending and
     unique (slices, grouped score maps): a single part is returned as
@@ -150,15 +203,22 @@ def doc_union(parts):
     return np.unique(np.concatenate(parts))
 
 
-def sorted_member(a, b):
-    """Mask of the entries of ``a`` present in the ascending array
-    ``b`` — one ``searchsorted``, no sort."""
+def sorted_lookup(a, b):
+    """``(pos, hit)`` for the entries of ``a`` in the ascending array
+    ``b`` — one ``searchsorted``, no sort: ``hit`` masks the entries
+    present, and ``b[pos[hit]] == a[hit]``."""
     import numpy as np
 
     if not b.size:
-        return np.zeros(a.size, dtype=bool)
+        return np.zeros(a.size, dtype=np.int64), np.zeros(a.size, dtype=bool)
     pos = np.minimum(np.searchsorted(b, a), b.size - 1)
-    return b[pos] == a
+    return pos, b[pos] == a
+
+
+def sorted_member(a, b):
+    """Mask of the entries of ``a`` present in the ascending array
+    ``b`` (:func:`sorted_lookup`'s mask)."""
+    return sorted_lookup(a, b)[1]
 
 
 @lru_cache(maxsize=4096)
@@ -339,8 +399,7 @@ class QueryEngine:
       jobs; a warm read is ~0.05-0.1 ms p50 on a 1,200-doc index (4
       vCPUs), against the ~150 ms/job scheduling floor of the plan.
       The same head-term/size cutover a production engine uses for its
-      document-routing cache; disable with ``turbo=False`` or
-      ``SPARK_GRAFT_TURBO=0``.
+      document-routing cache; disable with ``turbo=False``.
     """
 
     # turbo cutover: max Σ df (candidate postings) served driver-side
@@ -349,7 +408,7 @@ class QueryEngine:
     def __init__(self, spark: SparkSession, index_dir: str, turbo: bool = True):
         self.spark = spark
         self.index_dir = index_dir
-        self.turbo = turbo and os.environ.get("SPARK_GRAFT_TURBO", "1") != "0"
+        self.turbo = turbo
         # stat'ed on every read (_refresh_if_stale)
         self._manifest_path = os.path.join(index_dir, "manifest.json")
         self._load()
@@ -665,10 +724,8 @@ class QueryEngine:
 
     def _turbo_bag(self, terms: List[str], method: Optional[str],
                    idf_map: Optional[Dict[str, float]] = None):
-        """The live term bag of analyzed ``terms``: ``(mult, idf,
-        slices)`` with ``mult`` = live term -> multiplicity in sorted
-        term order (duplicates = per-occurrence multiplicity, like the
-        reference's TAAT loop) and ``slices`` = their cached slices with
+        """``(bag, idf, slices)`` for analyzed ``terms``: their
+        :func:`live_bag` and the bag terms' cached slices with
         ``method``'s impacts.  ``idf_map`` overrides the live per-index
         idf (cross_fields passes BLENDED statistics) — liveness
         (idf != 0) is judged against whichever map applies.  None when
@@ -678,77 +735,56 @@ class QueryEngine:
         if not self.turbo:
             return None
         idf = self.term_idf(terms) if idf_map is None else idf_map
-        mult: Dict[str, int] = {}
-        for t in sorted(terms):
-            if idf.get(t, 0.0) != 0.0:
-                mult[t] = mult.get(t, 0) + 1
-        if not mult:
-            return mult, idf, {}
+        bag = live_bag(terms, idf)
+        if not bag:
+            return bag, idf, {}
         if idf_map is not None:
             # blended-idf callers: the budget check needs THIS index's
             # live df — populate the cache (cheap driver point lookup)
-            self._fill_df(list(mult))
-        slices = self._turbo_slices(list(mult), method)
+            self._fill_df(list(bag))
+        slices = self._turbo_slices(list(bag), method)
         if slices is None:
             return None
-        return mult, idf, slices
+        return bag, idf, slices
 
-    def _turbo_scored_rows(self, terms: List[str], method: str,
-                           idf_map: Optional[Dict[str, float]] = None):
-        """Per-(term, doc) scored posting rows over the cached slices —
-        the twin of :meth:`_scored_postings_rows` for the callers that
-        count matched terms per doc (match operator/msm,
-        match_bool_prefix) or group by (term, doc) (cross_fields).
-
-        Returns None when :meth:`_turbo_bag` declines.  Otherwise
-        ``(uniq_terms, codes, doc, s)`` posting rows (one per (term,
-        doc), doc_len>0 filtered) where ``s = idf × multiplicity ×
-        impact``; all arrays empty when no term is live or nothing
-        matches."""
-        import numpy as np
-
-        got = self._turbo_bag(terms, method, idf_map)
-        if got is None:
+    def _turbo_clauses(self, clauses: Sequence[Sequence[str]],
+                       method: str, members: Sequence[Sequence[str]] = ()):
+        """The read of the multi-clause turbo readers (batch, dis_max,
+        bool): ``(bags, idf, slices)`` with the :func:`live_bag` of each
+        scoring clause's analyzed terms and ONE :meth:`_turbo_slices`
+        call over their union plus the live-df terms of the
+        filter-context ``members`` clauses (membership, not idf).  None
+        when the turbo tier declines."""
+        if not self.turbo:
             return None
-        mult, idf, slices = got
-        uniq = list(mult)
-        lens = [slices[t].sdoc.size for t in uniq]
-        if not sum(lens):
-            return (uniq, np.empty(0, dtype=np.int64),
-                    np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
-        codes = np.repeat(np.arange(len(uniq), dtype=np.int64), lens)
-        doc = np.concatenate([slices[t].sdoc for t in uniq])
-        s = np.concatenate([
-            (idf[t] * float(m)) * slices[t].impact[method]
-            for t, m in mult.items()
-        ])
-        return uniq, codes, doc, s
+        idf = self.term_idf(sorted({t for c in (*clauses, *members) for t in c}))
+        bags = [live_bag(c, idf) for c in clauses]
+        read = {t for bag in bags for t in bag}
+        read.update(
+            t for c in members for t in c if self._df_cache.get(t, 0) > 0
+        )
+        slices = self._turbo_slices(sorted(read), method) if read else {}
+        return None if slices is None else (bags, idf, slices)
 
     @staticmethod
-    def _turbo_accum(counts, idf_map: Dict[str, float],
-                     slices: Dict[str, "TermSlice"], method: str):
-        """The turbo scoring kernel: per-doc ``(docs_u, scores)`` of one
-        weighted term bag (``counts``: term -> multiplicity) over cached
-        slices, Σ idf × multiplicity × impact summed in ``counts``
-        order — ranked, multi_match per-field maps, batch, dis_max and
-        bool clauses all score here.  None when no live term has
-        postings (a dead clause).  One live term is its slice as it is
-        (doc-unique, doc-ordered): no grouping."""
-        import numpy as np
-
-        segs_d, segs_s = [], []
-        for t, mult in counts.items():
-            w = idf_map.get(t, 0.0)
-            sl = slices.get(t)
-            if w == 0.0 or sl is None or not sl.doc.size:
-                continue
-            segs_d.append(sl.sdoc)
-            segs_s.append((w * float(mult)) * sl.impact[method])
-        if not segs_d:
-            return None
-        if len(segs_d) == 1:
-            return segs_d[0], segs_s[0]
-        return group_docs(np.concatenate(segs_d), np.concatenate(segs_s))[:2]
+    def _turbo_accum(bag: Dict[str, int], idf: Dict[str, float],
+                     slices: Dict[str, "TermSlice"], method: str,
+                     required: int = 0, extra: Sequence = ()):
+        """The turbo scoring kernel: per-doc ``(docs_u, scores)`` of a
+        live bag over its cached slices — one part per term, idf ×
+        multiplicity × impact, then :func:`combine_maps` with
+        ``required`` (match operator/msm) over those parts and the
+        ``extra`` ones (match_bool_prefix's prefix clause).  Ranked,
+        match, bool_prefix, multi_match per-field maps, cross_fields,
+        batch, dis_max and bool clauses all score here.  None when
+        nothing has postings (a dead clause)."""
+        parts = [
+            (sl.sdoc, (idf[t] * float(m)) * sl.impact[method])
+            for t, m in bag.items()
+            if (sl := slices[t]).doc.size
+        ]
+        parts += extra
+        return combine_maps(parts, required=required) if parts else None
 
     def _turbo_score_map(self, query: str, method: str = "bm25",
                          terms: Optional[List[str]] = None,
@@ -801,10 +837,12 @@ class QueryEngine:
         if filter_docs is not None:
             allow = np.asarray(sorted({int(d) for d in filter_docs}),
                                dtype=np.int64)
-            keep = np.isin(docs_u, allow)
+            keep = sorted_member(docs_u, allow)
             docs_u, scores = docs_u[keep], scores[keep]
         if exclude_docs:
-            keep = ~np.isin(docs_u, np.asarray(sorted(exclude_docs), dtype=np.int64))
+            keep = ~sorted_member(
+                docs_u, np.asarray(sorted(exclude_docs), dtype=np.int64)
+            )
             docs_u, scores = docs_u[keep], scores[keep]
         total = int(docs_u.size)
         if search_after is not None:
@@ -819,33 +857,26 @@ class QueryEngine:
     # -------------------------------------------------------------- ranked
     def _scored_postings_rows(self, terms: List[str],
                               method: str) -> Optional[DataFrame]:
-        """Per-(term, doc) scored posting rows ``(doc_id, score)`` — the
-        ONE plan-side source of the BM25/TF-IDF scoring expression (the
-        distributed twin of :meth:`_turbo_scored_rows`): score = idf ×
-        multiplicity × impact per row, doc_len>0 filtered.  None when
-        no analyzed term is live (missing or idf==0, reference
-        semantics).  Rows are unique per (term, doc), so a downstream
-        ``count(*)`` in the scoring groupBy IS the matched-distinct-term
-        count."""
+        """Per-(term, doc) scored posting rows ``(doc_id, score)`` of the
+        :func:`live_bag` of ``terms`` — the ONE plan-side source of the
+        BM25/TF-IDF scoring expression (the distributed twin of
+        :meth:`_turbo_accum`'s parts): score = idf × multiplicity ×
+        impact per row, doc_len>0 filtered.  None when no analyzed term
+        is live (missing or idf==0, reference semantics).  Rows are
+        unique per (term, doc), the parts :func:`combine_plan` counts."""
         idf_map = self.term_idf(terms)
-        live = [t for t in terms if idf_map.get(t, 0.0) != 0.0]
-        if not live:
+        bag = live_bag(terms, idf_map)
+        if not bag:
             return None
         idf_items: list = []
-        for t in sorted(set(live)):
-            idf_items += [F.lit(t), F.lit(float(idf_map[t]))]
-        idf_col = F.create_map(*idf_items)[F.col("term")]
-
-        # duplicated query terms accumulate once per occurrence, exactly
-        # like the reference's per-term TAAT loop
-        from collections import Counter
-
         mult_items: list = []
-        for t, c in Counter(live).items():
-            mult_items += [F.lit(t), F.lit(float(c))]
+        for t, m in bag.items():
+            idf_items += [F.lit(t), F.lit(float(idf_map[t]))]
+            mult_items += [F.lit(t), F.lit(float(m))]
+        idf_col = F.create_map(*idf_items)[F.col("term")]
         mult_col = F.create_map(*mult_items)[F.col("term")]
 
-        p = self._pruned_postings(sorted(set(live)))
+        p = self._pruned_postings(list(bag))
         score = idf_col * impact_col(
             method, F.col("tf"), F.col("doc_len"), self.avg_doc_len,
             self.k1, self.b,
@@ -862,9 +893,7 @@ class QueryEngine:
         if terms is None:
             terms = self._terms(query)
         rows = self._scored_postings_rows(terms, method)
-        if rows is None:
-            return None
-        return rows.groupBy("doc_id").agg(F.sum("score").alias("score"))
+        return None if rows is None else combine_plan([rows])
 
     def ranked(self, query: str, k: int = 10, method: str = "bm25",
                with_total_hits: bool = True,
@@ -1097,18 +1126,13 @@ class QueryEngine:
         rows = self._scored_postings_rows(terms, method)
         if rows is None:
             return None
-        return (
-            rows.groupBy("doc_id")
-            .agg(F.sum("score").alias("score"),
-                 F.count(F.lit(1)).alias("_nt"))
-            .filter(F.col("_nt") >= F.lit(int(required)))
-            .select("doc_id", "score")
-        )
+        return combine_plan([rows], required=required)
 
     def _turbo_match(self, query: str, k: int, method: str, operator: str,
                      minimum_should_match, want_total: bool) -> Optional[dict]:
         """Driver-side twin of :meth:`match_scored_plan` + top-k
-        (result-identical; shares :meth:`_turbo_scored_rows`)."""
+        (result-identical; :meth:`_turbo_accum` with the
+        matched-term threshold)."""
         if not self.turbo:
             return None
         terms = self._terms(query)
@@ -1119,15 +1143,13 @@ class QueryEngine:
                                    minimum_should_match)
         if required is None:
             return empty_result(query, want_total)
-        got = self._turbo_scored_rows(terms, method)
+        got = self._turbo_bag(terms, method)
         if got is None:
             return None
-        _uniq, _codes, doc, s = got
-        if doc.size == 0:
+        acc = self._turbo_accum(*got, method, required)
+        if acc is None:
             return empty_result(query, want_total)
-        docs_u, scores, n_terms, _ = group_docs(doc, s)
-        keep = n_terms >= required
-        docs_u, scores = docs_u[keep], scores[keep]
+        docs_u, scores = acc
         return turbo_topk(docs_u, scores, k,
                           int(docs_u.size) if want_total else None, query)
 
@@ -1210,25 +1232,16 @@ class QueryEngine:
             )
         if not parts:
             return None
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        return (
-            u.groupBy("doc_id")
-            .agg(F.sum("score").alias("score"),
-                 F.count(F.lit(1)).alias("_nt"))
-            .filter(F.col("_nt") >= F.lit(int(required)))
-            .select("doc_id", "score")
-        )
+        return combine_plan(parts, required=required)
 
     def _turbo_match_bool_prefix(self, query: str, k: int,
                                  max_expansions: int, method: str,
                                  operator: str, minimum_should_match,
                                  want_total: bool) -> Optional[dict]:
         """Driver-side twin of :meth:`match_bool_prefix_scored_plan` +
-        top-k (result-identical; full-term clauses share
-        :meth:`_turbo_scored_rows`, the prefix clause is a pruned
-        point read)."""
+        top-k (result-identical): :meth:`_turbo_accum` over the
+        full-term bag with the prefix clause as one more part, score
+        1.0, read from the union of the expansions' slices."""
         if not self.turbo:
             return None
         import numpy as np
@@ -1239,15 +1252,10 @@ class QueryEngine:
         if clauses is None or clauses[2] is None:
             return empty_result(query, want_total)
         full, exp, required = clauses
-        if full:
-            got = self._turbo_scored_rows(full, method)
-            if got is None:
-                return None  # over budget: the distributed plan serves
-            _uniq, _codes, doc, s = got
-        else:
-            doc = np.empty(0, dtype=np.int64)
-            s = np.empty(0, dtype=np.float64)
-        pdocs = np.empty(0, dtype=np.int64)
+        got = self._turbo_bag(full, method)
+        if got is None:
+            return None  # over budget: the distributed plan serves
+        prefix = []
         if exp:
             uniq_exp = sorted(set(exp))
             self._fill_df(uniq_exp)
@@ -1255,13 +1263,11 @@ class QueryEngine:
             if slices is None:
                 return None
             pdocs = doc_union([sl.sdoc for sl in slices.values()])
-        all_doc = np.concatenate([doc, pdocs])
-        if all_doc.size == 0:
+            prefix.append((pdocs, np.ones(pdocs.size, dtype=np.float64)))
+        acc = self._turbo_accum(*got, method, required, prefix)
+        if acc is None:
             return empty_result(query, want_total)
-        all_s = np.concatenate([s, np.ones(pdocs.size, dtype=np.float64)])
-        docs_u, scores, n_clauses, _ = group_docs(all_doc, all_s)
-        keep = n_clauses >= required
-        docs_u, scores = docs_u[keep], scores[keep]
+        docs_u, scores = acc
         return turbo_topk(docs_u, scores, k,
                           int(docs_u.size) if want_total else None, query)
 
@@ -1809,23 +1815,13 @@ class QueryEngine:
         the hot-term cache, then per-query weighted accumulation in
         numpy (:meth:`_turbo_accum`).
         Declines (None) above the cutover on Σ df over all live terms."""
-        if not self.turbo:
+        got = self._turbo_clauses([self._terms(q) for q in queries], method)
+        if got is None:
             return None
-        import numpy as np
-        from collections import Counter
-
-        per_query = {q: Counter(self._terms(q)) for q in queries}
-        all_terms = sorted({t for c in per_query.values() for t in c})
-        idf_map = self.term_idf(all_terms)
-        live = sorted(t for t in all_terms if idf_map.get(t, 0.0) != 0.0)
+        bags, idf, slices = got
         out: Dict[str, list] = {q: [] for q in queries}
-        if not live:
-            return out
-        slices = self._turbo_slices(live, method)
-        if slices is None:
-            return None
-        for q in queries:
-            acc = self._turbo_accum(per_query[q], idf_map, slices, method)
+        for q, bag in zip(queries, bags):
+            acc = self._turbo_accum(bag, idf, slices, method)
             if acc is not None:
                 out[q] = turbo_topk(*acc, k, None)["results"]
         return out
@@ -1849,18 +1845,15 @@ class QueryEngine:
         res = self._turbo_batch(queries, k, method)
         if res is not None:
             return res
-        from collections import Counter
-
-        per_query_terms = {q: Counter(self._terms(q)) for q in queries}
-        all_terms = sorted({t for c in per_query_terms.values() for t in c})
-        idf_map = self.term_idf(all_terms)
-
-        weight_rows = []
-        for qid, q in enumerate(queries):
-            for t, mult in per_query_terms[q].items():
-                idf_v = idf_map.get(t, 0.0)
-                if idf_v != 0.0:
-                    weight_rows.append((qid, t, float(idf_v), float(mult)))
+        per_query_terms = [self._terms(q) for q in queries]
+        idf_map = self.term_idf(
+            sorted({t for terms in per_query_terms for t in terms})
+        )
+        weight_rows = [
+            (qid, t, float(idf_map[t]), float(mult))
+            for qid, terms in enumerate(per_query_terms)
+            for t, mult in live_bag(terms, idf_map).items()
+        ]
         out: Dict[str, list] = {q: [] for q in queries}
         if not weight_rows:
             return out
@@ -2054,54 +2047,24 @@ class QueryEngine:
         live = [p for p in plans if p is not None]
         if not live:
             return None
-        u = live[0].select("doc_id", "score")
-        for p in live[1:]:
-            u = u.unionByName(p.select("doc_id", "score"))
-        return (
-            u.groupBy("doc_id")
-            .agg(F.max("score").alias("best"), F.sum("score").alias("tot"))
-            .select(
-                "doc_id",
-                (
-                    F.col("best")
-                    + F.lit(float(tie_breaker)) * (F.col("tot") - F.col("best"))
-                ).alias("score"),
-            )
-        )
+        return combine_plan(live, tie_breaker)
 
     def _turbo_dis_max(self, queries: Sequence[str], k: int,
                        tie_breaker: float, method: str,
                        want_total: bool) -> Optional[dict]:
-        """Driver-side dis_max twin: one pruned point read over the
-        union of subquery terms, per-subquery numpy accumulation, then
-        per-doc max/sum combine.  Result-identical to the plan path
-        (same formula, float64)."""
-        if not self.turbo:
+        """Driver-side dis_max twin: one read over the union of
+        subquery terms (:meth:`_turbo_clauses`), one score map per
+        subquery, then :func:`combine_maps` with the tie-breaker.
+        Result-identical to the plan path (same formula, float64)."""
+        got = self._turbo_clauses([self._terms(q) for q in queries], method)
+        if got is None:
             return None
-        import numpy as np
-        from collections import Counter
-
-        per_query = [Counter(self._terms(q)) for q in queries]
-        all_terms = sorted({t for c in per_query for t in c})
-        idf_map = self.term_idf(all_terms)
-        live = sorted(t for t in all_terms if idf_map.get(t, 0.0) != 0.0)
-        if not live:
-            return empty_result(None, want_total)
-        slices = self._turbo_slices(live, method)
-        if slices is None:
-            return None
-        q_docs, q_scores = [], []
-        for counts in per_query:
-            acc = self._turbo_accum(counts, idf_map, slices, method)
-            if acc is not None:
-                q_docs.append(acc[0])
-                q_scores.append(acc[1])
-        if not q_docs:
-            return empty_result(None, want_total)
-        docs_u, tot, _n, best = group_docs(
-            np.concatenate(q_docs), np.concatenate(q_scores), with_max=True
-        )
-        score = best + float(tie_breaker) * (tot - best)
+        bags, idf, slices = got
+        maps = [
+            acc for bag in bags
+            if (acc := self._turbo_accum(bag, idf, slices, method)) is not None
+        ]
+        docs_u, score = combine_maps(maps, tie_breaker)
         return turbo_topk(docs_u, score, k,
                           int(docs_u.size) if want_total else None)
 
@@ -2268,10 +2231,7 @@ class QueryEngine:
             # no scoring gate: candidate universe is every live doc
             base = self._docs.select("doc_id")
             if parts:  # optional should scores (msm=0)
-                u = parts[0]
-                for p in parts[1:]:
-                    u = u.unionByName(p)
-                sc = u.groupBy("doc_id").agg(F.sum("score").alias("s_sh"))
+                sc = combine_plan(parts).withColumnRenamed("score", "s_sh")
                 base = base.join(sc, "doc_id", "left").select(
                     "doc_id", F.coalesce("s_sh", F.lit(0.0)).alias("score")
                 )
@@ -2291,48 +2251,29 @@ class QueryEngine:
     def _turbo_bool(self, must, should, filter_, must_not, msm: int,
                     k: int, method: str,
                     want_total: bool) -> Optional[dict]:
-        """Driver-side bool twin: ONE pruned point read over the union
-        of every clause's terms, per-clause numpy accumulation, then
-        vectorized (n_must, n_should, membership) gating over the
-        combined doc universe.  Result-identical to the plan path."""
-        if not self.turbo:
-            return None
+        """Driver-side bool twin: ONE read over the union of every
+        clause's terms (:meth:`_turbo_clauses`), one score map per
+        scoring clause, then vectorized (n_must, n_should, membership)
+        gating over the combined doc universe.  Result-identical to the
+        plan path."""
         import numpy as np
-        from collections import Counter
 
-        must_t = [self._terms(q) for q in must]
-        should_t = [self._terms(q) for q in should]
         filt_t = [self._terms(q) for q in filter_]
         not_t = [self._terms(q) for q in must_not]
-        all_terms = sorted(
-            {t for c in must_t + should_t + filt_t + not_t for t in c}
+        got = self._turbo_clauses(
+            [self._terms(q) for q in (*must, *should)], method,
+            members=filt_t + not_t,
         )
-        idf_map = self.term_idf(all_terms)  # also populates _df_cache
-        scoring_live = {
-            t
-            for c in must_t + should_t
-            for t in c
-            if idf_map.get(t, 0.0) != 0.0
-        }
-        member_live = {
-            t for c in filt_t + not_t for t in c
-            if self._df_cache.get(t, 0) > 0
-        }
-        read_terms = sorted(scoring_live | member_live)
-        slices = self._turbo_slices(read_terms, method)
-        if slices is None:
+        if got is None:
             return None
+        bags, idf, slices = got
         universe = None
-        if not must_t and msm == 0:
+        if not must and msm == 0:
             # candidate universe = all live docs (filter-only bool)
             try:
                 universe = self._turbo_doc_lens()[0]
             except Exception:
                 return None
-
-        def accum(terms):
-            """(docs_u, scores) of one scoring clause; None = dead."""
-            return self._turbo_accum(Counter(terms), idf_map, slices, method)
 
         def member(terms):
             """Sorted unique docs containing ANY live term (filter
@@ -2342,13 +2283,12 @@ class QueryEngine:
                 [slices[t].doc for t in set(terms) if t in slices]
             )
 
-        must_acc = []
-        for c in must_t:
-            a = accum(c)
-            if a is None:
-                return empty_result(None, want_total)
-            must_acc.append(a)
-        should_acc = [a for a in (accum(c) for c in should_t) if a is not None]
+        # (docs_u, scores) of each scoring clause; None = dead
+        maps = [self._turbo_accum(bag, idf, slices, method) for bag in bags]
+        must_acc = maps[:len(must)]
+        if any(a is None for a in must_acc):
+            return empty_result(None, want_total)
+        should_acc = [a for a in maps[len(must):] if a is not None]
         if msm > len(should_acc):
             return empty_result(None, want_total)
         if universe is None:
@@ -2364,10 +2304,8 @@ class QueryEngine:
 
         def add(acc, flag):
             du, sc = acc
-            pos = np.searchsorted(du, U)
-            pos_c = np.minimum(pos, du.size - 1)
-            hit = (pos < du.size) & (du[pos_c] == U)
-            score[hit] += sc[pos_c[hit]]
+            pos, hit = sorted_lookup(U, du)
+            score[hit] += sc[pos[hit]]
             flag[hit] += 1
 
         for a in must_acc:

@@ -56,6 +56,7 @@ from pyspark.sql.functions import pandas_udf
 from ..functions.tokenizer import sayt_query_stream, shingle_tokens
 from .build import IndexConfig
 from .multifield import MultiFieldIndexBuilder, MultiMatchEngine
+from .query import combine_plan
 
 SAYT_MANIFEST = "sayt.json"
 
@@ -190,8 +191,8 @@ class SearchAsYouTypeEngine:
              operator: str = "or",
              minimum_should_match=None) -> Optional[DataFrame]:
         """(doc_id, score): per-subfield ``match_bool_prefix`` plans ×
-        boost, combined by ONE groupBy(doc_id) SUM.  None when nothing
-        can match anywhere."""
+        boost, summed by ONE groupBy(doc_id) (:func:`~.query.
+        combine_plan`).  None when nothing can match anywhere."""
         streams = self.streams(query)
         if not streams:
             return None
@@ -213,12 +214,7 @@ class SearchAsYouTypeEngine:
                         (F.col("score") * F.lit(float(boost))).alias("score"),
                     )
                 )
-        if not plans:
-            return None
-        u = plans[0]
-        for p in plans[1:]:
-            u = u.unionByName(p)
-        return u.groupBy("doc_id").agg(F.sum("score").alias("score"))
+        return combine_plan(plans) if plans else None
 
     def search(self, query: str, k: int = 10,
                boosts: Optional[Dict[str, float]] = None,

@@ -30,7 +30,6 @@ UB ≥ θ0 (not >), so boundary ties survive to the exact final sort.
 
 from __future__ import annotations
 
-from collections import Counter
 from typing import Dict
 
 import numpy as np
@@ -43,7 +42,7 @@ from ..functions import codec
 # unused here; kept as a module name because perfbench/spans.py wraps it
 from ..functions.tokenizer import preprocess_query
 from ..functions.udfs import term_bucket
-from .query import QueryEngine
+from .query import QueryEngine, live_bag
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -141,12 +140,13 @@ class WandEngine:
         return self._blocks
 
     def _term_weights(self, query: str) -> Dict[str, float]:
-        """term -> idf × multiplicity from the engine's live idf;
-        0-idf terms dropped, like the reference."""
+        """term -> idf × multiplicity over the :func:`~.query.live_bag`
+        of the engine's live idf (0-idf terms dropped, like the
+        reference)."""
         eng = self.engine
-        counts = Counter(eng._terms(query))
-        idf = eng.term_idf(list(counts))
-        return {t: idf[t] * c for t, c in counts.items() if idf[t] != 0.0}
+        terms = eng._terms(query)
+        idf = eng.term_idf(terms)
+        return {t: idf[t] * m for t, m in live_bag(terms, idf).items()}
 
     # below this many doc-ranges the 3-phase UB dance costs more in job
     # scheduling than it saves in decode work — run the kernel once over

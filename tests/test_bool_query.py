@@ -125,10 +125,23 @@ def test_some_combo_has_hits(turbo):
 
 
 def test_bool_single_must_equals_ranked(turbo):
-    """bool(must=[q]) degenerates to the plain ranked query."""
+    """bool(must=[q]) degenerates to the plain ranked query.  On the
+    turbo tier every one-clause entry point — batch_ranked([q]),
+    dis_max([q]), bool(should=[q]) and bool(must=[q]) — scores q's
+    live term bag in the same (sorted) term order as ranked(q), so its
+    results equal ranked's exactly, scores bit for bit, whatever order
+    the terms are typed in (repeated and idf-0 terms included)."""
     got = turbo.bool_search(must=["zo ta"], k=20)
     want = turbo.ranked("zo ta", k=20)
     _cmp(got, want)
+    for q in ("zo ta", "ta zo sazo sparkhead", "sparkhead zo ta zo sazo",
+              "sazo faducafib ta zo", "nonexistentterm ta zo"):
+        want = turbo.ranked(q, k=1000)["results"]
+        assert want, q
+        assert turbo.batch_ranked([q], k=1000)[q] == want, q
+        assert turbo.dis_max([q], k=1000)["results"] == want, q
+        assert turbo.bool_search(should=[q], k=1000)["results"] == want, q
+        assert turbo.bool_search(must=[q], k=1000)["results"] == want, q
 
 
 def test_bool_should_default_msm_equals_ranked_intersection_free(turbo):

@@ -1,7 +1,8 @@
 """The turbo tier's array kernels — ``turbo_topk`` (threshold top-k),
-``group_docs`` (the one doc-grouping helper) and ``sorted_member`` — as
-pure functions over hand-built arrays (no Spark; the turbo≡plan and
-result-dump tests cover them end to end).  Each is checked against the
+``group_docs`` (the one doc-grouping helper), ``combine_maps`` (the one
+score-map combine), ``live_bag`` and ``sorted_lookup``/``sorted_member``
+— as pure functions over hand-built arrays (no Spark; the turbo≡plan
+and result-dump tests cover them end to end).  Each is checked against the
 formulation it replaced, with ``==`` on result dicts and ``.tobytes()``
 on float sums.  The positional matcher both tiers share
 (``decode_positional_rows`` + ``match_slots``) is checked the same way,
@@ -19,7 +20,10 @@ from elasticsearch_spark.operators.phrase import (
     unordered_starts,
 )
 from elasticsearch_spark.operators.query import (
+    combine_maps,
     group_docs,
+    live_bag,
+    sorted_lookup,
     sorted_member,
     turbo_topk,
 )
@@ -131,6 +135,159 @@ def test_sorted_member():
     assert sorted_member(a, b).tolist() == np.isin(a, b).tolist()
     assert sorted_member(a, b[:0]).tolist() == [False] * a.size
     assert sorted_member(a[:0], b).size == 0
+    pos, hit = sorted_lookup(a, b)
+    assert hit.tolist() == np.isin(a, b).tolist()
+    assert b[pos[hit]].tolist() == a[hit].tolist()
+    pos, hit = sorted_lookup(a, b[:0])
+    assert pos.size == hit.size == a.size and not hit.any()
+
+
+# ------------------------------------------------------ score-map combine
+def _old_combine(parts, tie_breaker=None, required=0):
+    """The per-caller recipe ``combine_maps`` replaced: np.unique +
+    bincount sums in input order, ``np.maximum.at`` for dis_max's best,
+    a matched-part count gate."""
+    doc = np.concatenate([d for d, _s in parts])
+    vals = np.concatenate([s for _d, s in parts])
+    docs_u, inv = np.unique(doc, return_inverse=True)
+    tot = np.bincount(inv, weights=vals)
+    if tie_breaker is not None:
+        best = np.full(docs_u.size, -np.inf)
+        np.maximum.at(best, inv, vals)
+        tot = best + float(tie_breaker) * (tot - best)
+    keep = np.bincount(inv) >= required
+    return docs_u[keep], tot[keep]
+
+
+def _parts(rng, n_parts, base=0):
+    out = []
+    for p in range(n_parts):
+        d = np.sort(base + rng.choice(60, size=rng.integers(1, 40),
+                                      replace=False)).astype(np.int64)
+        out.append((d, rng.random(d.size) * (p + 1) * 3.7))
+    return out
+
+
+@pytest.mark.parametrize("seed", range(8))
+def test_combine_maps_bit_identical_to_old_recipe(seed):
+    rng = np.random.default_rng(seed)
+    parts = _parts(rng, 2 + seed % 4, base=(2**62 if seed % 2 else 0))
+    for tb in (None, 0.0, 0.3, 1.0):
+        for required in (0, 1, 2, 3, 7):
+            got = combine_maps(parts, tb, required)
+            want = _old_combine(parts, tb, required)
+            assert got[0].tolist() == want[0].tolist()
+            assert got[1].tobytes() == want[1].tobytes()
+
+
+def test_combine_maps_one_part_and_empty():
+    d = np.array([3, 8, 2**62], dtype=np.int64)
+    s = np.array([0.5, 2.0, 1.25])
+    for tb in (None, 0.3):
+        for required in (0, 1):
+            got = combine_maps([(d, s)], tb, required)
+            assert got[0] is d and got[1] is s  # returned as it is
+            want = _old_combine([(d, s)], tb, required)
+            assert got[1].tobytes() == want[1].tobytes()
+    assert combine_maps([(d, s)], required=2)[0].size == 0
+    for tb in (None, 0.3):
+        docs_u, scores = combine_maps([], tb, 1)
+        assert docs_u.dtype == np.int64 and scores.dtype == np.float64
+        assert docs_u.size == scores.size == 0
+    empty = (np.empty(0, np.int64), np.empty(0))
+    docs_u, scores = combine_maps([empty, (d, s)])
+    assert docs_u.tolist() == d.tolist() and scores.tobytes() == s.tobytes()
+
+
+def test_combine_maps_two_level_huge_doc_ids():
+    """cross_fields' shape — per term a dis_max across fields, then a
+    sum across terms gated on the matched-term count — for doc ids near
+    2^62, where a packed ``code * dmax + doc`` key wraps int64: equal,
+    bit for bit, to the (term code, doc) lexsort grouping it replaced,
+    and to a pure-Python groupby summing in input order."""
+    import itertools
+
+    rng = np.random.default_rng(7)
+    offsets = np.array([0, 1, 5, 2**40, 2**61 + 3], dtype=np.int64)
+    n_terms, n_fields, tb = 5, 3, 0.35
+    # per (term, field): doc-unique ascending rows
+    per_tf = [
+        [
+            (np.unique(2**62 + rng.choice(offsets, size=rng.integers(0, 6))),)
+            for _f in range(n_fields)
+        ]
+        for _t in range(n_terms)
+    ]
+    per_tf = [
+        [(d, rng.random(d.size)) for (d,) in fields] for fields in per_tf
+    ]
+    for required in (0, 1, 2, 3):
+        term_maps = [
+            combine_maps([p for p in fields if p[0].size], tb)
+            for fields in per_tf
+            if any(p[0].size for p in fields)
+        ]
+        got = combine_maps(term_maps, required=required)
+
+        # the replaced recipe: rows field-major, grouped by (code, doc)
+        codes = np.concatenate([
+            np.full(d.size, t, dtype=np.int64)
+            for f in range(n_fields)
+            for t, fields in enumerate(per_tf)
+            for d in (fields[f][0],)
+        ])
+        doc = np.concatenate(
+            [per_tf[t][f][0] for f in range(n_fields) for t in range(n_terms)]
+        )
+        s = np.concatenate(
+            [per_tf[t][f][1] for f in range(n_fields) for t in range(n_terms)]
+        )
+        order = np.lexsort((doc, codes))
+        c_s, d_s = codes[order], doc[order]
+        new = np.ones(order.size, dtype=bool)
+        new[1:] = (c_s[1:] != c_s[:-1]) | (d_s[1:] != d_s[:-1])
+        inv = np.empty(order.size, dtype=np.int64)
+        inv[order] = np.cumsum(new) - 1
+        kdoc = d_s[new]
+        tot = np.bincount(inv, weights=s)
+        best = np.full(kdoc.size, -np.inf)
+        np.maximum.at(best, inv, s)
+        ts = best + tb * (tot - best)
+        docs_u, scores, n, _ = group_docs(kdoc, ts)
+        keep = n >= required
+        assert got[0].tolist() == docs_u[keep].tolist()
+        assert got[1].tobytes() == scores[keep].tobytes()
+
+        # pure Python: per (term, doc) dis_max over fields in field
+        # order, then per doc the sum over terms in term order
+        rows = [
+            (t, int(dd), float(v))
+            for f in range(n_fields)
+            for t in range(n_terms)
+            for dd, v in zip(*per_tf[t][f])
+        ]
+        keyed = sorted(rows, key=lambda r: (r[0], r[1]))  # stable
+        per_key = []
+        for (t, dd), grp in itertools.groupby(keyed, key=lambda r: r[:2]):
+            vals = [r[2] for r in grp]
+            b = max(vals)
+            per_key.append((dd, b + tb * (sum(vals, 0.0) - b)))
+        want = {}
+        for dd, v in per_key:
+            want.setdefault(dd, []).append(v)
+        want = sorted(
+            (dd, sum(vs, 0.0)) for dd, vs in want.items()
+            if len(vs) >= required
+        )
+        assert list(zip(got[0].tolist(), got[1].tolist())) == want
+        assert all(dd >= 2**62 for dd, _v in want)
+
+
+def test_live_bag():
+    idf = {"a": 1.5, "b": 0.0, "c": 0.2, "d": 3.0}
+    bag = live_bag(["d", "a", "b", "zz", "a", "c", "d", "a"], idf)
+    assert list(bag.items()) == [("a", 3), ("c", 1), ("d", 2)]
+    assert live_bag([], idf) == {} and live_bag(["b", "zz"], idf) == {}
 
 
 # ------------------------------------------------- positional matcher
